@@ -265,3 +265,22 @@ def test_readd_after_delete_contract_all_families(spark, sf_smoke):
         assert rows(resurrected).filter(F.col("vec_id") == 2).count() == 1, name
         back = search(resurrected).collect()
         assert any(r["neighbor_id"] == 2 for r in back), name
+
+
+def test_save_with_vectors_refuses_partial_or_duplicate_emb(spark, sf_smoke, tmp_path):
+    """save(path, emb) needs exactly one vector per stored id, on every
+    family: after add(b) the original corpus a lacks b's ids, and a
+    duplicated id in emb would duplicate stored rows. Both raise
+    ValueError naming the counts, before anything is written."""
+    emb, a, fams = _families(spark, sf_smoke)
+    b = emb.filter(F.col("vec_id") % 2 == 1)
+    n_b = b.count()
+    dup = a.unionByName(a.filter(F.col("vec_id") == 0))
+    for name, idx, _, _ in fams:
+        path = tmp_path / name
+        with pytest.raises(ValueError, match=f"{n_b} stored ids missing from emb"):
+            idx.add(b).save(str(path), a)
+        with pytest.raises(ValueError, match="1 stored ids duplicated in emb"):
+            idx.save(str(path), dup)
+        assert not path.exists(), name
+        idx.unpersist()

@@ -218,13 +218,6 @@ def resize_image(blobs: DataFrame, id_col: str = "img_id", payload_col: str = "p
 # Broadcast-weights model inference (the ResNet-shaped path, numpy-only)
 # ---------------------------------------------------------------------------
 
-# per-worker model cache, keyed by broadcast id: the numpy analog of
-# loading a torch state_dict once per executor process — NOT once per
-# batch and never once per row. mapInPandas kernels are re-invoked per
-# task; this cache makes repeated tasks on the same worker reuse the
-# already-materialized weights.
-_MODEL_CACHE: dict[int, np.ndarray] = {}
-
 EMBED_DIM = 8
 
 
@@ -246,17 +239,6 @@ def make_projection_weights(
             z = (z ^ (z >> 30)) * 0x94D049BB133111EB % (1 << 64)
             out[i, j] = ((z ^ (z >> 31)) % 16) - 8
     return out
-
-
-def _load_model(bc) -> np.ndarray:
-    """Lazy per-executor init: materialize the broadcast weights once
-    per worker process and cache by broadcast id."""
-    key = getattr(bc, "id", None) or id(bc)
-    w = _MODEL_CACHE.get(key)
-    if w is None:
-        w = np.ascontiguousarray(np.asarray(bc.value, dtype=np.int64))
-        _MODEL_CACHE[key] = w
-    return w
 
 
 def embed_with_model(
@@ -293,10 +275,10 @@ def embed_with_model(
     bc = spark.sparkContext.broadcast(weights)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        W = None  # resolved on the executor, not the driver
+        # read once per task: Broadcast.value already materializes the
+        # weights once per worker process and caches them there
+        W = np.asarray(bc.value, dtype=np.int64)
         for pdf in batches:
-            if W is None:
-                W = _load_model(bc)
             hs = np.array(
                 [_payload_hash(p) for p in pdf[payload_col]], dtype=np.int64
             )

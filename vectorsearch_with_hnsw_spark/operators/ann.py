@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_distance, dot, to_vec
-from .knn import topk_per_group
+from .knn import _exact_rerank, topk_per_group
 
 _M64 = (1 << 64) - 1
 
@@ -588,8 +588,6 @@ def binary_refine_knn(
     expand=40 default on the gaussian testdata (0.62 at 10x; 1 bit/dim
     of 64 random dims is a coarse sketch — real embeddings with
     anisotropic energy refine far better at smaller expands)."""
-    from ..functions.vector import cosine_distance
-
     shortlist = binary_sign_knn(
         emb,
         queries,
@@ -600,23 +598,9 @@ def binary_refine_knn(
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
     ).select("query_id", "neighbor_id")
-    base = emb.select(F.col(id_col).alias("neighbor_id"), to_vec(vec_col).alias("_v"))
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), to_vec(query_vec_col).alias("_q")
-        )
-    )
-    rescored = (
-        shortlist.join(base, "neighbor_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_distance(F.col("_v"), F.col("_q")).alias("dist"),
-        )
-    )
-    return topk_per_group(rescored, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", F.col("rnk").cast("int").alias("rnk")
+    return _exact_rerank(
+        shortlist, emb, queries, k, id_col, vec_col, "cosine",
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
     )
 
 

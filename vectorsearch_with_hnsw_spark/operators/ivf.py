@@ -18,9 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_distance, to_vec
-from .knn import topk_per_group
 from ..cache import persist_tracked, release
+from ..functions.vector import cosine_distance, to_vec
+from .artifact import QuantizedIndex
+from .knn import topk_per_group
 
 
 def label_centroids(emb: DataFrame, dim: int) -> DataFrame:
@@ -585,14 +586,33 @@ def ivf_knn_cosine(
     )
 
 
-class IvfIndex:
+class IvfIndex(QuantizedIndex):
     """Persisted IVF artifact: trained centroids + cell assignments as
-    parquet tables — the third index artifact next to HnswIndex and
-    PqIndex (all mirroring the reference's save/load contract,
-    hsnw_trial.py:310-376). Training (Lloyd rounds) is the expensive
-    step; a loaded index probes with zero retraining, and the
-    assignments table can be written bucketed by cell so a probe scans
-    only n_probe/n_cells of the data at rest."""
+    parquet tables (``centroids/`` (cell, centroid, dim, tombs) and
+    ``assigned/`` (vec_id[, v]) PARTITIONED BY CELL) — the index
+    artifact next to HnswIndex and PqIndex (all mirroring the
+    reference's save/load contract, hsnw_trial.py:310-376). Training
+    (Lloyd rounds) is the expensive step; a loaded index probes with
+    zero retraining, and a probe reads only n_probe/n_cells of the
+    assignment files (tests/test_plans.py pins the static partition
+    filter on the scan). The lifecycle is the shared
+    :class:`~.artifact.QuantizedIndex` one; ``add`` routes new vectors
+    to the FROZEN centroids through the build's ``assign_frozen``
+    kernel.
+
+    ``save(path, emb)`` stores the raw vectors NEXT TO the routing
+    (``v`` inside each cell partition): a probe of the loaded index
+    then runs with ZERO joins — the pruned-cell files carry
+    everything, and the corpus table is never scanned at probe time.
+    That is the right at-rest layout at 100 TB (the routing-only form
+    must re-join the corpus on vec_id per probe batch); the
+    routing-only form remains for callers who co-locate vectors
+    elsewhere."""
+
+    ROWS = "assigned"
+    CODE = ()
+    META = "centroids"
+    PARTITION = ("cell",)
 
     def __init__(
         self,
@@ -601,10 +621,8 @@ class IvfIndex:
         dim: int,
         tombstones: DataFrame | None = None,
     ):
+        super().__init__(assigned, dim, tombstones)  # assigned: (vec_id, cell)
         self.centroids = centroids  # (cell, centroid)
-        self.assigned = assigned    # (vec_id, cell)
-        self.dim = dim
-        self.tombstones = tombstones
 
     @classmethod
     def build(
@@ -619,106 +637,12 @@ class IvfIndex:
         _, cents, assign = _kmeans_impl(emb, dim, n_cells, iters, id_col, vec_col)
         return cls(cents, assign(cents).select("vec_id", "cell"), dim)
 
-    def add(
-        self,
-        emb: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> "IvfIndex":
-        """Incremental insert: assign the new vectors to the FROZEN
-        trained centroids (the same ``assign_frozen`` kernel the build
-        uses, so added rows route bit-identically to a build over the
-        same vectors with this trained state) and union the assignment
-        — the reference's insert (hsnw_trial.py:197-265) on the
-        at-rest routing table; no retrain, existing rows untouched.
-        Ids must be fresh (re-adding a tombstoned id does not clear
-        its tombstone — ``compact`` first). A vector-bearing index
-        (loaded from a ``save(path, emb)`` layout) carries the new
-        batch's vectors into the union so the zero-join probe contract
-        survives incremental insert."""
-        pts = emb.select(F.col(id_col).alias("vec_id"), to_vec(vec_col).alias("v"))
-        fresh = assign_frozen(pts, self.centroids).select("vec_id", "cell")
-        if "v" in self.assigned.columns:
-            fresh = fresh.join(pts, "vec_id").select("vec_id", "v", "cell")
-        return IvfIndex(
-            self.centroids, self.assigned.unionByName(fresh), self.dim,
-            tombstones=self.tombstones,
-        )
-
-    def delete(self, ids_df: DataFrame) -> "IvfIndex":
-        """Tombstone the given ids (delete-log semantics: the
-        assignment stays at rest, probes skip the log —
-        hsnw_trial.py:296-305)."""
-        from .knn import merge_tombstones
-
-        return IvfIndex(
-            self.centroids, self.assigned, self.dim,
-            tombstones=merge_tombstones(self.tombstones, ids_df),
-        )
-
-    def compact(self) -> "IvfIndex":
-        """Physically drop tombstoned assignment rows and clear the log
-        — the reference's rebuild compaction (hsnw_trial.py:381-389)
-        without retraining (centroids are frozen, so compaction is a
-        pure filter: searches are bit-identical before and after)."""
-        from .knn import live_rows
-
-        return IvfIndex(
-            self.centroids, live_rows(self.assigned, self.tombstones), self.dim
-        )
-
-    def save(self, path: str, emb: DataFrame | None = None) -> None:
-        """Assignment is written PARTITIONED BY CELL (the same at-rest
-        layout as ``IvfPqIndex.save``), so a probe of a loaded index is
-        a partition-pruned read touching only n_probe/n_cells of the
-        files (tests/test_plans.py pins the static partition filter on
-        the scan).
-
-        Pass ``emb`` to store the raw vectors NEXT TO the routing
-        (``v`` column inside each cell partition): a probe of the
-        loaded index then runs with ZERO joins — the pruned-cell files
-        carry everything, and the corpus table is never scanned at
-        probe time. That is the right at-rest layout at 100 TB (the
-        routing-only form must re-join the corpus on vec_id, which
-        scans the full vector table per probe batch); the routing-only
-        form remains for callers who co-locate vectors elsewhere."""
-        self.centroids.withColumn("dim", F.lit(self.dim)).withColumn(
-            "tombs", F.lit(self.tombstones is not None)
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
-        if emb is not None:
-            pts = emb.select("vec_id", to_vec("embedding").alias("v"))
-            assigned = (
-                self.assigned.select("vec_id", "cell")
-                .join(pts, "vec_id")
-                .select("vec_id", "v", "cell")
-            )
-        elif "v" in self.assigned.columns:
-            # re-save of a vector-bearing index (e.g. after add):
-            # keep the zero-join layout
-            assigned = self.assigned.select("vec_id", "v", "cell")
-        else:
-            assigned = self.assigned.select("vec_id", "cell")
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/assigned"
-        )
-        if self.tombstones is not None:
-            self.tombstones.write.mode("overwrite").parquet(f"{path}/tombstones")
+    def _encode(self, pts: DataFrame) -> DataFrame:
+        return assign_frozen(pts, self.centroids).select("vec_id", "cell")
 
     @classmethod
-    def load(cls, spark, path: str) -> "IvfIndex":
-        cents_raw = spark.read.parquet(f"{path}/centroids")
-        meta = cents_raw.first()
-        tombs = (
-            spark.read.parquet(f"{path}/tombstones")
-            if "tombs" in cents_raw.columns and meta["tombs"]
-            else None
-        )
-        return cls(
-            cents_raw.select("cell", "centroid"),
-            spark.read.parquet(f"{path}/assigned"),
-            int(meta["dim"]),
-            tombstones=tombs,
-        )
+    def _restore(cls, parts, meta, tombs):
+        return cls(parts["centroids"], parts["assigned"], int(meta["dim"]), tombstones=tombs)
 
     def search(
         self,
@@ -757,26 +681,18 @@ class IvfIndex:
         partitions x queries x k partial-top-k rows reach the final
         window.
 
-        ``predicate`` / ``allowed_ids``: ``filtered_knn``'s pre-filter
-        contract over the stored (vec_id, cell) assignment — applied
-        before the probe, so a filtered probe of the at-rest index
-        touches only permitted rows (see ``IvfPqIndex.search``).
-        Exact-k whenever the permitted rows inside the probed cells
-        have >= k members. Tombstoned ids are skipped first (the
-        reference's deleted-check, hsnw_trial.py:178-179)."""
-        from .knn import live_rows, prefilter_rows
-
-        assigned = prefilter_rows(
-            live_rows(self.assigned, self.tombstones), "vec_id", predicate, allowed_ids
-        )
+        ``predicate`` / ``allowed_ids``: the pre-filter contract,
+        applied after the tombstone skip and before the probe (see
+        ``QuantizedIndex._live``). Exact-k whenever the permitted rows
+        inside the probed cells have >= k members."""
         pts = (
             emb.select("vec_id", to_vec("embedding").alias("v"))
             if emb is not None
             else None
         )
         return _kernel_probe(
-            pts, assigned, queries_df, self.centroids, k, n_probe,
-            metric="l2", probe_metric="l2sq",
+            pts, self._live(predicate, allowed_ids), queries_df, self.centroids,
+            k, n_probe, metric="l2", probe_metric="l2sq",
         )
 
 

@@ -44,6 +44,50 @@ def topk_per_group(
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
 
 
+def _exact_rerank(
+    shortlist: DataFrame,
+    emb: DataFrame | None,
+    queries: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    metric: str = "l2",
+    base: DataFrame | None = None,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> DataFrame:
+    """Exact re-rank of a (query_id, neighbor_id) shortlist against the
+    full vectors — the one refine tail of every sketch family (the
+    one-shot ``*_refine_knn`` operators and the index artifacts'
+    ``refine_search``), so a loaded index's deployed probe matches its
+    one-shot operator bit-for-bit and one tie-break/metric rule serves
+    every path. ``base`` overrides the vector source with a pre-shaped
+    (neighbor_id, _v array<double>) relation — the vector-bearing index
+    layouts (``save(path, emb)``) pass their own stored vectors so the
+    corpus table is never scanned at probe time."""
+    dist_fn = metric_expr(metric)
+    if base is None:
+        if emb is None:
+            raise ValueError(
+                "refine needs raw vectors: pass emb, or save the index "
+                "with store-vectors (save(path, emb))"
+            )
+        base = emb.select(F.col(id_col).alias("neighbor_id"), to_vec(vec_col).alias("_v"))
+    q = F.broadcast(
+        queries.select(
+            F.col(query_id_col).alias("query_id"), to_vec(query_vec_col).alias("_q")
+        )
+    )
+    rescored = (
+        shortlist.join(base, "neighbor_id")
+        .join(q, "query_id")
+        .select("query_id", "neighbor_id", dist_fn(F.col("_v"), F.col("_q")).alias("dist"))
+    )
+    return topk_per_group(rescored, ["query_id"], ["dist", "neighbor_id"], k).select(
+        "query_id", "neighbor_id", "dist", F.col("rnk").cast("int").alias("rnk")
+    )
+
+
 def knn_exact(
     index_df: DataFrame,
     queries_df: DataFrame,

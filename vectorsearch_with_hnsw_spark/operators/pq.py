@@ -35,8 +35,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import to_vec
 from ..cache import persist_tracked
+from ..functions.vector import to_vec
+from .artifact import QuantizedIndex
+from .knn import _exact_rerank, topk_per_group
 
 NUM_ANCHORS = 256  # codebook size per subspace (64 -> 256: ADC recall@10 0.31 -> 0.52 at m=16 on testdata)
 
@@ -169,10 +171,29 @@ def pq_adc_knn(
     subspaces of the query's precomputed distance to the candidate's
     assigned sub-centroid. Ties broken by neighbor id."""
     cb = pq_codebooks(emb, dim, m)
-    d = dim // m
     bcodes = pq_encode(emb, cb, dim, m, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"), "code"
     )
+    return _adc_score(bcodes, cb, queries, dim, m, k, query_id_col, query_vec_col)
+
+
+def _adc_score(
+    codes: DataFrame,
+    cb: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    m: int,
+    k: int,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> DataFrame:
+    """ADC top-k over an existing (neighbor_id, code) relation — the
+    probe half of PQ, shared by the one-shot ``pq_adc_knn`` and the
+    persisted ``PqIndex.search`` so a loaded index answers
+    bit-identically to the inline operator. Each query's LUT holds its
+    sub-vector distances to every sub-centroid; a candidate's distance
+    is the subspace-ascending sum of its ``m`` LUT entries."""
+    d = dim // m
     qv = to_vec(query_vec_col)
     lut = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -195,16 +216,11 @@ def pq_adc_knn(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    pairs = bcodes.crossJoin(F.broadcast(qlut)).select(
+    pairs = codes.crossJoin(F.broadcast(qlut)).select(
         "query_id", "neighbor_id", adc.alias("adc_d2")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "neighbor_id", "adc_d2")
+    return topk_per_group(pairs, ["query_id"], ["adc_d2", "neighbor_id"], k).select(
+        "query_id", "rnk", "neighbor_id", "adc_d2"
     )
 
 
@@ -229,9 +245,6 @@ def pq_refine_knn(
     expand*k rows per query — at 100 TB the big corpus is touched once
     through its compressed codes; the raw-vector reads are a per-query
     constant."""
-    from ..functions.vector import l2_distance
-    from .knn import topk_per_group
-
     shortlist = pq_adc_knn(
         emb,
         queries,
@@ -243,23 +256,9 @@ def pq_refine_knn(
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
     ).select("query_id", "neighbor_id")
-    base = emb.select(F.col(id_col).alias("neighbor_id"), to_vec(vec_col).alias("_v"))
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), to_vec(query_vec_col).alias("_q")
-        )
-    )
-    rescored = (
-        shortlist.join(base, "neighbor_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_distance(F.col("_v"), F.col("_q")).alias("dist"),
-        )
-    )
-    return topk_per_group(rescored, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", F.col("rnk").cast("int").alias("rnk")
+    return _exact_rerank(
+        shortlist, emb, queries, k, id_col, vec_col,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
     )
 
 
@@ -370,20 +369,13 @@ def _ivf_pq_build(
     ONE pass over the corpus with nothing cached: the one-shot contract
     (zero CacheManager entries on return) no longer trades a second
     full-corpus assign pass for cleanliness."""
-    from .ivf import _d2_matrix, _kmeans_impl
+    from .ivf import _collect_cents, _d2_matrix, _kmeans_impl
 
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d = dim // m
     pts, cents, _ = _kmeans_impl(emb, dim, n_cells, iters, id_col, vec_col)
-    # trained centroids are already a bounded driver artifact
-    crows = cents.orderBy("cell").collect()
-    cells_np = np.array([r["cell"] for r in crows], dtype=np.int32)
-    C = (
-        np.array([r["centroid"] for r in crows], dtype=np.float64)
-        if crows
-        else np.zeros((0, dim), dtype=np.float64)
-    )
+    cells_np, C = _collect_cents(cents)  # a bounded driver artifact
     # codebook anchors: residuals of the n_anchors lowest-id vectors —
     # a TakeOrderedAndProject collect bounded by n_anchors, never a
     # corpus pass
@@ -422,7 +414,7 @@ def _ivf_pq_assign_encode(
     the ``pq_encode`` kernel verbatim. Map-only: no join, no shuffle,
     no cache — the 100 TB encode pass reads the corpus exactly once."""
     spark = pts.sparkSession
-    bc = spark.sparkContext.broadcast((cells_np, C, cb_np))
+    bc = spark.sparkContext.broadcast((np.asarray(cells_np, dtype=np.int32), C, cb_np))
     from .ivf import _d2_matrix
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -448,6 +440,48 @@ def _ivf_pq_assign_encode(
     from ..sources.tables import spread
 
     return spread(pts).mapInPandas(kern, "vec_id long, code array<long>, cell int")
+
+
+def _probe_residuals(queries: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """(query_id, cell, qr): each query's ``n_probe`` nearest cells by
+    the ``_l2sq`` fold, ties to the lower cell, with the query's
+    residual ``q - centroid`` against each."""
+    from .ivf import _l2sq
+
+    qcells = queries.crossJoin(F.broadcast(cents)).select(
+        F.col("query_id"),
+        F.col("query_vec"),
+        "cell",
+        "centroid",
+        _l2sq(to_vec("query_vec"), F.col("centroid")).alias("d2"),
+    )
+    wq = Window.partitionBy("query_id").orderBy("d2", "cell")
+    return (
+        qcells.withColumn("_rn", F.row_number().over(wq))
+        .filter(F.col("_rn") <= n_probe)
+        .select(
+            "query_id",
+            "cell",
+            F.zip_with(to_vec("query_vec"), "centroid", lambda x, y: x - y).alias("qr"),
+        )
+    )
+
+
+def _lut_adc(qr: np.ndarray, codes: np.ndarray, cb: np.ndarray, m: int, d: int) -> np.ndarray:
+    """(len(qr), len(codes)) residual-ADC sums, bit-identical to the
+    HOF form: LUT[s][c] accumulates the (qr - cb)^2 sub-fold one
+    dimension at a time in ascending order (the exact ``_sub_d2``
+    fold), and each candidate's sum adds its LUT entries in
+    subspace-ascending order (the exact aggregate fold)."""
+    lut = np.zeros((len(qr), m, cb.shape[1]), dtype=np.float64)
+    for s in range(m):
+        for d0 in range(d):
+            diff = qr[:, s * d + d0][:, None] - cb[s][None, :, d0]
+            lut[:, s, :] += diff * diff
+    adc = np.zeros((len(qr), len(codes)), dtype=np.float64)
+    for s in range(m):
+        adc += lut[:, s, :][:, codes[:, s]]
+    return adc
 
 
 def _ivf_pq_score(
@@ -490,34 +524,14 @@ def _ivf_pq_score(
     emits nothing for unprobed cells), so a codes table written
     partitioned by cell is read partition-pruned: a probe touches
     n_probe/n_cells of the data at rest."""
-    from .ivf import _l2sq
-
-    qcells = queries.crossJoin(F.broadcast(cents)).select(
-        F.col("query_id"),
-        F.col("query_vec"),
-        "cell",
-        "centroid",
-        _l2sq(to_vec("query_vec"), F.col("centroid")).alias("d2"),
-    )
-    wq = Window.partitionBy("query_id").orderBy("d2", "cell")
-    probes = (
-        qcells.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= n_probe)
-        .select(
-            "query_id",
-            "cell",
-            F.zip_with(to_vec("query_vec"), "centroid", lambda x, y: x - y).alias("qr"),
-        )
-    )
     d = dim // m
-    probe_rows = probes.select("query_id", "cell", "qr").collect()
+    probe_rows = _probe_residuals(queries, cents, n_probe).collect()
     if len(probe_rows) == 0 or cb_np.ndim != 3:
         # empty queries or an empty corpus (no anchors -> no codebook):
         # totality contract — empty in, empty out
         return queries.sparkSession.createDataFrame(
             [], "query_id long, rnk int, neighbor_id long, adc_d2 double"
         )
-    n_codewords = cb_np.shape[1]
     p_qids = np.array([r["query_id"] for r in probe_rows], dtype=np.int64)
     p_cells = np.array([r["cell"] for r in probe_rows], dtype=np.int64)
     QR = np.array([r["qr"] for r in probe_rows], dtype=np.float64)
@@ -543,20 +557,10 @@ def _ivf_pq_score(
                 qr_c = qr_v[pm]  # (Pc, dim) residuals, not LUTs
                 qid_c = qids_v[pm]
                 # LUT built here, in lut_chunk probe slices: temp is
-                # O(lut_chunk * m * C) whatever the query batch size,
-                # and the (qr - cb)^2 sub-fold keeps the exact
-                # d0-ascending accumulation order of the driver build
-                # it replaces (bit-identical ADC sums)
+                # O(lut_chunk * m * C) whatever the query batch size
                 for c0 in range(0, len(qr_c), lut_chunk):
                     c1 = min(c0 + lut_chunk, len(qr_c))
-                    sub_lut = np.zeros((c1 - c0, m, n_codewords), dtype=np.float64)
-                    for s in range(m):
-                        for d0 in range(d):
-                            diff = qr_c[c0:c1, s * d + d0][:, None] - cb[s][None, :, d0]
-                            sub_lut[:, s, :] += diff * diff
-                    adc = np.zeros((c1 - c0, len(sub_codes)), dtype=np.float64)
-                    for s in range(m):
-                        adc += sub_lut[:, s, :][:, sub_codes[:, s]]
+                    adc = _lut_adc(qr_c[c0:c1], sub_codes, cb, m, d)
                     parts.append(
                         pd.DataFrame(
                             {
@@ -577,13 +581,8 @@ def _ivf_pq_score(
         .filter(F.col("cell").isin(probed_cells))
         .mapInPandas(adc_score, "query_id long, neighbor_id long, adc_d2 double")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "neighbor_id", "adc_d2")
+    return topk_per_group(pairs, ["query_id"], ["adc_d2", "neighbor_id"], k).select(
+        "query_id", "rnk", "neighbor_id", "adc_d2"
     )
 
 
@@ -615,31 +614,12 @@ def _ivf_pq_score_distributed(
     side is semi-joined against the probed cells first (an
     auto-broadcast join on <= n_cells keys), so unprobed cells never
     shuffle."""
-    from .ivf import _l2sq
-
     if cb_np.ndim != 3:
         return queries.sparkSession.createDataFrame(
             [], "query_id long, rnk int, neighbor_id long, adc_d2 double"
         )
-    n_codewords = cb_np.shape[1]
     d = dim // m
-    qcells = queries.crossJoin(F.broadcast(cents)).select(
-        F.col("query_id"),
-        F.col("query_vec"),
-        "cell",
-        "centroid",
-        _l2sq(to_vec("query_vec"), F.col("centroid")).alias("d2"),
-    )
-    wq = Window.partitionBy("query_id").orderBy("d2", "cell")
-    probes = (
-        qcells.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= n_probe)
-        .select(
-            "query_id",
-            "cell",
-            F.zip_with(to_vec("query_vec"), "centroid", lambda x, y: x - y).alias("qr"),
-        )
-    )
+    probes = _probe_residuals(queries, cents, n_probe)
     pruned = codes.select("vec_id", "cell", "code").join(
         F.broadcast(probes.select("cell").distinct()), "cell", "semi"
     )
@@ -660,14 +640,7 @@ def _ivf_pq_score_distributed(
         parts = []
         for c0 in range(0, len(qids), lut_chunk):
             c1 = min(c0 + lut_chunk, len(qids))
-            sub_lut = np.zeros((c1 - c0, m, n_codewords), dtype=np.float64)
-            for s in range(m):
-                for d0 in range(d):
-                    diff = QR[c0:c1, s * d + d0][:, None] - cb_np[s][None, :, d0]
-                    sub_lut[:, s, :] += diff * diff
-            adc = np.zeros((c1 - c0, len(vids)), dtype=np.float64)
-            for s in range(m):
-                adc += sub_lut[:, s, :][:, cmat[:, s]]
+            adc = _lut_adc(QR[c0:c1], cmat, cb_np, m, d)
             # per-cell per-probe partial: every candidate at or below
             # the k-th smallest ADC (ties INCLUDED — quantized codes
             # collide, so equal ADC sums are common, and dropping one
@@ -694,13 +667,8 @@ def _ivf_pq_score_distributed(
         .cogroup(probes.groupBy("cell"))
         .applyInPandas(cell_kernel, "query_id long, neighbor_id long, adc_d2 double")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "neighbor_id", "adc_d2")
+    return topk_per_group(pairs, ["query_id"], ["adc_d2", "neighbor_id"], k).select(
+        "query_id", "rnk", "neighbor_id", "adc_d2"
     )
 
 
@@ -755,9 +723,6 @@ def ivf_pq_refine_knn(
     settings). The 100 TB cost model keeps both wins:
     cell pruning skips (n_cells - n_probe)/n_cells of the codes, and
     full-precision reads stay a per-query constant."""
-    from ..functions.vector import l2_distance
-    from .knn import topk_per_group
-
     shortlist = ivf_pq_knn(
         emb,
         queries,
@@ -770,100 +735,20 @@ def ivf_pq_refine_knn(
         id_col=id_col,
         vec_col=vec_col,
     ).select("query_id", "neighbor_id")
-    base = emb.select(F.col(id_col).alias("neighbor_id"), to_vec(vec_col).alias("_v"))
-    q = F.broadcast(
-        queries.select(F.col("query_id"), to_vec("query_vec").alias("_q"))
-    )
-    rescored = (
-        shortlist.join(base, "neighbor_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_distance(F.col("_v"), F.col("_q")).alias("dist"),
-        )
-    )
-    return topk_per_group(rescored, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", F.col("rnk").cast("int").alias("rnk")
-    )
+    return _exact_rerank(shortlist, emb, queries, k, id_col, vec_col)
 
 
-def _exact_rerank(
-    shortlist: DataFrame,
-    emb: DataFrame | None,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    metric: str = "l2",
-    base: DataFrame | None = None,
-) -> DataFrame:
-    """Exact re-rank of a (query_id, neighbor_id) shortlist against the
-    full vectors — the shared refine tail (the exact expressions of
-    ``pq_refine_knn`` / ``ivf_pq_refine_knn`` / ``sq8_refine_knn``),
-    used by the index artifacts' ``refine_search`` so a loaded index's
-    deployed probe matches the one-shot refine operators bit-for-bit.
-    ``base`` overrides the vector source with a pre-shaped
-    (neighbor_id, _v array<double>) relation — the vector-bearing index
-    layouts (``save(path, emb)``) pass their own code-side vectors so
-    the corpus table is never scanned at probe time."""
-    from ..functions.vector import cosine_distance, l2_distance
-    from .knn import topk_per_group
-
-    if metric not in ("cosine", "l2"):
-        raise ValueError(f"unsupported metric {metric!r}; expected cosine or l2")
-    dist_fn = cosine_distance if metric == "cosine" else l2_distance
-    if base is None:
-        if emb is None:
-            raise ValueError(
-                "refine needs raw vectors: pass emb, or save the index "
-                "with store-vectors (save(path, emb))"
-            )
-        base = emb.select(F.col(id_col).alias("neighbor_id"), to_vec(vec_col).alias("_v"))
-    q = F.broadcast(
-        queries.select(F.col("query_id"), to_vec("query_vec").alias("_q"))
-    )
-    rescored = (
-        shortlist.join(base, "neighbor_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dist_fn(F.col("_v"), F.col("_q")).alias("dist"),
-        )
-    )
-    return topk_per_group(rescored, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", F.col("rnk").cast("int").alias("rnk")
-    )
-
-
-def _code_vector_base(codes: DataFrame) -> DataFrame | None:
-    """(neighbor_id, _v) from a vector-bearing codes relation (the
-    ``save(path, emb)`` layout wrote ``v`` next to the codes), or None
-    for routing-only codes — the ``base`` argument of
-    :func:`_exact_rerank`."""
-    if "v" in codes.columns:
-        return codes.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("v").alias("_v")
-        )
-    return None
-
-
-class PqIndex:
+class PqIndex(QuantizedIndex):
     """Persisted PQ artifact: codes table + codebook row, the quantized
     analog of HnswIndex's parquet layout (and of the reference's
     save/load contract, hsnw_trial.py:310-376 — its .npy/JSON artifacts
-    become two parquet tables). Probing a loaded index skips the encode
-    pass entirely: queries only need the codebook to build their LUTs,
-    so a 100 TB corpus is searchable from its ~1/32-size code table.
-
-    Lifecycle (the reference's insert / tombstone-delete / rebuild,
-    hsnw_trial.py:197-265, 296-305, 381-389, on the at-rest layout):
-    ``add`` encodes new vectors with the FROZEN codebook (train once,
-    add many — no retrain, no touch of existing codes), ``delete``
-    tombstones ids (codes stay at rest; probes skip the log), and
-    ``compact`` physically drops tombstoned codes. All three return a
-    new handle; tables are immutable."""
+    become two parquet tables: ``codes/`` (vec_id, code[, v]) and
+    ``codebooks/`` (cb, dim, m, tombs)). Probing a loaded index skips
+    the encode pass entirely: queries only need the codebook to build
+    their LUTs, so a 100 TB corpus is searchable from its ~1/32-size
+    code table. The lifecycle (add / delete / compact / save / load)
+    is the shared :class:`~.artifact.QuantizedIndex` one; ``add``
+    encodes with the FROZEN codebook."""
 
     def __init__(
         self,
@@ -873,11 +758,9 @@ class PqIndex:
         m: int,
         tombstones: DataFrame | None = None,
     ):
-        self.codes = codes
+        super().__init__(codes, dim, tombstones)
         self.codebooks = codebooks
-        self.dim = dim
         self.m = m
-        self.tombstones = tombstones
 
     @classmethod
     def build(
@@ -892,95 +775,13 @@ class PqIndex:
         codes = pq_encode(emb, cb, dim, m, id_col, vec_col)
         return cls(codes, cb, dim, m)
 
-    def add(
-        self,
-        emb: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> "PqIndex":
-        """Incremental insert: encode the new vectors with the FROZEN
-        codebook and union the codes — the reference's insert
-        (hsnw_trial.py:197-265) under FAISS ``add`` semantics (train
-        once, add many). Existing codes are untouched; at 100 TB the
-        new batch is the only data scanned. Ids must be fresh —
-        re-adding a tombstoned id does NOT clear its tombstone
-        (``compact`` first to resurrect an id). A vector-bearing index
-        carries the new batch's vectors into the union so the
-        corpus-free refine contract survives incremental insert."""
-        fresh = pq_encode(emb, self.codebooks, self.dim, self.m, id_col, vec_col)
-        if "v" in self.codes.columns:
-            pts = emb.select(
-                F.col(id_col).alias("vec_id"), to_vec(vec_col).alias("v")
-            )
-            fresh = fresh.join(pts, "vec_id")
-        return PqIndex(
-            self.codes.unionByName(fresh), self.codebooks, self.dim, self.m,
-            tombstones=self.tombstones,
-        )
-
-    def delete(self, ids_df: DataFrame) -> "PqIndex":
-        """Tombstone the given ids (delete-log semantics: codes stay at
-        rest, probes skip the log — hsnw_trial.py:296-305)."""
-        from .knn import merge_tombstones
-
-        return PqIndex(
-            self.codes, self.codebooks, self.dim, self.m,
-            tombstones=merge_tombstones(self.tombstones, ids_df),
-        )
-
-    def compact(self) -> "PqIndex":
-        """Physically drop tombstoned codes and clear the log — the
-        reference's rebuild compaction (hsnw_trial.py:381-389) without
-        retraining (the codebook is data-independent once frozen, so
-        compaction is a pure filter: searches are bit-identical before
-        and after)."""
-        from .knn import live_rows
-
-        return PqIndex(
-            live_rows(self.codes, self.tombstones), self.codebooks,
-            self.dim, self.m,
-        )
-
-    def save(self, path: str, emb: DataFrame | None = None) -> None:
-        """Pass ``emb`` (vec_id, embedding) to store the raw vectors
-        NEXT TO the codes (``v`` column in the codes files):
-        refine_search of the loaded index then runs with ``emb=None``
-        and never scans the corpus table (the IvfIndex.save(path, emb)
-        layout applied to the refine family). Columnar at rest, so the
-        ADC scan still reads only (vec_id, code); ``v`` is touched only
-        by the expand*k re-rank join."""
-        if emb is not None:
-            pts = emb.select("vec_id", to_vec("embedding").alias("v"))
-            codes = (
-                self.codes.select("vec_id", "code")
-                .join(pts, "vec_id")
-                .select("vec_id", "code", "v")
-            )
-        elif "v" in self.codes.columns:
-            codes = self.codes.select("vec_id", "code", "v")
-        else:
-            codes = self.codes.select("vec_id", "code")
-        codes.write.mode("overwrite").parquet(f"{path}/codes")
-        self.codebooks.withColumn("dim", F.lit(self.dim)).withColumn(
-            "m", F.lit(self.m)
-        ).withColumn(
-            "tombs", F.lit(self.tombstones is not None)
-        ).write.mode("overwrite").parquet(f"{path}/codebooks")
-        if self.tombstones is not None:
-            self.tombstones.write.mode("overwrite").parquet(f"{path}/tombstones")
+    def _encode(self, pts: DataFrame) -> DataFrame:
+        return pq_encode(pts, self.codebooks, self.dim, self.m, vec_col="v")
 
     @classmethod
-    def load(cls, spark, path: str) -> "PqIndex":
-        codes = spark.read.parquet(f"{path}/codes")
-        cb_raw = spark.read.parquet(f"{path}/codebooks")
-        meta = cb_raw.first()
-        tombs = (
-            spark.read.parquet(f"{path}/tombstones")
-            if "tombs" in cb_raw.columns and meta["tombs"]
-            else None
-        )
+    def _restore(cls, parts, meta, tombs):
         return cls(
-            codes, cb_raw.select("cb"), int(meta["dim"]), int(meta["m"]),
+            parts["codes"], parts["codebooks"], int(meta["dim"]), int(meta["m"]),
             tombstones=tombs,
         )
 
@@ -991,53 +792,14 @@ class PqIndex:
         predicate=None,
         allowed_ids: DataFrame | None = None,
     ) -> DataFrame:
-        """ADC top-k over the stored codes (no encode pass).
-        ``predicate`` / ``allowed_ids``: ``filtered_knn``'s pre-filter
-        contract over the codes relation — applied before ADC, so a
-        filtered probe decodes only the permitted codes (see
-        ``IvfPqIndex.search``). Tombstoned ids are skipped first (the
-        reference's deleted-check, hsnw_trial.py:178-179)."""
-        from .knn import live_rows, prefilter_rows
-
-        codes = prefilter_rows(
-            live_rows(self.codes, self.tombstones), "vec_id", predicate, allowed_ids
-        )
-        d = self.dim // self.m
-        qv = to_vec("query_vec")
-        lut = F.transform(
-            F.sequence(F.lit(0), F.lit(self.m - 1)),
-            lambda s: F.transform(
-                F.element_at(F.col("cb"), (s + F.lit(1)).cast("int")),
-                lambda cs: _sub_d2(F.slice(qv, s * F.lit(d) + F.lit(1), F.lit(d)), cs),
-            ),
-        )
-        qlut = queries.crossJoin(F.broadcast(self.codebooks)).select(
-            F.col("query_id"), lut.alias("lut")
-        )
-        adc = F.aggregate(
-            F.transform(
-                F.col("code"),
-                lambda c, s: F.element_at(
-                    F.element_at(F.col("lut"), (s + F.lit(1)).cast("int")),
-                    (c + F.lit(1)).cast("int"),
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        pairs = codes.select(
+        """ADC top-k over the stored codes (no encode pass), sharing
+        ``_adc_score`` with ``pq_adc_knn``. ``predicate`` /
+        ``allowed_ids``: the pre-filter contract, applied after the
+        tombstone skip and before ADC (see ``QuantizedIndex._live``)."""
+        codes = self._live(predicate, allowed_ids).select(
             F.col("vec_id").alias("neighbor_id"), "code"
-        ).crossJoin(F.broadcast(qlut)).select(
-            "query_id", "neighbor_id", adc.alias("adc_d2")
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-        )
-        return (
-            pairs.withColumn("rnk", F.row_number().over(w).cast("int"))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "rnk", "neighbor_id", "adc_d2")
-        )
+        return _adc_score(codes, self.codebooks, queries, self.dim, self.m, k)
 
     def refine_search(
         self,
@@ -1062,30 +824,35 @@ class PqIndex:
         stage, so the rescore touches only permitted rows."""
         shortlist = self.search(
             queries, k=expand * k, predicate=predicate, allowed_ids=allowed_ids
-        ).select("query_id", "neighbor_id")
-        return _exact_rerank(
-            shortlist, emb, queries, k, id_col, vec_col,
-            base=_code_vector_base(self.codes),
         )
+        return self._rerank(shortlist, emb, queries, k, id_col, vec_col)
 
 
-class IvfPqIndex:
+class IvfPqIndex(QuantizedIndex):
     """Persisted IVF-PQ artifact — the compressed-at-rest layout the
     ivf_pq_knn docstring promises, materialized: codes are written
-    PARTITIONED BY CELL, so a probe of a loaded index is a
-    partition-pruned read touching n_probe/n_cells of the data
-    (tests/test_plans.py pins PartitionFilters on the scan). Centroids
-    and codebooks are tiny sidecar tables; searching a loaded index
-    skips training AND encoding entirely — queries only need the
-    centroid table (routing) and the codebook (LUTs).
+    PARTITIONED BY CELL (``codes/cell=*/``), so a probe of a loaded
+    index is a partition-pruned read touching n_probe/n_cells of the
+    data (tests/test_plans.py pins PartitionFilters on the scan).
+    Centroids (``centroids/``) and codebooks (``codebooks/``) are tiny
+    sidecar tables; searching a loaded index skips training AND
+    encoding entirely — queries only need the centroid table (routing)
+    and the codebook (LUTs).
 
     Search shares ``_ivf_pq_score`` with the one-shot operator, so a
     loaded index answers BIT-IDENTICALLY to ``ivf_pq_knn`` at equal
-    build parameters (pinned by tests/test_retrieval.py). This extends
-    the reference's save/load contract (hsnw_trial.py:310-376, raw
-    .npy float32) to the quantized family its design cannot reach: at
-    100 TB the artifact is ~1/32 the corpus plus two broadcastable
-    sidecars."""
+    build parameters (pinned by tests/test_retrieval.py). The
+    lifecycle is the shared :class:`~.artifact.QuantizedIndex` one;
+    ``add`` coarse-assigns + residual-encodes with the FROZEN centroids
+    and codebook through the build's fused kernel
+    (``_ivf_pq_assign_encode``, FAISS ``IndexIVFPQ.add`` semantics).
+    This extends the reference's save/load contract
+    (hsnw_trial.py:310-376, raw .npy float32) to the quantized family
+    its design cannot reach: at 100 TB the artifact is ~1/32 the corpus
+    plus two broadcastable sidecars."""
+
+    SIDECARS = {"cents": "centroids"}
+    PARTITION = ("cell",)
 
     def __init__(
         self,
@@ -1098,28 +865,11 @@ class IvfPqIndex:
         cached: list | None = None,
         tombstones: DataFrame | None = None,
     ):
-        self.codes = codes
+        super().__init__(codes, dim, tombstones, cached)
         self.cents = cents
         self.codebooks = cb
         self.cb_np = cb_np
-        self.dim = dim
         self.m = m
-        self.tombstones = tombstones
-        # persisted build intermediates (the codes relation): kept
-        # alive so repeated search()/save() calls on a freshly-built
-        # index don't re-run the fused assign+encode kernel; the owner
-        # releases them via unpersist() (or cache.release_caches())
-        self._cached = list(cached or [])
-
-    def unpersist(self) -> None:
-        """Release the build-time caches this index pinned. The index
-        stays usable — searches recompute the codes from lineage;
-        a saved-then-loaded index holds no caches at all."""
-        from ..cache import release
-
-        for df in self._cached:
-            release(df)
-        self._cached = []
 
     @classmethod
     def build(
@@ -1136,124 +886,25 @@ class IvfPqIndex:
         codes, cents, cb, cb_np, _ = _ivf_pq_build(
             emb, dim, m, n_cells, iters, n_anchors, id_col, vec_col
         )
-        # pin the CODES relation (not just the assignment, as before the
-        # fused build): repeated searches then skip the whole
+        # pin the CODES relation: repeated searches then skip the whole
         # assign+encode pass — (vec_id, code, cell) is ~m+12 bytes/row
         # regardless of dim, the standard at-rest IVF-PQ footprint
         codes = persist_tracked(codes)
         return cls(codes, cents, cb, cb_np, dim, m, cached=[codes])
 
-    def add(
-        self,
-        emb: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> "IvfPqIndex":
-        """Incremental insert: coarse-assign + residual-encode the new
-        vectors with the FROZEN trained state (centroids + codebook —
-        FAISS ``IndexIVFPQ.add`` semantics) and union the codes. The
-        encode is the same fused one-pass kernel the build uses
-        (``_ivf_pq_assign_encode``), so added codes are bit-identical
-        to what a build over the same rows with this trained state
-        would produce; existing codes are untouched — at 100 TB the
-        new batch is the only data scanned. This is the reference's
-        insert (hsnw_trial.py:197-265) on the at-rest layout; ids must
-        be fresh (re-adding a tombstoned id does not clear its
-        tombstone — ``compact`` first)."""
-        crows = self.cents.orderBy("cell").collect()
-        cells_np = np.array([r["cell"] for r in crows], dtype=np.int32)
-        C = (
-            np.array([r["centroid"] for r in crows], dtype=np.float64)
-            if crows
-            else np.zeros((0, self.dim), dtype=np.float64)
-        )
-        pts = emb.select(F.col(id_col).alias("vec_id"), to_vec(vec_col).alias("v"))
-        fresh = _ivf_pq_assign_encode(
-            pts, cells_np, C, self.cb_np, self.m, self.dim // self.m
-        )
-        if "v" in self.codes.columns:
-            # vector-bearing layout: carry the new batch's vectors so
-            # the corpus-free refine contract survives incremental insert
-            fresh = fresh.join(pts, "vec_id")
-        return IvfPqIndex(
-            self.codes.unionByName(fresh), self.cents, self.codebooks,
-            self.cb_np, self.dim, self.m,
-            cached=self._cached, tombstones=self.tombstones,
-        )
+    def _encode(self, pts: DataFrame) -> DataFrame:
+        from .ivf import _collect_cents
 
-    def delete(self, ids_df: DataFrame) -> "IvfPqIndex":
-        """Tombstone the given ids (delete-log semantics: codes stay at
-        rest, probes skip the log — hsnw_trial.py:296-305)."""
-        from .knn import merge_tombstones
-
-        return IvfPqIndex(
-            self.codes, self.cents, self.codebooks, self.cb_np,
-            self.dim, self.m, cached=self._cached,
-            tombstones=merge_tombstones(self.tombstones, ids_df),
-        )
-
-    def compact(self) -> "IvfPqIndex":
-        """Physically drop tombstoned codes and clear the log — the
-        reference's rebuild compaction (hsnw_trial.py:381-389) without
-        retraining (trained state is frozen, so compaction is a pure
-        filter: searches are bit-identical before and after)."""
-        from .knn import live_rows
-
-        return IvfPqIndex(
-            live_rows(self.codes, self.tombstones), self.cents,
-            self.codebooks, self.cb_np, self.dim, self.m,
-            cached=self._cached,
-        )
-
-    def save(self, path: str, emb: DataFrame | None = None) -> None:
-        # cell is the partition column: the at-rest layout that makes a
-        # probe a partition-pruned read. Pass emb (vec_id, embedding)
-        # to store the raw vectors NEXT TO the codes inside each cell
-        # partition: refine_search of the loaded index then runs with
-        # emb=None and its re-rank reads (vec_id, v) from the SAME
-        # pruned cell files the ADC shortlist scanned — the corpus
-        # table is never touched at probe time (IvfIndex.save(path,
-        # emb) layout; the ADC scan itself still reads only
-        # (vec_id, code) thanks to columnar pruning).
-        if emb is not None:
-            pts = emb.select("vec_id", to_vec("embedding").alias("v"))
-            codes = (
-                self.codes.select("vec_id", "code", "cell")
-                .join(pts, "vec_id")
-                .select("vec_id", "code", "v", "cell")
-            )
-        elif "v" in self.codes.columns:
-            codes = self.codes.select("vec_id", "code", "v", "cell")
-        else:
-            codes = self.codes.select("vec_id", "code", "cell")
-        codes.write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(f"{path}/codes")
-        self.cents.write.mode("overwrite").parquet(f"{path}/centroids")
-        self.codebooks.withColumn("dim", F.lit(self.dim)).withColumn(
-            "m", F.lit(self.m)
-        ).withColumn(
-            "tombs", F.lit(self.tombstones is not None)
-        ).write.mode("overwrite").parquet(f"{path}/codebooks")
-        if self.tombstones is not None:
-            self.tombstones.write.mode("overwrite").parquet(f"{path}/tombstones")
+        cells_np, C = _collect_cents(self.cents)
+        return _ivf_pq_assign_encode(pts, cells_np, C, self.cb_np, self.m, self.dim // self.m)
 
     @classmethod
-    def load(cls, spark, path: str) -> "IvfPqIndex":
-        codes = spark.read.parquet(f"{path}/codes")
-        cents = spark.read.parquet(f"{path}/centroids")
-        cb_raw = spark.read.parquet(f"{path}/codebooks")
-        meta = cb_raw.first()
-        cb = cb_raw.select("cb")
+    def _restore(cls, parts, meta, tombs):
+        cb = parts["codebooks"]
         cb_np = np.array(cb.collect()[0]["cb"], dtype=np.float64)
-        tombs = (
-            spark.read.parquet(f"{path}/tombstones")
-            if "tombs" in cb_raw.columns and meta["tombs"]
-            else None
-        )
         return cls(
-            codes, cents, cb, cb_np, int(meta["dim"]), int(meta["m"]),
-            tombstones=tombs,
+            parts["codes"], parts["cents"], cb, cb_np, int(meta["dim"]),
+            int(meta["m"]), tombstones=tombs,
         )
 
     def search(
@@ -1278,23 +929,10 @@ class IvfPqIndex:
         in place of deleted-ness. Exact-k whenever the permitted rows
         inside the probed cells have >= k members; fewer rows come back
         below that selectivity (pre-filtering never silently pads).
-        Tombstoned ids are skipped first (the reference's
-        deleted-check, hsnw_trial.py:178-179)."""
-        from .knn import live_rows, prefilter_rows
-
+        Tombstoned ids are skipped first."""
         return _ivf_pq_score(
-            prefilter_rows(
-                live_rows(self.codes, self.tombstones),
-                "vec_id", predicate, allowed_ids,
-            ),
-            self.cents,
-            self.cb_np,
-            queries,
-            dim=self.dim,
-            m=self.m,
-            k=k,
-            n_probe=n_probe,
-            lut_chunk=lut_chunk,
+            self._live(predicate, allowed_ids), self.cents, self.cb_np, queries,
+            dim=self.dim, m=self.m, k=k, n_probe=n_probe, lut_chunk=lut_chunk,
         )
 
     def refine_search(
@@ -1329,8 +967,5 @@ class IvfPqIndex:
             lut_chunk=lut_chunk,
             predicate=predicate,
             allowed_ids=allowed_ids,
-        ).select("query_id", "neighbor_id")
-        return _exact_rerank(
-            shortlist, emb, queries, k, id_col, vec_col,
-            base=_code_vector_base(self.codes),
         )
+        return self._rerank(shortlist, emb, queries, k, id_col, vec_col)

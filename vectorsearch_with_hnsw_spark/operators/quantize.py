@@ -23,7 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from .artifact import QuantizedIndex
+from .knn import _exact_rerank, topk_per_group
 
 LEVELS = 256
 
@@ -111,13 +113,8 @@ def _sq8_score(
     pairs = base.crossJoin(F.broadcast(qcode)).select(
         "query_id", "neighbor_id", dist2.alias("qdist2")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qdist2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "neighbor_id", "qdist2")
+    return topk_per_group(pairs, ["query_id"], ["qdist2", "neighbor_id"], k).select(
+        "query_id", "rnk", "neighbor_id", "qdist2"
     )
 
 
@@ -172,34 +169,10 @@ def sq8_refine_knn(
     raise ``expand``. Measured on the testdata (unnormalized):
     cosine-metric recall@10 >= 0.9 at the expand=10 default (pinned by
     tests/test_retrieval.py)."""
-    from ..functions.vector import cosine_distance, l2_distance, to_vec
-    from .knn import topk_per_group
-
-    if metric not in ("cosine", "l2"):
-        raise ValueError(f"unsupported metric {metric!r}; expected cosine or l2")
-    dist_fn = cosine_distance if metric == "cosine" else l2_distance
-
     shortlist = sq8_knn(
         emb, queries, k=expand * k, id_col=id_col, vec_col=vec_col
     ).select("query_id", "neighbor_id")
-    base = emb.select(
-        F.col(id_col).alias("neighbor_id"), to_vec(vec_col).alias("_v")
-    )
-    q = F.broadcast(
-        queries.select(F.col("query_id"), to_vec("query_vec").alias("_q"))
-    )
-    rescored = (
-        shortlist.join(base, "neighbor_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dist_fn(F.col("_v"), F.col("_q")).alias("dist"),
-        )
-    )
-    return topk_per_group(rescored, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", F.col("rnk").cast("int").alias("rnk")
-    )
+    return _exact_rerank(shortlist, emb, queries, k, id_col, vec_col, metric)
 
 
 def ivf_sq8_knn(
@@ -270,11 +243,8 @@ def ivf_sq8_knn(
     cand = bcode.join(F.broadcast(qcode), "cell").select(
         "query_id", "neighbor_id", dist2.alias("qdist2")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("qdist2").asc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "neighbor_id", "qdist2")
+    return topk_per_group(cand, ["query_id"], ["qdist2", "neighbor_id"], k).select(
+        "query_id", "rnk", "neighbor_id", "qdist2"
     )
 
 
@@ -299,45 +269,30 @@ def ivf_sq8_refine_knn(
     (cosine or l2); the coarse SQ8 shortlist ranks by integer L2
     either way — it is the pruning stage, and the kept rows are
     rescored exactly in the caller's metric."""
-    from ..functions.vector import cosine_distance, l2_distance, to_vec
-    from .knn import topk_per_group
-
-    if metric not in ("cosine", "l2"):
-        raise ValueError(f"unsupported metric {metric!r}; expected cosine or l2")
-    dist_fn = cosine_distance if metric == "cosine" else l2_distance
-
     shortlist = ivf_sq8_knn(emb, queries, dim=dim, k=expand * k, n_probe=n_probe).select(
         "query_id", "neighbor_id"
     )
-    base = emb.select(F.col("vec_id").alias("neighbor_id"), to_vec("embedding").alias("_v"))
-    q = F.broadcast(
-        queries.select(F.col("query_id"), to_vec("query_vec").alias("_q"))
-    )
-    rescored = (
-        shortlist.join(base, "neighbor_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dist_fn(F.col("_v"), F.col("_q")).alias("dist"),
-        )
-    )
-    return topk_per_group(rescored, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", F.col("rnk").cast("int").alias("rnk")
-    )
+    return _exact_rerank(shortlist, emb, queries, k, metric=metric)
 
 
-class Sq8Index:
+class Sq8Index(QuantizedIndex):
     """Persisted SQ8 artifact: per-dimension [min, max] ranges + 8-bit
-    codes as parquet tables — completing the save/load family next to
-    HnswIndex, PqIndex, IvfIndex, and IvfPqIndex (all mirroring the
+    codes as parquet tables (``codes/`` (vec_id, bcode[, v]) and
+    ``ranges/`` (qmin, qmax, dim, tombs)) — the save/load family next
+    to HnswIndex, PqIndex, IvfIndex, and IvfPqIndex (all mirroring the
     reference's save/load contract, hsnw_trial.py:310-376). The ranges
     are the trained state (one broadcastable row); the codes table is
     the 4x-compressed corpus at rest. A loaded index probes without
     re-scanning the float corpus: queries only need the ranges row to
     quantize themselves, so search shares ``_sq8_score`` with the
     one-shot ``sq8_knn`` and answers BIT-IDENTICALLY to it at equal
-    build input (pinned by tests/test_retrieval.py)."""
+    build input (pinned by tests/test_retrieval.py). The lifecycle is
+    the shared :class:`~.artifact.QuantizedIndex` one; ``add``
+    quantizes with the FROZEN ranges (out-of-range values clip exactly
+    as at build time — the quantizer saturates)."""
+
+    CODE = ("bcode",)
+    META = "ranges"
 
     def __init__(
         self,
@@ -346,10 +301,8 @@ class Sq8Index:
         dim: int,
         tombstones: DataFrame | None = None,
     ):
-        self.codes = codes    # (vec_id, bcode array<long>)
+        super().__init__(codes, dim, tombstones)  # codes: (vec_id, bcode array<long>)
         self.ranges = ranges  # single row (qmin, qmax)
-        self.dim = dim
-        self.tombstones = tombstones
 
     @classmethod
     def build(
@@ -375,101 +328,14 @@ class Sq8Index:
         )
         return cls(codes, ranges, dim)
 
-    def add(
-        self,
-        emb: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> "Sq8Index":
-        """Incremental insert: quantize the new vectors with the FROZEN
-        per-dimension ranges (train once, add many) and union the
-        codes — the reference's insert (hsnw_trial.py:197-265) on the
-        at-rest layout. Out-of-range values clip exactly as at build
-        time (the quantizer saturates); existing codes are untouched.
-        Ids must be fresh — re-adding a tombstoned id does not clear
-        its tombstone (``compact`` first). A vector-bearing index
-        (loaded from a ``save(path, emb)`` layout) carries the new
-        batch's vectors into the union so the corpus-free refine
-        contract survives incremental insert."""
-        fresh = quantize(emb, self.ranges, id_col, vec_col).select(
-            F.col(id_col).alias("vec_id"), F.col("code").alias("bcode")
+    def _encode(self, pts: DataFrame) -> DataFrame:
+        return quantize(pts, self.ranges, vec_col="v").select(
+            "vec_id", F.col("code").alias("bcode")
         )
-        if "v" in self.codes.columns:
-            from ..functions.vector import to_vec
-
-            pts = emb.select(
-                F.col(id_col).alias("vec_id"), to_vec(vec_col).alias("v")
-            )
-            fresh = fresh.join(pts, "vec_id").select("vec_id", "bcode", "v")
-        return Sq8Index(
-            self.codes.unionByName(fresh), self.ranges, self.dim,
-            tombstones=self.tombstones,
-        )
-
-    def delete(self, ids_df: DataFrame) -> "Sq8Index":
-        """Tombstone the given ids (delete-log semantics: codes stay at
-        rest, probes skip the log — hsnw_trial.py:296-305)."""
-        from .knn import merge_tombstones
-
-        return Sq8Index(
-            self.codes, self.ranges, self.dim,
-            tombstones=merge_tombstones(self.tombstones, ids_df),
-        )
-
-    def compact(self) -> "Sq8Index":
-        """Physically drop tombstoned codes and clear the log — the
-        reference's rebuild compaction (hsnw_trial.py:381-389) without
-        retraining (the ranges are frozen, so compaction is a pure
-        filter: searches are bit-identical before and after)."""
-        from .knn import live_rows
-
-        return Sq8Index(live_rows(self.codes, self.tombstones), self.ranges, self.dim)
-
-    def save(self, path: str, emb: DataFrame | None = None) -> None:
-        """Pass ``emb`` (vec_id, embedding) to store the raw vectors
-        NEXT TO the codes (``v`` column in the codes files): a
-        refine_search of the loaded index then runs with ``emb=None`` —
-        the shortlist's exact re-rank reads the index's own files and
-        the corpus table is never scanned at probe time (the
-        IvfIndex.save(path, emb) layout applied to the refine family).
-        Parquet is columnar, so the coarse integer scan still reads
-        only (vec_id, bcode); ``v`` is touched only by the expand*k
-        re-rank join. The routing-only form remains for callers who
-        co-locate vectors elsewhere."""
-        if emb is not None:
-            from ..functions.vector import to_vec
-
-            pts = emb.select("vec_id", to_vec("embedding").alias("v"))
-            codes = (
-                self.codes.select("vec_id", "bcode")
-                .join(pts, "vec_id")
-                .select("vec_id", "bcode", "v")
-            )
-        elif "v" in self.codes.columns:
-            codes = self.codes.select("vec_id", "bcode", "v")
-        else:
-            codes = self.codes.select("vec_id", "bcode")
-        codes.write.mode("overwrite").parquet(f"{path}/codes")
-        self.ranges.withColumn("dim", F.lit(self.dim)).withColumn(
-            "tombs", F.lit(self.tombstones is not None)
-        ).write.mode("overwrite").parquet(f"{path}/ranges")
-        if self.tombstones is not None:
-            self.tombstones.write.mode("overwrite").parquet(f"{path}/tombstones")
 
     @classmethod
-    def load(cls, spark, path: str) -> "Sq8Index":
-        codes = spark.read.parquet(f"{path}/codes")
-        ranges_raw = spark.read.parquet(f"{path}/ranges")
-        meta = ranges_raw.first()
-        tombs = (
-            spark.read.parquet(f"{path}/tombstones")
-            if "tombs" in ranges_raw.columns and meta["tombs"]
-            else None
-        )
-        return cls(
-            codes, ranges_raw.select("qmin", "qmax"), int(meta["dim"]),
-            tombstones=tombs,
-        )
+    def _restore(cls, parts, meta, tombs):
+        return cls(parts["codes"], parts["ranges"], int(meta["dim"]), tombstones=tombs)
 
     def search(
         self,
@@ -479,17 +345,10 @@ class Sq8Index:
         allowed_ids: DataFrame | None = None,
     ) -> DataFrame:
         """Integer-L2 top-k over the stored codes (no float-corpus
-        scan). ``predicate`` / ``allowed_ids``: ``filtered_knn``'s
-        pre-filter contract over the codes relation — applied before
-        any distance math, so a filtered probe of the at-rest index
-        reads only permitted codes (see ``IvfPqIndex.search``).
-        Tombstoned ids are skipped first (the reference's
-        deleted-check, hsnw_trial.py:178-179)."""
-        from .knn import live_rows, prefilter_rows
-
-        base = prefilter_rows(
-            live_rows(self.codes, self.tombstones), "vec_id", predicate, allowed_ids
-        ).select(
+        scan). ``predicate`` / ``allowed_ids``: the pre-filter
+        contract, applied after the tombstone skip and before any
+        distance math (see ``QuantizedIndex._live``)."""
+        base = self._live(predicate, allowed_ids).select(
             F.col("vec_id").alias("neighbor_id"), "bcode"
         )
         return _sq8_score(base, self.ranges, queries, k)
@@ -516,15 +375,8 @@ class Sq8Index:
         re-ranks from its own stored vectors (``emb=None`` is then
         valid — the corpus table is never scanned). The pre-filter
         applies to the shortlist stage, so the rescore touches only
-        permitted rows. The re-rank tail is the shared
-        ``pq._exact_rerank``, so one tie-break/metric fix serves every
-        artifact path."""
-        from .pq import _code_vector_base, _exact_rerank
-
+        permitted rows."""
         shortlist = self.search(
             queries, k=expand * k, predicate=predicate, allowed_ids=allowed_ids
-        ).select("query_id", "neighbor_id")
-        return _exact_rerank(
-            shortlist, emb, queries, k, id_col, vec_col, metric,
-            base=_code_vector_base(self.codes),
         )
+        return self._rerank(shortlist, emb, queries, k, id_col, vec_col, metric)

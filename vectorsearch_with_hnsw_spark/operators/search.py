@@ -4,25 +4,27 @@ One entry point over every ANN/exact family the engine implements, so a
 caller picks a recall/cost point by name instead of learning ten
 operator signatures:
 
-| method       | recall profile        | cost profile                   |
-|--------------|-----------------------|--------------------------------|
-| exact        | 1.0 (definition)      | O(N·Q) declarative plan        |
-| exact_fast   | 1.0 (bit-identical)   | O(N·Q) BLAS partial top-k      |
-| hnsw         | ~1.0 at defaults      | O(ef·Q) probes after build     |
-| hnsw_rescored| = exact when shortlist covers top-k | probes + 4k·Q exact re-scores |
-| hnsw_routed  | ~0.93 at P=128 (worst case) | ~3·sqrt(P) cells probed — sublinear in P |
-| sq8          | ~1.0 (exact re-rank)  | full 4x-smaller-code scan + expand·k reads |
-| ivf_sq8      | high (exact re-rank)  | cell-pruned quantized scan + expand·k reads |
-| ivf_sq8_refine| alias of above       | cell-pruned quantized scan + expand·k reads |
-| ivf          | high (probe-tuned)    | cell-pruned full vectors       |
-| ivf_kmeans   | high (trained)        | cell-pruned, kmeans-routed     |
-| lsh          | medium-high           | band-bucket joins only         |
-| pq           | high (alias of below) | ADC shortlist + expand·k reads |
-| pq_refine    | high (exact re-rank)  | ADC shortlist + expand·k reads |
-| ivf_pq       | high (alias of below) | pruned ADC + expand·k reads    |
-| ivf_pq_refine| high within probes    | pruned ADC + expand·k reads    |
-| binary       | high (alias of below) | bit scan + expand·k reads      |
-| binary_refine| high (exact re-rank)  | bit scan + expand·k reads      |
+| method                    | recall profile              | cost profile                         |
+|---------------------------|-----------------------------|--------------------------------------|
+| exact                     | 1.0 (definition)            | O(N·Q) declarative plan              |
+| exact_fast                | 1.0 (bit-identical)         | O(N·Q) BLAS partial top-k            |
+| hnsw                      | ~1.0 at defaults            | O(ef·Q) probes after build           |
+| hnsw_rescored             | = exact when shortlist covers top-k | probes + 4k·Q exact re-scores |
+| hnsw_routed               | ~0.93 at P=128 (worst case) | ~3·sqrt(P) cells probed — sublinear in P |
+| lsh                       | medium-high                 | band-bucket joins only               |
+| ivf                       | high (probe-tuned)          | cell-pruned full vectors             |
+| ivf_kmeans                | high (trained)              | cell-pruned, kmeans-routed           |
+| sq8 = sq8_refine          | ~1.0 (exact re-rank)        | 4x-smaller-code scan + expand·k reads |
+| ivf_sq8 = ivf_sq8_refine  | high (exact re-rank)        | cell-pruned code scan + expand·k reads |
+| pq = pq_refine            | high (exact re-rank)        | ADC shortlist + expand·k reads       |
+| ivf_pq = ivf_pq_refine    | high within probes          | pruned ADC + expand·k reads          |
+| binary = binary_refine    | high (exact re-rank)        | bit scan + expand·k reads            |
+| matryoshka                | high (exact rescore)        | prefix scan + refine·k full reads    |
+
+Each row is one entry of the dispatch table ``_TABLE``; a name after
+``=`` is an alias of the same entry (same kernel, same defaults, same
+deployed recall row). Every sketch family deploys its shortlist with
+the one exact re-rank tail (``knn._exact_rerank``).
 
 Every method takes the same (base, queries) relations — base
 ``(vec_id, embedding)``-shaped, queries ``(query_id, query_vec)`` — and
@@ -42,38 +44,78 @@ stay reachable directly as ``operators.ann.binary_sign_knn``,
 
 from __future__ import annotations
 
+from importlib import import_module
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-METHODS = ("exact", "exact_fast", "hnsw", "hnsw_rescored", "hnsw_routed", "lsh", "ivf", "ivf_kmeans", "sq8", "sq8_refine", "ivf_sq8", "ivf_sq8_refine", "pq", "pq_refine", "ivf_pq", "ivf_pq_refine", "binary", "binary_refine", "matryoshka")
 
-# method -> the bench/registry row that measures the EXACT kernel this
-# dispatch deploys. The sketch families route to their refine forms
-# (ADC/Hamming/SQ8 rankings are shortlist stages, never served raw);
-# the raw shortlist recalls (binary_sign_ann 0.21, ivf_pq_ann 0.49,
+class _Kernel(NamedTuple):
+    module: str                # operators module holding the kernel
+    fn: str                    # kernel name, resolved at call time
+    takes: tuple = ()          # dispatch arguments it takes besides k
+    index: str | None = None   # artifact class (same module) an index= must be
+    row: str | None = None     # registry row measuring this kernel's recall
+    alias: str | None = None   # second method name for the same entry
+
+
+# The one dispatch table. The sketch families route to their refine
+# forms (ADC/Hamming/SQ8 rankings are shortlist stages, never served
+# raw); each ``*_refine`` name is an alias of its family. ``row`` is
+# the bench/registry row that measures the EXACT kernel deployed — the
+# raw shortlist recalls (binary_sign_ann 0.21, ivf_pq_ann 0.49,
 # pq_adc_ann 0.52) are cost-profile exhibits, not deployed floors.
 # bench.py's "recall_min_deployed" headline goes one step further and
-# measures every method here DIRECTLY at its dispatch defaults
+# measures every method DIRECTLY at its dispatch defaults
 # (recall_deploy_*), because the registry exhibits keep their own
 # explicit settings (e.g. the 8-band lsh row vs the deployed 16-band
-# multiprobe). tests/test_misc_ops.py pins every entry to the kernel
-# similarity_search actually calls, so this table cannot drift from
-# the dispatch above it.
+# multiprobe). tests/test_misc_ops.py pins every row to the kernel
+# similarity_search actually calls. The hnsw names (None) build or
+# probe a graph index in similarity_search itself.
+_TABLE = {
+    "exact": _Kernel("knn", "knn_exact", ("metric",)),
+    "exact_fast": _Kernel("knn", "knn_exact_fast", ("metric",)),
+    "hnsw": None,
+    "hnsw_rescored": None,
+    "hnsw_routed": None,
+    "lsh": _Kernel("ann", "lsh_knn_cosine", ("dim",), row="lsh_ann_cosine"),
+    "ivf": _Kernel("ivf", "ivf_knn_cosine", ("dim", "n_probe"), row="ivf_ann_cosine"),
+    "ivf_kmeans": _Kernel(
+        "ivf", "ivf_kmeans_knn", ("dim", "n_probe"), row="ivf_kmeans_ann"
+    ),
+    "sq8": _Kernel(
+        "quantize", "sq8_refine_knn", ("metric",), "Sq8Index", "sq8_refine_ann",
+        "sq8_refine",
+    ),
+    "ivf_sq8": _Kernel(
+        "quantize", "ivf_sq8_refine_knn", ("dim", "n_probe", "metric"),
+        row="ivf_sq8_refine_ann", alias="ivf_sq8_refine",
+    ),
+    "pq": _Kernel("pq", "pq_refine_knn", ("dim",), "PqIndex", "pq_refine_ann", "pq_refine"),
+    "ivf_pq": _Kernel(
+        "pq", "ivf_pq_refine_knn", ("dim", "n_probe"), "IvfPqIndex",
+        "ivf_pq_refine_ann", "ivf_pq_refine",
+    ),
+    "binary": _Kernel(
+        "ann", "binary_refine_knn", ("dim",), row="binary_refine_ann",
+        alias="binary_refine",
+    ),
+    "matryoshka": _Kernel("ann", "matryoshka_knn", ("dim",), row="matryoshka_ann"),
+}
+
+# every accepted name -> its table entry's name
+_ENTRY = {
+    name: entry
+    for entry, kern in _TABLE.items()
+    for name in (entry, kern and kern.alias)
+    if name
+}
+METHODS = tuple(_ENTRY)
 DEPLOYED_RECALL_ROWS = {
-    "lsh": "lsh_ann_cosine",
-    "ivf": "ivf_ann_cosine",
-    "ivf_kmeans": "ivf_kmeans_ann",
-    "sq8": "sq8_refine_ann",
-    "sq8_refine": "sq8_refine_ann",
-    "ivf_sq8": "ivf_sq8_refine_ann",
-    "ivf_sq8_refine": "ivf_sq8_refine_ann",
-    "pq": "pq_refine_ann",
-    "pq_refine": "pq_refine_ann",
-    "ivf_pq": "ivf_pq_refine_ann",
-    "ivf_pq_refine": "ivf_pq_refine_ann",
-    "binary": "binary_refine_ann",
-    "binary_refine": "binary_refine_ann",
-    "matryoshka": "matryoshka_ann",
+    name: _TABLE[entry].row
+    for name, entry in _ENTRY.items()
+    if _TABLE[entry] and _TABLE[entry].row
 }
 
 # per-method probe widths when the caller leaves n_probe unset: the
@@ -82,7 +124,7 @@ DEPLOYED_RECALL_ROWS = {
 # (0.88 ivf / ~0.87 ivf_sq8 measured; the registry's oracle rows keep
 # their own explicit half-scan settings as the cost-profile exhibit);
 # the trained/quantized families were already >= 0.9 at 5.
-_DEFAULT_PROBES = {"ivf": 7, "ivf_sq8": 7, "ivf_sq8_refine": 7}
+_DEFAULT_PROBES = {"ivf": 7, "ivf_sq8": 7}
 
 
 def similarity_search(
@@ -102,114 +144,39 @@ def similarity_search(
     ``dim`` is required for the hyperplane/centroid methods (lsh, ivf,
     ivf_sq8, hnsw without a prebuilt index); pass ``index`` to probe an
     existing artifact instead of building one per call — an
-    ``HnswIndex`` for the hnsw methods, or (since round 12) an
-    ``IvfPqIndex`` / ``PqIndex`` / ``Sq8Index`` for the matching
-    quantized methods (the "encode once, probe many" path: the corpus
-    is scanned through its at-rest codes, and only the expand*k
-    re-rank reads raw vectors from ``base``; results are bit-identical
-    to the one-shot method at equal build params, pinned by test). A
-    mismatched index type is refused rather than silently retrained.
-    ``ef`` is the hnsw search-breadth knob (the reference's ef_search,
+    ``HnswIndex`` for the hnsw methods, or an ``IvfPqIndex`` /
+    ``PqIndex`` / ``Sq8Index`` for the matching quantized methods (the
+    "encode once, probe many" path: the corpus is scanned through its
+    at-rest codes, and only the expand*k re-rank reads raw vectors
+    from ``base``; results are bit-identical to the one-shot method at
+    equal build params, pinned by test). A mismatched index type is
+    refused rather than silently retrained. ``ef`` is the hnsw
+    search-breadth knob (the reference's ef_search,
     hsnw_trial.py:274 — defaults to the index params' ef_search,
     clamped to >= k). Unknown methods raise ValueError, mirroring the
     reference's unknown-metric error (hsnw_trial.py:88-89)."""
-    if method not in METHODS:
+    if method not in _ENTRY:
         raise ValueError(f"unknown method {method!r}; expected one of {METHODS}")
+    kern = _TABLE[_ENTRY[method]]
     if n_probe is None:
-        n_probe = _DEFAULT_PROBES.get(method, 5)
-    if index is not None and method in (
-        "pq", "pq_refine", "sq8", "sq8_refine", "ivf_pq", "ivf_pq_refine"
-    ):
-        from .pq import IvfPqIndex, PqIndex
-        from .quantize import Sq8Index
-
-        want = {
-            "pq": PqIndex, "pq_refine": PqIndex,
-            "sq8": Sq8Index, "sq8_refine": Sq8Index,
-            "ivf_pq": IvfPqIndex, "ivf_pq_refine": IvfPqIndex,
-        }[method]
-        if not isinstance(index, want):
-            raise ValueError(
-                f"method {method!r} needs a {want.__name__} index, "
-                f"got {type(index).__name__}"
-            )
-        if method in ("ivf_pq", "ivf_pq_refine"):
-            return index.refine_search(base, queries, k=k, n_probe=n_probe)
-        if method in ("sq8", "sq8_refine"):
-            return index.refine_search(base, queries, k=k, metric=metric)
-        return index.refine_search(base, queries, k=k)
-    if method == "exact":
-        from .knn import knn_exact
-
-        return knn_exact(base, queries, k=k, metric=metric)
-    if method == "exact_fast":
-        from .knn import knn_exact_fast
-
-        return knn_exact_fast(base, queries, k=k, metric=metric)
-    if method == "lsh":
-        from .ann import lsh_knn_cosine
-
-        return lsh_knn_cosine(base, queries, dim=_dim(dim, method), k=k)
-    if method == "ivf":
-        from .ivf import ivf_knn_cosine
-
-        return ivf_knn_cosine(base, queries, dim=_dim(dim, method), k=k, n_probe=n_probe)
-    if method in ("sq8", "sq8_refine"):
-        # deployed form: SQ8 full-scan shortlist + exact re-rank (raw
-        # integer ranking: operators.quantize.sq8_knn)
-        from .quantize import sq8_refine_knn
-
-        return sq8_refine_knn(base, queries, k=k, metric=metric)
-    if method in ("ivf_sq8", "ivf_sq8_refine"):
-        # deployed form: quantized shortlist within the probed cells +
-        # exact re-rank (same contract as pq/binary — the raw
-        # SQ8-ranked probe stays reachable as
-        # operators.quantize.ivf_sq8_knn)
-        from .quantize import ivf_sq8_refine_knn
-
-        return ivf_sq8_refine_knn(
-            base, queries, dim=_dim(dim, method), k=k, n_probe=n_probe, metric=metric
-        )
-    if method == "pq":
-        # deployed form: ADC shortlist + exact re-rank (raw ADC ranking
-        # saturates at ~0.52 recall@10 on the testdata — it is the
-        # shortlist stage; operators.pq.pq_adc_knn exposes it raw)
-        from .pq import pq_refine_knn
-
-        return pq_refine_knn(base, queries, dim=_dim(dim, method), k=k)
-    if method == "pq_refine":
-        from .pq import pq_refine_knn
-
-        return pq_refine_knn(base, queries, dim=_dim(dim, method), k=k)
-    if method == "ivf_pq":
-        # deployed form: residual-ADC shortlist + exact re-rank (raw ADC
-        # ranking saturates at ~0.49 recall@10 on the testdata — it is
-        # the shortlist stage; operators.pq.ivf_pq_knn exposes it raw)
-        from .pq import ivf_pq_refine_knn
-
-        return ivf_pq_refine_knn(base, queries, dim=_dim(dim, method), k=k, n_probe=n_probe)
-    if method == "ivf_pq_refine":
-        from .pq import ivf_pq_refine_knn
-
-        return ivf_pq_refine_knn(base, queries, dim=_dim(dim, method), k=k, n_probe=n_probe)
-    if method == "ivf_kmeans":
-        from .ivf import ivf_kmeans_knn
-
-        return ivf_kmeans_knn(base, queries, dim=_dim(dim, method), k=k, n_probe=n_probe)
-    if method == "binary":
-        # deployed form of the 1-bit sketch: Hamming shortlist + exact
-        # re-rank (raw Hamming ranking: operators.ann.binary_sign_knn)
-        from .ann import binary_refine_knn
-
-        return binary_refine_knn(base, queries, dim=_dim(dim, method), k=k)
-    if method == "binary_refine":
-        from .ann import binary_refine_knn
-
-        return binary_refine_knn(base, queries, dim=_dim(dim, method), k=k)
-    if method == "matryoshka":
-        from .ann import matryoshka_knn
-
-        return matryoshka_knn(base, queries, dim=_dim(dim, method), k=k)
+        n_probe = _DEFAULT_PROBES.get(_ENTRY[method], 5)
+    if kern is not None:
+        mod = import_module(f".{kern.module}", __package__)
+        args = {"dim": dim, "n_probe": n_probe, "metric": metric}
+        if index is not None and kern.index:
+            want = getattr(mod, kern.index)
+            if not isinstance(index, want):
+                raise ValueError(
+                    f"method {method!r} needs a {want.__name__} index, "
+                    f"got {type(index).__name__}"
+                )
+            # an artifact is already trained: its probe takes no dim
+            kw = {a: args[a] for a in kern.takes if a != "dim"}
+            return index.refine_search(base, queries, k=k, **kw)
+        if "dim" in kern.takes:
+            _dim(dim, method)
+        kw = {a: args[a] for a in kern.takes}
+        return getattr(mod, kern.fn)(base, queries, k=k, **kw)
     if method == "hnsw_routed":
         # bounded-probe deployment layout: centroid-routed build (SPANN
         # multi-assignment), ~4.5*sqrt(P) cells probed per query — the
