@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import heapq
+
 import numpy as np
 import pytest
 
@@ -157,3 +159,158 @@ def test_recall_monotone_in_ef(data):
     assert recalls[10] <= recalls[50] + 0.05  # allow tiny non-monotonic noise
     assert recalls[50] <= recalls[200] + 0.05
     assert recalls[200] >= 0.95, recalls
+
+
+# ---------------- graph identity vs the per-candidate loops ----------------
+
+
+class _PerCandidateHNSW(LocalHNSW):
+    """Oracle: the kernel's hot loops in their per-candidate form — one
+    numpy scoring call per frontier pop, one ``D[ci, kept]`` test per
+    diversity candidate, the query column kept as an ndarray. Bodies are
+    verbatim; the lookup kernel must reproduce their graphs and results
+    bit for bit. Both sides share ``_pairwise``/``_dists``, so equality
+    does not depend on the BLAS build."""
+
+    def _query_dists_all(self, vec: np.ndarray) -> np.ndarray | None:
+        n = len(self.ids)
+        if n == 0 or n > self._PRECOMPUTE_MAX_ROWS:
+            return None
+        vec = np.asarray(vec, dtype=self._matc.dtype)
+        dots = self._matc @ vec
+        if self.p.metric == "l2":
+            vec64 = vec.astype(np.float64, copy=False)
+            qq = float(vec64 @ vec64)
+            return np.sqrt(np.maximum(self._sq_norms - 2.0 * dots + qq, 0.0))
+        inv_qn = self._inv_norm_of(vec)
+        return 1.0 - dots * (self._inv_norms * inv_qn)
+
+    def _greedy_descent(self, vec: np.ndarray, start: int, top_layer: int, stop_layer: int, dall: np.ndarray | None = None) -> int:
+        """ef=1 hill-climb from top_layer down to stop_layer (exclusive
+        bottom): move to any strictly closer neighbor until fixpoint.
+        ``dall``: optional precomputed query-to-all distances (one BLAS
+        matvec) — lookups replace per-pop scoring calls."""
+        inv_qn = self._inv_norm_of(vec) if self.p.metric == "cosine" else None
+        cur = start
+        cur_d = float(dall[cur]) if dall is not None else float(self._dists(vec, np.array([cur]), inv_qn)[0])
+        for layer in range(top_layer, stop_layer, -1):
+            improved = True
+            while improved:
+                improved = False
+                nbrs = [n for n in self.graph[cur].get(layer, ()) if not self.deleted[n]]
+                if not nbrs:
+                    break
+                arr = np.array(nbrs)
+                ds = dall[arr] if dall is not None else self._dists(vec, arr, inv_qn)
+                j = int(np.argmin(ds))
+                if ds[j] < cur_d:
+                    cur, cur_d = int(arr[j]), float(ds[j])
+                    improved = True
+        return cur
+
+    def _search_layer(self, vec: np.ndarray, entry: int, ef: int, layer: int, dall: np.ndarray | None = None) -> list[tuple[float, int]]:
+        """Bounded best-first search; returns [(dist, row)] sorted asc.
+        Frontier expansions are scored as one numpy batch per pop, or as
+        plain lookups when ``dall`` precomputed the whole column."""
+        inv_qn = self._inv_norm_of(vec) if self.p.metric == "cosine" else None
+        d0 = float(dall[entry]) if dall is not None else float(self._dists(vec, np.array([entry]), inv_qn)[0])
+        visited = {entry}
+        cand: list[tuple[float, int]] = [(d0, entry)]  # min-heap
+        best: list[tuple[float, int]] = [(-d0, entry)]  # max-heap of best ef
+        while cand:
+            d, cur = heapq.heappop(cand)
+            if d > -best[0][0] and len(best) >= ef:
+                break  # frontier head worse than the ef-th best: done
+            fresh = [
+                n
+                for n in self.graph[cur].get(layer, ())
+                if n not in visited and not self.deleted[n]
+            ]
+            if not fresh:
+                continue
+            visited.update(fresh)
+            arr = np.array(fresh)
+            ds = dall[arr] if dall is not None else self._dists(vec, arr, inv_qn)
+            worst = -best[0][0]
+            for nd, n in zip(ds, arr):
+                if len(best) < ef or nd < worst:
+                    heapq.heappush(cand, (float(nd), int(n)))
+                    heapq.heappush(best, (-float(nd), int(n)))
+                    if len(best) > ef:
+                        heapq.heappop(best)
+                    worst = -best[0][0]
+        return sorted((-d, n) for d, n in best)
+
+    def _select_neighbors(self, vec: np.ndarray, candidates: list[tuple[float, int]], m: int) -> list[int]:
+        """Diversity heuristic: scan ascending; keep a candidate only if
+        no already-kept neighbor is closer to it than it is to the query.
+        All candidate-pair distances come from one precomputed matrix."""
+        if not candidates:
+            return []
+        rows = np.fromiter((c for _, c in candidates), dtype=np.int64, count=len(candidates))
+        D = self._pairwise(rows)
+        kept_idx: list[int] = []
+        for ci, (d_q, _) in enumerate(candidates):
+            if len(kept_idx) >= m:
+                break
+            if kept_idx and bool((D[ci, kept_idx] < d_q).any()):
+                continue
+            kept_idx.append(ci)
+        return [int(rows[i]) for i in kept_idx]
+
+
+def _build_pair(metric, x):
+    p = HnswParams(dim=x.shape[1], metric=metric)
+    new, old = LocalHNSW(p), _PerCandidateHNSW(p)
+    new.add_batch(np.arange(len(x)), x)
+    old.add_batch(np.arange(len(x)), x)
+    return new, old
+
+
+def _assert_identical(new, old, queries):
+    for a, b in zip(new.edges(), old.edges()):
+        assert np.array_equal(a, b)
+    assert (new.entry_point, new.max_layer) == (old.entry_point, old.max_layer)
+    for q in queries:
+        assert new.search(q, k=10) == old.search(q, k=10)
+
+
+def _queries(x, seed=5):
+    rng = np.random.default_rng(seed)
+    return list(x[::37]) + list(rng.standard_normal((8, x.shape[1])).astype(np.float32))
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_graph_identical_to_per_candidate_loops(data, metric):
+    new, old = _build_pair(metric, data)
+    _assert_identical(new, old, _queries(data))
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_graph_identical_with_duplicates_and_zero_vectors(metric):
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal((150, 16)).astype(np.float32)
+    x = np.vstack([base, base[:40], base[:10], np.zeros((12, 16), np.float32)])
+    x = x[rng.permutation(len(x))]
+    new, old = _build_pair(metric, x)
+    _assert_identical(new, old, _queries(x) + [np.zeros(16, np.float32)])
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_graph_identical_after_delete(data, metric):
+    new, old = _build_pair(metric, data[:300])
+    for gid in (0, 17, 123):
+        assert new.delete(gid) and old.delete(gid)
+    _assert_identical(new, old, _queries(data))
+    # inserts after the delete walk past the tombstones
+    new.add_batch(np.arange(300, 400), data[300:])
+    old.add_batch(np.arange(300, 400), data[300:])
+    _assert_identical(new, old, _queries(data))
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_graph_identical_without_precomputed_column(data, metric, monkeypatch):
+    monkeypatch.setattr(LocalHNSW, "_PRECOMPUTE_MAX_ROWS", 0)
+    new, old = _build_pair(metric, data[:250])
+    assert new._query_dists_all(data[0]) is None
+    _assert_identical(new, old, _queries(data[:250]))

@@ -1,7 +1,14 @@
-"""Generate README's artifact-numbers block FROM the committed
-artifacts (VERDICT r13 #2: round 12 and round 13 each shipped README
-sentences citing superseded mid-round figures; deriving the cited
-numbers mechanically removes the failure mode).
+"""Generate README's artifact-numbers block FROM committed artifacts
+that no bench run rewrites (VERDICT r13 #2: round 12 and round 13 each
+shipped README sentences citing superseded mid-round figures; deriving
+the cited numbers mechanically removes the failure mode).
+
+Sources: the committed per-round suite artifacts of round ``ROUND`` —
+``BENCH_r<ROUND>.json`` (local[32]) and ``BENCH_r<ROUND>_c8.json``
+(local[8]) — plus ``SCALECHECK.json``. ``bench.py`` rewrites
+``BENCH_FULL.json`` / ``BENCH_REVERSED.json`` on every run, so the
+block must not read those. When a new round's artifacts land, bump
+``ROUND`` and run ``--write``.
 
 The block is delimited in README.md by
 ``<!-- AUTOGEN:artifact-numbers -->`` / ``<!-- /AUTOGEN... -->``
@@ -19,6 +26,8 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BEGIN = "<!-- AUTOGEN:artifact-numbers (tools/readme_numbers.py) -->"
 END = "<!-- /AUTOGEN:artifact-numbers -->"
+ROUND = 15
+SOURCES = (f"BENCH_r{ROUND}.json", f"BENCH_r{ROUND}_c8.json", "SCALECHECK.json")
 
 
 def _load(name: str) -> dict:
@@ -27,14 +36,15 @@ def _load(name: str) -> dict:
 
 
 def generate() -> str:
-    bf = _load("BENCH_FULL.json")
-    br = _load("BENCH_REVERSED.json")
-    sc = _load("SCALECHECK.json")
-    qf, qr = bf["queries"], br["queries"]
-    shared = [n for n in qf if n in qr and min(qf[n], qr[n]) > 0]
-    worst = max(shared, key=lambda n: max(qf[n], qr[n]) / min(qf[n], qr[n]))
-    wr = max(qf[worst], qr[worst]) / min(qf[worst], qr[worst])
-    lc_f, lc_r = qf.get("ivf_pq_lifecycle_ann"), qr.get("ivf_pq_lifecycle_ann")
+    b32 = _load(SOURCES[0])["parsed"]
+    b8 = _load(SOURCES[1])["parsed"]
+    sc = _load(SOURCES[2])
+    q32, q8 = b32["queries"], b8["queries"]
+    shared = [n for n in q32 if n in q8 and min(q32[n], q8[n]) > 0]
+    faster8 = sum(1 for n in shared if q8[n] < q32[n])
+    worst = max(shared, key=lambda n: max(q32[n], q8[n]) / min(q32[n], q8[n]))
+    wr = max(q32[worst], q8[worst]) / min(q32[worst], q8[worst])
+    lc32, lc8 = q32["ivf_pq_lifecycle_ann"], q8["ivf_pq_lifecycle_ann"]
     resid = sc.get("scrub_residue", {})
     nonzero = {k: v for k, v in resid.items() if v}
     resid_line = (
@@ -42,24 +52,23 @@ def generate() -> str:
         if not nonzero
         else ", ".join(f"{k}={v}" for k, v in sorted(nonzero.items()))
     )
-    ex = bf.get("extra", {})
+    e32, e8 = b32["extra"], b8["extra"]
     lines = [
         BEGIN,
-        "Committed-artifact numbers (regenerate with `python",
-        "tools/readme_numbers.py --write`; enforced by",
-        "tests/test_docs_numbers.py):",
+        f"Round-{ROUND} bench artifacts ({SOURCES[0]} on local[32],",
+        f"{SOURCES[1]} on local[8], sf{b32['sf']}) and {SOURCES[2]};",
+        "regenerate with `python tools/readme_numbers.py --write`;",
+        "enforced by tests/test_docs_numbers.py:",
         "",
-        f"- Both-order suite (BENCH_FULL / BENCH_REVERSED, sf0.1): "
-        f"{len(qf)} query rows, {bf['value']:.1f} s forward / "
-        f"{br['value']:.1f} s reversed.",
-        f"- HNSW dim-512 build: {ex.get('build512_vecs_per_sec_per_core')} "
-        f"vec/s/core forward (reversed artifact: "
-        f"{br.get('extra', {}).get('build512_vecs_per_sec_per_core')}), "
-        f"recall@10 = {ex.get('hnsw_recall_at_10')}.",
-        f"- `ivf_pq_lifecycle_ann`: {lc_f} s forward / {lc_r} s reversed "
-        f"(ratio {max(lc_f, lc_r) / min(lc_f, lc_r):.2f}).",
-        f"- Largest forward/reversed ratio in the suite: `{worst}` "
-        f"({qf[worst]} / {qr[worst]}, {wr:.2f}x).",
+        f"- Suite: {e32['n_queries']} query rows, {b32['value']:.1f} s on 32 "
+        f"cores / {b8['value']:.1f} s on 8 cores.",
+        f"- HNSW dim-512 build: {e32['build512_vecs_per_sec_per_core']} "
+        f"vec/s/core on 32 cores, {e8['build512_vecs_per_sec_per_core']} "
+        f"on 8; recall@10 = {e32['hnsw_recall_at_10']}.",
+        f"- `ivf_pq_lifecycle_ann`: {lc32} s on 32 cores / {lc8} s on 8.",
+        f"- Headline rows faster on 8 cores than on 32: {faster8} of "
+        f"{len(shared)}; largest 32/8 ratio `{worst}` "
+        f"({q32[worst]} / {q8[worst]}, {wr:.2f}x).",
         f"- SCALECHECK `scrub_residue` ledger: {resid_line}.",
         END,
     ]

@@ -4,9 +4,25 @@ This is the one genuinely non-relational piece of the engine (SURVEY.md
 §4.3 "custom"). It re-implements the published HNSW algorithm (Malkov &
 Yashunin 2016) with the reference's exact semantics — but NOT its code:
 where the reference scores one candidate per interpreted-Python call
-(hsnw_trial.py:45, :183), this kernel evaluates whole neighbor frontiers
-as numpy matrix ops, which is where the >=2x throughput over the
-baseline's 67 inserts/s/core comes from.
+(hsnw_trial.py:45, :183), numpy here only does batched work. A query's
+distance to every stored row is one BLAS matvec, which the ef-search
+and the greedy descent then read as plain list lookups; diversity
+selection gets all candidate-pair distances from one BLAS call and
+walks them with a blocked mask, at most M numpy steps per layer.
+
+Measured on one partition's share of the hnsw_build benchmark (333
+vectors, 512-d cosine, M=16, efc=200; 4-vCPU x86 host), read from
+``index.local_hnsw.insert_vps`` / ``search_qps`` of
+``python3 perfbench/run.py --workload hnsw_build --seed 11 --trace 1``:
+inserts 252-383 -> 683-866 vec/s and probes 1,096-2,000 -> 1,964-2,928
+q/s over seeds 11 and 12, against the previous loops that made one
+numpy call per frontier pop and one per diversity candidate. Time now
+splits ~46% ef-search heap loop, ~31% ``_pairwise`` BLAS, ~8% the
+selection mask, ~4% the query matvec. The gain shrinks as partitions
+grow, because the per-insert matvec and ``_pairwise`` (both unchanged)
+take a larger share: single-threaded at 5,000 rows, the reference's
+own benchmark size, inserts went 147 -> 216 vec/s, against the
+reference's 67 vec/s (BASELINE.md).
 
 Semantics preserved from the reference (cited for the parity judge):
 - level draw floor(-ln(U) * mL), U clamped away from 0   (hsnw_trial.py:119-125)
@@ -30,6 +46,7 @@ from __future__ import annotations
 
 import heapq
 import math
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -167,19 +184,20 @@ class LocalHNSW:
             self._inv_norms = np.where(self._norms == 0.0, 0.0, 1.0 / self._norms)
 
     # Precompute the query's distance to EVERY stored row when one BLAS
-    # matvec beats the ~ef·degree tiny per-pop scoring calls the graph
-    # walk would otherwise make. Python per-call overhead (~12 us of
-    # fancy-index + small matvec per frontier pop) dwarfs the O(n*dim)
-    # BLAS flops far past where intuition says the walk "touches a
-    # vanishing fraction of rows": an earlier dim<128 cutoff at
-    # n = 16*efc made a 16k-row dim-64 partition build take 146 s
-    # (9.2 ms/vec) where the full precompute runs it at ~3 ms/vec.
-    # Both paths score with the SAME formulation/dtype, so the cutoff
-    # is purely a speed knob — the cap below only bounds the O(n)
-    # per-insert allocation (64k f64 rows = 512 KB, still trivial).
+    # matvec plus one ``tolist`` beats scoring the walk's fresh rows in
+    # one ``_dists`` batch per frontier pop: with the column precomputed
+    # the walk does plain list lookups and no numpy call at all. An
+    # earlier dim<128 cutoff at n = 16*efc made a 16k-row dim-64
+    # partition build take 146 s (9.2 ms/vec) where the full precompute
+    # ran it at ~3 ms/vec. Both paths score with the SAME
+    # formulation/dtype, so the cutoff is purely a speed knob — the cap
+    # below only bounds the O(n) per-insert work (64k rows = one 512 KB
+    # f64 column and its list).
     _PRECOMPUTE_MAX_ROWS = 65536
 
-    def _query_dists_all(self, vec: np.ndarray) -> np.ndarray | None:
+    def _query_dists_all(self, vec: np.ndarray) -> list[float] | None:
+        """The query's distance to every stored row as a plain list (one
+        BLAS matvec, one ``tolist``), or None past the row cap."""
         n = len(self.ids)
         if n == 0 or n > self._PRECOMPUTE_MAX_ROWS:
             return None
@@ -188,20 +206,27 @@ class LocalHNSW:
         if self.p.metric == "l2":
             vec64 = vec.astype(np.float64, copy=False)
             qq = float(vec64 @ vec64)
-            return np.sqrt(np.maximum(self._sq_norms - 2.0 * dots + qq, 0.0))
+            return np.sqrt(np.maximum(self._sq_norms - 2.0 * dots + qq, 0.0)).tolist()
         inv_qn = self._inv_norm_of(vec)
-        return 1.0 - dots * (self._inv_norms * inv_qn)
+        return (1.0 - dots * (self._inv_norms * inv_qn)).tolist()
 
     # ---------------- search internals ----------------
 
-    def _greedy_descent(self, vec: np.ndarray, start: int, top_layer: int, stop_layer: int, dall: np.ndarray | None = None) -> int:
-        """ef=1 hill-climb from top_layer down to stop_layer (exclusive
-        bottom): move to any strictly closer neighbor until fixpoint.
-        ``dall``: optional precomputed query-to-all distances (one BLAS
-        matvec) — lookups replace per-pop scoring calls."""
+    def _scorer(self, vec: np.ndarray, dall: list[float] | None) -> Callable[[list[int]], list[float]]:
+        """rows -> their query distances as Python floats: plain lookups
+        into the precomputed column ``dall`` when there is one, else one
+        ``_dists`` batch per call."""
+        if dall is not None:
+            return lambda rows: [dall[r] for r in rows]
         inv_qn = self._inv_norm_of(vec) if self.p.metric == "cosine" else None
+        return lambda rows: self._dists(vec, np.array(rows), inv_qn).tolist()
+
+    def _greedy_descent(self, vec: np.ndarray, start: int, top_layer: int, stop_layer: int, dall: list[float] | None = None) -> int:
+        """ef=1 hill-climb from top_layer down to stop_layer (exclusive
+        bottom): move to any strictly closer neighbor until fixpoint."""
+        score = self._scorer(vec, dall)
         cur = start
-        cur_d = float(dall[cur]) if dall is not None else float(self._dists(vec, np.array([cur]), inv_qn)[0])
+        cur_d = score([cur])[0]
         for layer in range(top_layer, stop_layer, -1):
             improved = True
             while improved:
@@ -209,63 +234,66 @@ class LocalHNSW:
                 nbrs = [n for n in self.graph[cur].get(layer, ()) if not self.deleted[n]]
                 if not nbrs:
                     break
-                arr = np.array(nbrs)
-                ds = dall[arr] if dall is not None else self._dists(vec, arr, inv_qn)
+                ds = score(nbrs)
+                # argmin, not min(): a NaN distance wins the argmin and
+                # then fails the < test, so it stops the climb
                 j = int(np.argmin(ds))
                 if ds[j] < cur_d:
-                    cur, cur_d = int(arr[j]), float(ds[j])
+                    cur, cur_d = nbrs[j], ds[j]
                     improved = True
         return cur
 
-    def _search_layer(self, vec: np.ndarray, entry: int, ef: int, layer: int, dall: np.ndarray | None = None) -> list[tuple[float, int]]:
+    def _search_layer(self, vec: np.ndarray, entry: int, ef: int, layer: int, dall: list[float] | None = None) -> list[tuple[float, int]]:
         """Bounded best-first search; returns [(dist, row)] sorted asc.
-        Frontier expansions are scored as one numpy batch per pop, or as
-        plain lookups when ``dall`` precomputed the whole column."""
-        inv_qn = self._inv_norm_of(vec) if self.p.metric == "cosine" else None
-        d0 = float(dall[entry]) if dall is not None else float(self._dists(vec, np.array([entry]), inv_qn)[0])
+        Each pop scores its fresh neighbors through one ``score`` call."""
+        score = self._scorer(vec, dall)
+        graph, deleted = self.graph, self.deleted
+        push, pop = heapq.heappush, heapq.heappop
+        d0 = score([entry])[0]
         visited = {entry}
         cand: list[tuple[float, int]] = [(d0, entry)]  # min-heap
         best: list[tuple[float, int]] = [(-d0, entry)]  # max-heap of best ef
         while cand:
-            d, cur = heapq.heappop(cand)
+            d, cur = pop(cand)
             if d > -best[0][0] and len(best) >= ef:
                 break  # frontier head worse than the ef-th best: done
-            fresh = [
-                n
-                for n in self.graph[cur].get(layer, ())
-                if n not in visited and not self.deleted[n]
-            ]
+            fresh = [n for n in graph[cur].get(layer, ()) if n not in visited and not deleted[n]]
             if not fresh:
                 continue
             visited.update(fresh)
-            arr = np.array(fresh)
-            ds = dall[arr] if dall is not None else self._dists(vec, arr, inv_qn)
             worst = -best[0][0]
-            for nd, n in zip(ds, arr):
+            for nd, n in zip(score(fresh), fresh):
                 if len(best) < ef or nd < worst:
-                    heapq.heappush(cand, (float(nd), int(n)))
-                    heapq.heappush(best, (-float(nd), int(n)))
+                    push(cand, (nd, n))
+                    push(best, (-nd, n))
                     if len(best) > ef:
-                        heapq.heappop(best)
+                        pop(best)
                     worst = -best[0][0]
         return sorted((-d, n) for d, n in best)
 
     def _select_neighbors(self, vec: np.ndarray, candidates: list[tuple[float, int]], m: int) -> list[int]:
         """Diversity heuristic: scan ascending; keep a candidate only if
         no already-kept neighbor is closer to it than it is to the query.
-        All candidate-pair distances come from one precomputed matrix."""
-        if not candidates:
+        Each kept candidate i blocks every j with D[j, i] < dq[j], and
+        the scan jumps to the next unblocked candidate — at most m numpy
+        steps, however many candidates there are."""
+        if not candidates or m <= 0:
             return []
-        rows = np.fromiter((c for _, c in candidates), dtype=np.int64, count=len(candidates))
-        D = self._pairwise(rows)
-        kept_idx: list[int] = []
-        for ci, (d_q, _) in enumerate(candidates):
-            if len(kept_idx) >= m:
+        dq, rows = zip(*candidates)
+        rows = np.array(rows, dtype=np.int64)
+        # below[j, i]: kept candidate i would block candidate j
+        below = self._pairwise(rows) < np.array(dq)[:, None]
+        blocked = np.zeros(len(rows), dtype=bool)
+        kept = [0]
+        while len(kept) < m:
+            i = kept[-1]
+            blocked |= below[:, i]
+            blocked[: i + 1] = True  # the scan only moves forward
+            j = int(blocked.argmin())
+            if blocked[j]:
                 break
-            if kept_idx and bool((D[ci, kept_idx] < d_q).any()):
-                continue
-            kept_idx.append(ci)
-        return [int(rows[i]) for i in kept_idx]
+            kept.append(j)
+        return rows[kept].tolist()
 
     # ---------------- public API ----------------
 
