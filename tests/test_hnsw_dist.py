@@ -48,14 +48,37 @@ def test_probe_recall(spark, emb, queries, index):
     assert _recall(ann, exact) >= 0.9
 
 
-def test_distributed_probe_matches_broadcast_probe(spark, emb, queries, index):
+@pytest.fixture(scope="module")
+def centroid_index(emb):
+    from vectorsearch_with_hnsw_spark.index.routed import hnsw_build_routed
+
+    return hnsw_build_routed(
+        emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
+        HnswParams(dim=DIM, metric="cosine"),
+        num_partitions=4,
+        assign_n=2,
+    )
+
+
+@pytest.mark.parametrize("layout", ["hash", "centroid"])
+def test_distributed_probe_matches_broadcast_probe(spark, emb, queries, request, layout):
     """The no-driver-collect probe must return exactly the broadcast
-    probe's results (same kernels, same merge)."""
-    a = {(r["query_id"], r["neighbor_id"], r["rnk"])
-         for r in knn_hnsw(index, queries, k=10).collect()}
-    b = {(r["query_id"], r["neighbor_id"], r["rnk"])
-         for r in knn_hnsw_distributed(index, queries, k=10).collect()}
+    probe's results (same kernels, same merge) — also over a replicated
+    layout (centroid routing, assign_n=2: every id lives in two
+    partitions), where the routed probe at n_probe=P visits every
+    partition too and must agree with both."""
+    index = request.getfixturevalue("index" if layout == "hash" else "centroid_index")
+
+    def ranked(df):
+        return {(r["query_id"], r["neighbor_id"], r["rnk"]) for r in df.collect()}
+
+    a = ranked(knn_hnsw(index, queries, k=10))
+    b = ranked(knn_hnsw_distributed(index, queries, k=10))
     assert a == b
+    if layout == "centroid":
+        from vectorsearch_with_hnsw_spark.index.routed import knn_hnsw_routed
+
+        assert ranked(knn_hnsw_routed(index, queries, k=10, n_probe=index.num_partitions)) == a
 
 
 def test_results_sorted_and_self_match(index, queries):

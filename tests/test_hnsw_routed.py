@@ -255,6 +255,38 @@ def test_rebuild_of_routed_index_stays_routed(spark, emb, queries):
     assert got >= {i for i in range(300, 340)}, "appended vectors reachable post-rebuild"
 
 
+@pytest.mark.parametrize("routing", ["centroid", "lsh"])
+def test_routed_build_exposes_kernel_out(spark, emb, queries, routing):
+    """A routed build (and so a routed rebuild) hands back its persisted
+    kernel output, like hnsw_build: the caller can release exactly that
+    cache entry, and the index answers the same afterwards (edges/meta
+    are recomputed from the tables' lineage)."""
+    idx = hnsw_build_routed(
+        emb.filter(F.col("vec_id") < 300).select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+        ),
+        HnswParams(dim=DIM, metric="cosine"),
+        num_partitions=4,
+        routing=routing,
+    )
+
+    def answer(index):
+        return sorted(
+            (r["query_id"], r["neighbor_id"], r["rnk"], r["dist"])
+            for r in knn_hnsw_routed(index, queries, k=5).collect()
+        )
+
+    before = answer(idx)
+    assert idx.kernel_out is not None and idx.kernel_out.is_cached
+    idx.kernel_out.unpersist(blocking=True)
+    assert not idx.kernel_out.is_cached
+    assert answer(idx) == before
+    rebuilt = idx.rebuild()
+    assert rebuilt.routing == routing and rebuilt.kernel_out is not None
+    assert rebuilt.kernel_out.is_cached
+    rebuilt.kernel_out.unpersist(blocking=True)
+
+
 def test_append_offset_clears_routing_space(spark, emb):
     """Appended partition ids must never land inside [0, num_partitions)
     even when trailing build partitions ended up empty (max(partition)

@@ -3,6 +3,7 @@ plus hypothesis-driven property checks of the distance expressions."""
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
@@ -49,6 +50,27 @@ def test_load_or_build_caching(spark, sf_smoke, tmp_path):
     b = load_or_build(spark, path, vecs.limit(1), HnswParams(dim=16))
     assert b.edges.count() == n_edges
     assert b.nodes.count() == 100
+
+
+def test_load_or_build_never_overwrites_a_saved_index(spark, tmp_path):
+    """A saved index that fails to load raises; load_or_build builds
+    only when the path does not exist, so it never replaces the saved
+    tables with a fresh build of whatever vectors it was handed."""
+    from vectorsearch_with_hnsw_spark.index.build import HnswParams, load_or_build
+    from vectorsearch_with_hnsw_spark.operators.synth import synthetic_vectors
+
+    vecs = synthetic_vectors(spark, 100, 16, seed=3)
+    path = str(tmp_path / "saved_idx")
+    load_or_build(spark, path, vecs, HnswParams(dim=16), num_partitions=2)
+    # one unknown key in the params sidecar makes HnswIndex.load raise
+    raw = json.loads(spark.read.json(f"{path}/params").first()["params_json"])
+    raw["unknown_key"] = 1
+    spark.createDataFrame([(json.dumps(raw),)], "params_json string").coalesce(1).write.mode(
+        "overwrite"
+    ).json(f"{path}/params")
+    with pytest.raises(TypeError):
+        load_or_build(spark, path, vecs.limit(5), HnswParams(dim=16))
+    assert spark.read.parquet(f"{path}/nodes").count() == 100
 
 
 # -- hypothesis: expression semantics vs numpy ground truth --------------

@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import json
 from dataclasses import asdict
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,10 +39,16 @@ from ..cache import persist_tracked
 NODES_SCHEMA = "partition int, id long, vec array<float>, level int, deleted boolean"
 EDGES_SCHEMA = "partition int, layer int, src long, dst long"
 META_SCHEMA = "partition int, entry_point long, max_layer int, n_nodes long"
+# the placement record of an index (HnswIndex constructor arguments);
+# all but centroids travel in the saved params JSON
+_LAYOUT = (
+    "num_partitions", "appended_partitions", "n_planes", "replicas", "routing", "assign_n",
+    "centroids",
+)
 
 
 class HnswIndex:
-    """Handle to the three index tables + params.
+    """Handle to the three index tables + params + the placement layout.
 
     ``num_partitions`` records the BUILD modulus. The routed probe must
     route with exactly this value — deriving it from meta.count() is
@@ -63,7 +68,6 @@ class HnswIndex:
         params: HnswParams,
         num_partitions: int | None = None,
         appended_partitions: list[int] | None = None,
-        routed: bool = False,
         n_planes: int | None = None,
         replicas: int = 0,
         routing: str | None = None,
@@ -76,26 +80,43 @@ class HnswIndex:
         self.params = params
         self.num_partitions = num_partitions
         self.appended_partitions = list(appended_partitions or [])
-        # placement of the build partitions: hash (hnsw_build) or LSH
-        # (hnsw_build_routed). rebuild() dispatches on this so a routed
-        # index stays routed across compactions; knn_hnsw_routed refuses
-        # hash-placed indexes (routing over hash placement silently
-        # collapses recall — most true neighbors live in un-probed
-        # partitions).
-        self.routed = bool(routed)
+        # placement of the build partitions: None = hash (hnsw_build),
+        # "centroid" | "lsh" = routed (hnsw_build_routed). rebuild()
+        # dispatches on this so a routed index stays routed across
+        # compactions; knn_hnsw_routed refuses hash-placed indexes
+        # (routing over hash placement silently collapses recall — most
+        # true neighbors live in un-probed partitions).
+        self.routing = routing
         self.n_planes = n_planes
         # routed boundary-replication factor (0 = single home bucket);
         # recorded so rebuild() reproduces the same layout and so
         # consumers know nodes may hold (1+replicas) rows per id
         self.replicas = int(replicas)
-        # routing family of a routed build ("centroid" | "lsh"; None for
-        # hash-placed) + centroid-routing artifacts: the trained cell
-        # centroids (bounded P-row table) and the multi-assignment
-        # factor (nodes hold assign_n rows per id under centroid routing)
-        self.routing = routing if routing else ("lsh" if routed else None)
+        # centroid-routing artifacts: the trained cell centroids
+        # (bounded P-row table) and the multi-assignment factor (nodes
+        # hold assign_n rows per id under centroid routing)
         self.assign_n = int(assign_n)
         self.centroids = centroids
-        self.kernel_out: DataFrame | None = None  # set by hnsw_build
+        # the persisted build-kernel output (set by hnsw_build,
+        # hnsw_build_routed and append_routed), exposed so callers
+        # (bench, repeated rebuilds) can release exactly this cache
+        # entry — edges/meta are projections of it and unpersisting
+        # those is a no-op
+        self.kernel_out: DataFrame | None = None
+        # (centroid matrix, cell ids) probe-side cache of a
+        # centroid-routed handle, filled by index.routed
+        self._centroids_np = None
+
+    @property
+    def routed(self) -> bool:
+        return self.routing is not None
+
+    def _layout(self) -> dict:
+        """The placement state every derived handle carries over. Losing
+        one field is silent: a centroid-placed layout probed with LSH
+        routing, or a wrong routing modulus, collapses recall with no
+        error — so delete/append/append_routed pass all of it."""
+        return {key: getattr(self, key) for key in _LAYOUT}
 
     def save(self, path: str) -> None:
         """Persist as Parquet tables + params sidecar (logical equivalent
@@ -118,9 +139,8 @@ class HnswIndex:
                 payload["n_planes"] = self.n_planes
             if self.replicas:
                 payload["replicas"] = self.replicas
-            if self.routing:
-                payload["routing"] = self.routing
-                payload["assign_n"] = self.assign_n
+            payload["routing"] = self.routing
+            payload["assign_n"] = self.assign_n
             if self.centroids is not None:
                 self.centroids.coalesce(1).write.mode("overwrite").parquet(
                     f"{path}/centroids"
@@ -131,32 +151,22 @@ class HnswIndex:
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "HnswIndex":
         """Re-open a persisted index (reference load(), hsnw_trial.py:
-        344-376, including params defaulting via HnswParams defaults)."""
+        344-376, including params defaulting via HnswParams defaults).
+        An index saved before the routing family was recorded
+        (``routed: true``, no ``routing`` key) is LSH-routed."""
         raw = json.loads(spark.read.json(f"{path}/params").first()["params_json"])
-        num_partitions = raw.pop("num_partitions", None)
-        appended = raw.pop("appended_partitions", None)
-        routed = raw.pop("routed", False)
-        n_planes = raw.pop("n_planes", None)
-        replicas = raw.pop("replicas", 0)
-        routing = raw.pop("routing", None)
-        assign_n = raw.pop("assign_n", 2)
+        layout = {key: raw.pop(key) for key in _LAYOUT if key in raw}
+        if raw.pop("routed", False):
+            layout.setdefault("routing", "lsh")
         params = HnswParams(**raw)
-        centroids = (
-            spark.read.parquet(f"{path}/centroids") if routing == "centroid" else None
-        )
+        if layout.get("routing") == "centroid":
+            layout["centroids"] = spark.read.parquet(f"{path}/centroids")
         return cls(
             spark.read.parquet(f"{path}/nodes"),
             spark.read.parquet(f"{path}/edges"),
             spark.read.parquet(f"{path}/meta"),
             params,
-            num_partitions=num_partitions,
-            appended_partitions=appended,
-            routed=routed,
-            n_planes=n_planes,
-            replicas=replicas,
-            routing=routing,
-            assign_n=assign_n,
-            centroids=centroids,
+            **layout,
         )
 
     def delete(self, ids_df: DataFrame) -> "HnswIndex":
@@ -169,29 +179,16 @@ class HnswIndex:
             .withColumn("deleted", F.col("deleted") | F.col("_del_id").isNotNull())
             .drop("_del_id")
         )
-        return HnswIndex(
-            nodes, self.edges, self.meta, self.params,
-            num_partitions=self.num_partitions,
-            appended_partitions=self.appended_partitions,
-            routed=self.routed,
-            n_planes=self.n_planes,
-            replicas=self.replicas,
-            # routing family + artifacts MUST survive: without them the
-            # constructor defaults a routed index back to routing='lsh',
-            # and a centroid-placed layout would be probed with LSH
-            # routing (recall collapses with no error)
-            routing=self.routing,
-            assign_n=self.assign_n,
-            centroids=self.centroids,
-        )
+        return HnswIndex(nodes, self.edges, self.meta, self.params, **self._layout())
 
     def rebuild(self, num_partitions: int | None = None) -> "HnswIndex":
         """Compaction: rebuild from the alive subset only (reference
         rebuild(), hsnw_trial.py:381-389). Dispatches on placement: a
         routed-built index rebuilds through hnsw_build_routed (same
-        n_planes), so appended hash-placed partitions are re-mixed into
-        the LSH layout and knn_hnsw_routed keeps its recall contract; a
-        hash-built index rebuilds through hnsw_build."""
+        routing family, n_planes, replicas and assign_n; centroids are
+        re-trained), so appended hash-placed partitions are re-mixed into
+        the routed layout and knn_hnsw_routed keeps its recall contract;
+        a hash-built index rebuilds through hnsw_build."""
         # dropDuplicates on id: a replicated routed layout stores each
         # vector in several partitions; rebuilding from raw nodes rows
         # would compound the replication factor every rebuild
@@ -208,8 +205,8 @@ class HnswIndex:
                 alive, self.params, num_partitions=nparts,
                 n_planes=int(self.n_planes or 8),
                 replicas=self.replicas,
-                routing=self.routing or "lsh",
-                assign_n=int(getattr(self, "assign_n", 2) or 2),
+                routing=self.routing,
+                assign_n=self.assign_n,
             )
         return hnsw_build(alive, self.params, num_partitions=nparts)
 
@@ -224,13 +221,14 @@ class HnswIndex:
 
         ``num_partitions`` (the routing modulus) is deliberately NOT
         bumped: the fresh partitions are hash-placed by hnsw_build, not
-        LSH-placed, so folding them into the modulus would misroute
-        every routed probe (wrong pmod) AND leave the appended vectors
+        routed, so folding them into the modulus would misroute every
+        routed probe (wrong pmod) AND leave the appended vectors
         unreachable by routing. They are recorded in
         ``appended_partitions`` instead; knn_hnsw_routed probes them
-        unconditionally (probe-all for the appended tail). For a
-        ROUTED index under continuous ingestion prefer
-        ``index.routed.append_routed``: it LSH-places the batch into
+        unconditionally (probe-all for the appended tail), while the
+        ORIGINAL build partitions keep being routed by the family that
+        placed them. For a ROUTED index under continuous ingestion
+        prefer ``index.routed.append_routed``: it places the batch into
         the existing layout and rebuilds only the touched partitions,
         so the routed probe bound never grows with append count."""
         # offset from the NODES table: meta lacks rows for 0/1-node
@@ -245,24 +243,16 @@ class HnswIndex:
         fresh = hnsw_build(vectors_df, self.params, num_partitions=num_partitions,
                            id_col=id_col, vec_col=vec_col)
         shift = lambda df: df.withColumn("partition", (F.col("partition") + F.lit(offset)).cast("int"))  # noqa: E731
+        layout = dict(
+            self._layout(),
+            appended_partitions=self.appended_partitions + [offset + i for i in range(num_partitions)],
+        )
         return HnswIndex(
             self.nodes.unionByName(shift(fresh.nodes)),
             self.edges.unionByName(shift(fresh.edges)),
             self.meta.unionByName(shift(fresh.meta)),
             self.params,
-            num_partitions=self.num_partitions,
-            appended_partitions=self.appended_partitions
-            + [int(offset) + i for i in range(num_partitions)],
-            routed=self.routed,
-            n_planes=self.n_planes,
-            replicas=self.replicas,
-            # preserve the routing family (see delete()): the appended
-            # tail is hash-placed and probed unconditionally, but the
-            # ORIGINAL build partitions must keep being routed by the
-            # family that placed them
-            routing=self.routing,
-            assign_n=self.assign_n,
-            centroids=self.centroids,
+            **layout,
         )
 
 
@@ -275,13 +265,12 @@ def load_or_build(
 ) -> HnswIndex:
     """Reuse a persisted index if present, else build and save — the
     reference's try-load / except-build caching pattern (CIFAR notebook
-    cell 5)."""
-    try:
-        return HnswIndex.load(spark, path)
-    except Exception:
-        idx = hnsw_build(vectors_df, params, num_partitions=num_partitions)
-        idx.save(path)
-        return HnswIndex.load(spark, path)
+    cell 5). Builds only when ``path`` does not exist: a saved index that
+    fails to load raises, and is never overwritten by a fresh build."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(jpath):
+        hnsw_build(vectors_df, params, num_partitions=num_partitions).save(path)
+    return HnswIndex.load(spark, path)
 
 
 def hnsw_build(
@@ -291,27 +280,41 @@ def hnsw_build(
     id_col: str = "id",
     vec_col: str = "vec",
 ) -> HnswIndex:
-    """Batch-build a partitioned HNSW index.
-
-    One hash shuffle assigns rows to partitions; each partition's kernel
-    is a single Arrow exchange + numpy build. Levels derive from global
-    ids (order-independent), so the result is deterministic under any
-    cluster layout.
-    """
-    pickled = params  # dataclass is picklable into the closure
-
+    """Batch-build a partitioned HNSW index: one hash shuffle assigns
+    rows to partitions, then ``build_graphs`` builds each partition's
+    graph."""
     src = vectors_df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<float>").alias("vec"),
+        # hash the caller's raw id column, not the cast long: hash(int)
+        # differs from hash(long), and partitions must not move
         (F.pmod(F.hash(F.col(id_col)), F.lit(num_partitions))).alias("partition"),
     )
+    nodes, edges, meta, kernel_out = build_graphs(src, params)
+    idx = HnswIndex(nodes, edges, meta, params, num_partitions=num_partitions)
+    idx.kernel_out = kernel_out
+    return idx
+
+
+def build_graphs(
+    src: DataFrame, params: HnswParams
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The partition build kernel, shared by every build path: ``src``
+    holds the placed rows (id, vec, partition), and each partition's
+    local graph is built by a single Arrow exchange + numpy build
+    inside ``applyInPandas``. Levels derive from global ids
+    (order-independent), so the result is deterministic under any
+    cluster layout.
+
+    Returns (nodes, edges, meta, kernel_out). The kernel output is
+    persisted — edges and meta both derive from it, and at scale you'd
+    rather not run the build twice — and returned so the caller can
+    release exactly that cache entry."""
 
     def build_partition(pdf: pd.DataFrame) -> pd.DataFrame:
         part = int(pdf["partition"].iloc[0])
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["vec"]), dtype=np.float32)
-        idx = LocalHNSW(pickled)
-        idx.add_batch(ids, mat)
+        idx = LocalHNSW(params)
+        idx.add_batch(pdf["id"].to_numpy(dtype=np.int64), np.array(list(pdf["vec"]), dtype=np.float32))
         layer, s, t = idx.edges()
         return pd.DataFrame(
             {
@@ -324,34 +327,23 @@ def hnsw_build(
             }
         )
 
-    edges_raw = src.groupBy("partition").applyInPandas(
+    kernel_out = src.groupBy("partition").applyInPandas(
         build_partition, EDGES_SCHEMA + ", entry_point long, max_layer int"
-    )
-    # Cache the kernel output: edges + meta both derive from it, and at
-    # scale you'd rather not run the build twice.
-    edges_raw = edges_raw.transform(persist_tracked)
-    edges = edges_raw.select("partition", "layer", "src", "dst")
-    meta = (
-        edges_raw.groupBy("partition")
-        .agg(
-            F.first("entry_point").alias("entry_point"),
-            F.first("max_layer").alias("max_layer"),
-            F.countDistinct("src").alias("n_nodes"),
-        )
+    ).transform(persist_tracked)
+    edges = kernel_out.select("partition", "layer", "src", "dst")
+    meta = kernel_out.groupBy("partition").agg(
+        F.first("entry_point").alias("entry_point"),
+        F.first("max_layer").alias("max_layer"),
+        F.countDistinct("src").alias("n_nodes"),
     )
     nodes = src.select(
         "partition",
         "id",
         "vec",
-        _level_expr(F.col("id"), pickled).alias("level"),
+        _level_expr(F.col("id"), params).alias("level"),
         F.lit(False).alias("deleted"),
     )
-    idx = HnswIndex(nodes, edges, meta, params, num_partitions=num_partitions)
-    # the persisted kernel output, exposed so callers (bench, repeated
-    # rebuilds) can release exactly this cache entry — edges/meta are
-    # projections of it and unpersisting those is a no-op
-    idx.kernel_out = edges_raw
-    return idx
+    return nodes, edges, meta, kernel_out
 
 
 def _level_expr(id_col, params: HnswParams):

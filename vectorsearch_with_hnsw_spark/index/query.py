@@ -8,8 +8,13 @@ global top-k. Shuffle volume of the merge is O(P * Q * k) — independent
 of index size, so the plan survives a 100x scale-up (P grows, per-task
 work stays constant).
 
-Queries are broadcast (bounded artifact — same rule as the label join).
-Semantics match the reference search (hsnw_trial.py:267-294): greedy
+Three probe modes differ only in how queries reach the partitions:
+broadcast to every partition (``knn_hnsw`` — bounded artifact, same rule
+as the label join), replicated to every partition by a join
+(``knn_hnsw_distributed``) or routed to candidate partitions
+(``index.routed.knn_hnsw_routed``); the latter two go through
+``probe_placed``. All three run one kernel (``_probe_kernel``) and one
+merge (``_merge_topk``). Semantics match the reference search (hsnw_trial.py:267-294): greedy
 descent, ef-search at layer 0 with ef = max(ef, k), tombstones skipped,
 results ascending, k-truncated.
 """
@@ -25,6 +30,104 @@ from ..operators.knn import topk_per_group
 from .build import HnswIndex
 from .local_hnsw import LocalHNSW
 
+PROBE_SCHEMA = "query_id long, neighbor_id long, dist double"
+
+
+def _probe_kernel(index: HnswIndex, k: int, ef: int | None):
+    """The partition probe kernel every probe path runs. Collects +
+    broadcasts the meta table once and returns
+    ``probe(nodes_pdf, edges_pdf, qids, qvecs)``: it rebuilds the
+    partition's local graph from its nodes/edges rows and emits each
+    query's per-partition top-k as (query_id, neighbor_id, dist)."""
+    params = index.params
+    meta_rows = {
+        int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
+        for r in index.meta.collect()
+    }
+    bmeta = index.nodes.sparkSession.sparkContext.broadcast(meta_rows)
+
+    def probe(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame, qids, qvecs) -> pd.DataFrame:
+        out_q, out_n, out_d = [], [], []
+        if len(nodes_pdf) and len(qids):
+            part = int(nodes_pdf["partition"].iloc[0])
+            entry_point, max_layer = bmeta.value.get(part, (None, -1))
+            idx = LocalHNSW.from_tables(
+                params,
+                nodes_pdf["id"].to_numpy(dtype=np.int64),
+                np.array(list(nodes_pdf["vec"]), dtype=np.float32),
+                nodes_pdf["level"].to_numpy(dtype=np.int32),
+                nodes_pdf["deleted"].to_numpy(dtype=bool),
+                edges_pdf["layer"].to_numpy(dtype=np.int32),
+                edges_pdf["src"].to_numpy(dtype=np.int64),
+                edges_pdf["dst"].to_numpy(dtype=np.int64),
+                entry_point,
+                max_layer,
+            )
+            for qid, qv in zip(qids, qvecs):
+                for nid, d in idx.search(qv, k=k, ef=ef):
+                    out_q.append(qid)
+                    out_n.append(nid)
+                    out_d.append(d)
+        return pd.DataFrame(
+            {
+                "query_id": np.array(out_q, dtype=np.int64),
+                "neighbor_id": np.array(out_n, dtype=np.int64),
+                "dist": np.array(out_d, dtype=np.float64),
+            }
+        )
+
+    return probe
+
+
+def _ranked(df: DataFrame, k: int) -> DataFrame:
+    return topk_per_group(df, ["query_id"], ["dist", "neighbor_id"], k).select(
+        "query_id", "neighbor_id", "dist", "rnk"
+    )
+
+
+def _merge_topk(partial: DataFrame, k: int) -> DataFrame:
+    """Global top-k from the per-partition partial results.
+    dropDuplicates: a replicated routed layout (or probe-all over it)
+    surfaces the same (query, neighbor) hit from several partitions
+    with identical dist; keep one before ranking so replicas never
+    crowd distinct neighbors out of the top-k. The partial frame is
+    O(P*Q*k) — the dedup shuffle is tiny and shares the window key."""
+    return _ranked(partial.dropDuplicates(["query_id", "neighbor_id"]), k)
+
+
+def probe_placed(index: HnswIndex, placed: DataFrame, k: int, ef: int | None) -> DataFrame:
+    """Probe queries already placed as (id, vec, partition) rows: they
+    ride the same cogroup as the index nodes, tagged by a marker
+    column, so each partition's kernel sees exactly the queries placed
+    on it. Returns (query_id, neighbor_id, dist, rnk)."""
+    tagged = index.nodes.select(
+        "partition", "id", "vec", "level", "deleted", F.lit(False).alias("is_query")
+    ).unionByName(
+        placed.select(
+            "partition",
+            "id",
+            "vec",
+            F.lit(0).alias("level"),
+            F.lit(False).alias("deleted"),
+            F.lit(True).alias("is_query"),
+        )
+    )
+    kernel = _probe_kernel(index, k, ef)
+
+    def probe(mixed_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
+        is_q = mixed_pdf["is_query"].to_numpy(dtype=bool)
+        queries_pdf = mixed_pdf[is_q]
+        return kernel(
+            mixed_pdf[~is_q], edges_pdf, queries_pdf["id"].to_numpy(dtype=np.int64), queries_pdf["vec"]
+        )
+
+    partial = (
+        tagged.groupBy("partition")
+        .cogroup(index.edges.groupBy("partition"))
+        .applyInPandas(probe, PROBE_SCHEMA)
+    )
+    return _merge_topk(partial, k)
+
 
 def knn_hnsw_distributed(
     index: HnswIndex,
@@ -38,93 +141,16 @@ def knn_hnsw_distributed(
     batches too large to broadcast (millions of rows at 100 TB scale).
 
     Queries are replicated across index partitions by an explode join
-    (each query visits every partition, exactly the probe-all contract),
-    then ride the same cogroup as the index nodes, tagged by a marker
-    column. Shuffle volume: |Q| * P query rows + one pass of the index
-    tables; the merge stays O(P * Q * k).
+    (each query visits every partition, exactly the probe-all contract)
+    and probed by ``probe_placed``. Shuffle volume: |Q| * P query rows +
+    one pass of the index tables; the merge stays O(P * Q * k).
     """
-    params = index.params
     parts = index.meta.select("partition")
     q_rep = queries_df.select(
         F.col(query_id_col).alias("id"),
         F.col(query_vec_col).cast("array<float>").alias("vec"),
     ).crossJoin(F.broadcast(parts))
-    tagged_nodes = index.nodes.select(
-        "partition", "id", "vec", "level", "deleted", F.lit(False).alias("is_query")
-    ).unionByName(
-        q_rep.select(
-            "partition",
-            "id",
-            "vec",
-            F.lit(0).alias("level"),
-            F.lit(False).alias("deleted"),
-            F.lit(True).alias("is_query"),
-        )
-    )
-    meta_rows = {
-        int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
-        for r in index.meta.collect()
-    }
-    spark = index.nodes.sparkSession
-    bmeta = spark.sparkContext.broadcast(meta_rows)
-
-    def probe(mixed_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype="int64"), "neighbor_id": pd.Series(dtype="int64"),
-             "dist": pd.Series(dtype="float64")}
-        )
-        if len(mixed_pdf) == 0:
-            return empty
-        is_q = mixed_pdf["is_query"].to_numpy(dtype=bool)
-        nodes_pdf = mixed_pdf[~is_q]
-        queries_pdf = mixed_pdf[is_q]
-        if len(nodes_pdf) == 0 or len(queries_pdf) == 0:
-            return empty
-        part = int(nodes_pdf["partition"].iloc[0])
-        entry_point, max_layer = bmeta.value.get(part, (None, -1))
-        idx = LocalHNSW.from_tables(
-            params,
-            nodes_pdf["id"].to_numpy(dtype=np.int64),
-            np.array(list(nodes_pdf["vec"]), dtype=np.float32),
-            nodes_pdf["level"].to_numpy(dtype=np.int32),
-            nodes_pdf["deleted"].to_numpy(dtype=bool),
-            edges_pdf["layer"].to_numpy(dtype=np.int32),
-            edges_pdf["src"].to_numpy(dtype=np.int64),
-            edges_pdf["dst"].to_numpy(dtype=np.int64),
-            entry_point,
-            max_layer,
-        )
-        out_q, out_n, out_d = [], [], []
-        for qid, qv in zip(
-            queries_pdf["id"].to_numpy(dtype=np.int64),
-            queries_pdf["vec"],
-        ):
-            for nid, d in idx.search(np.asarray(qv, dtype=np.float32), k=k, ef=ef):
-                out_q.append(qid)
-                out_n.append(nid)
-                out_d.append(d)
-        return pd.DataFrame(
-            {
-                "query_id": np.array(out_q, dtype=np.int64),
-                "neighbor_id": np.array(out_n, dtype=np.int64),
-                "dist": np.array(out_d, dtype=np.float64),
-            }
-        )
-
-    partial = (
-        tagged_nodes.groupBy("partition")
-        .cogroup(index.edges.groupBy("partition"))
-        .applyInPandas(probe, "query_id long, neighbor_id long, dist double")
-    )
-    # dropDuplicates: a replicated routed layout (or probe-all over it)
-    # surfaces the same (query, neighbor) hit from several partitions
-    # with identical dist; keep one before ranking so replicas never
-    # crowd distinct neighbors out of the top-k. The partial frame is
-    # O(P*Q*k) — the dedup shuffle is tiny and shares the window key.
-    partial = partial.dropDuplicates(["query_id", "neighbor_id"])
-    return topk_per_group(partial, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", "rnk"
-    )
+    return probe_placed(index, q_rep, k, ef)
 
 
 def knn_hnsw(
@@ -159,80 +185,31 @@ def knn_hnsw(
     if allowed_ids is not None:
         from ..operators.knn import prefilter_rows
 
-        params = index.params
         boosted_k = k * filter_boost
         raw = knn_hnsw(
             index,
             queries_df,
             k=boosted_k,
-            ef=max(ef or params.ef_search, boosted_k),
+            ef=max(ef or index.params.ef_search, boosted_k),
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
         ).select("query_id", "neighbor_id", "dist")
-        kept = prefilter_rows(raw, "neighbor_id", None, allowed_ids)
-        return topk_per_group(kept, ["query_id"], ["dist", "neighbor_id"], k).select(
-            "query_id", "neighbor_id", "dist", "rnk"
-        )
-    params = index.params
+        return _ranked(prefilter_rows(raw, "neighbor_id", None, allowed_ids), k)
     qrows = queries_df.select(query_id_col, query_vec_col).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    spark = index.nodes.sparkSession
-    bq = spark.sparkContext.broadcast((qids, qmat))
-    meta_rows = {
-        int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
-        for r in index.meta.collect()
-    }
-    bmeta = spark.sparkContext.broadcast(meta_rows)
+    bq = index.nodes.sparkSession.sparkContext.broadcast((qids, qmat))
+    kernel = _probe_kernel(index, k, ef)
 
     def probe(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(nodes_pdf) == 0:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "dist": []}).astype(
-                {"query_id": np.int64, "neighbor_id": np.int64, "dist": np.float64}
-            )
-        part = int(nodes_pdf["partition"].iloc[0])
-        entry_point, max_layer = bmeta.value.get(part, (None, -1))
-        idx = LocalHNSW.from_tables(
-            params,
-            nodes_pdf["id"].to_numpy(dtype=np.int64),
-            np.array(list(nodes_pdf["vec"]), dtype=np.float32),
-            nodes_pdf["level"].to_numpy(dtype=np.int32),
-            nodes_pdf["deleted"].to_numpy(dtype=bool),
-            edges_pdf["layer"].to_numpy(dtype=np.int32),
-            edges_pdf["src"].to_numpy(dtype=np.int64),
-            edges_pdf["dst"].to_numpy(dtype=np.int64),
-            entry_point,
-            max_layer,
-        )
-        ids_b, qm = bq.value
-        out_q, out_n, out_d = [], [], []
-        for qid, qv in zip(ids_b, qm):
-            for nid, d in idx.search(qv, k=k, ef=ef):
-                out_q.append(qid)
-                out_n.append(nid)
-                out_d.append(d)
-        return pd.DataFrame(
-            {
-                "query_id": np.array(out_q, dtype=np.int64),
-                "neighbor_id": np.array(out_n, dtype=np.int64),
-                "dist": np.array(out_d, dtype=np.float64),
-            }
-        )
+        return kernel(nodes_pdf, edges_pdf, *bq.value)
 
     partial = (
         index.nodes.groupBy("partition")
         .cogroup(index.edges.groupBy("partition"))
-        .applyInPandas(probe, "query_id long, neighbor_id long, dist double")
+        .applyInPandas(probe, PROBE_SCHEMA)
     )
-    # dropDuplicates: a replicated routed layout (or probe-all over it)
-    # surfaces the same (query, neighbor) hit from several partitions
-    # with identical dist; keep one before ranking so replicas never
-    # crowd distinct neighbors out of the top-k. The partial frame is
-    # O(P*Q*k) — the dedup shuffle is tiny and shares the window key.
-    partial = partial.dropDuplicates(["query_id", "neighbor_id"])
-    return topk_per_group(partial, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", "rnk"
-    )
+    return _merge_topk(partial, k)
 
 
 def knn_hnsw_rescored(
@@ -298,6 +275,4 @@ def knn_hnsw_rescored(
         .join(base, "neighbor_id")
         .select("query_id", "neighbor_id", dist(F.col("_vec"), F.col("_qvec")).alias("dist"))
     )
-    return topk_per_group(pairs, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", "rnk"
-    )
+    return _ranked(pairs, k)

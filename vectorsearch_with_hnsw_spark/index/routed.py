@@ -29,16 +29,16 @@ further with NN-descent rounds.
 
 from __future__ import annotations
 
-import numpy as np
+from collections.abc import Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.ann import hyperplane_ints, lsh_bucket
-from ..operators.knn import topk_per_group
-from .build import EDGES_SCHEMA, HnswIndex, HnswParams
-from .local_hnsw import LocalHNSW
-from ..cache import persist_tracked
+from .build import HnswIndex, HnswParams, build_graphs
+from .query import probe_placed
 
 
 def default_n_probe(num_partitions: int) -> int:
@@ -122,29 +122,24 @@ def _nearest_cells(X: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:
     return order.astype(np.int32)
 
 
-def _assign_centroid_partitions(
-    vectors_df: DataFrame,
-    centroids: np.ndarray,
-    assign_n: int,
-    id_col: str,
-    vec_col: str,
+def _cell_rows(
+    rows: DataFrame,
+    cells: tuple[np.ndarray, np.ndarray],
+    n: int,
+    extra: Sequence[int] = (),
 ) -> DataFrame:
-    """(id, vec float32, partition) with each vector exploded to its
-    ``assign_n`` nearest cells — the centroid twin of the LSH
-    multi-assignment projection. One broadcast + one Arrow map pass;
-    no shuffle here (the build's groupBy supplies it)."""
-    import pandas as pd
-
-    spark = vectors_df.sparkSession
-    bc = spark.sparkContext.broadcast(centroids)
-
-    narrow = vectors_df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<float>").alias("vec"),
-    )
+    """(id, vec, partition) with each (id, vec) row exploded to the cell
+    ids of its ``n`` nearest centroids, plus the ``extra`` partitions —
+    the centroid twin of the LSH multi-assignment projection, for index
+    rows (n = assign_n) and query rows (n = n_probe, extra = the
+    appended partitions) alike. One broadcast + one Arrow map pass; no
+    shuffle here (the build's groupBy / the probe's cogroup supplies
+    it)."""
+    C, cell_ids = cells
+    bc = rows.sparkSession.sparkContext.broadcast((C, cell_ids, np.array(extra, dtype=np.int32)))
 
     def assign(it):
-        C = bc.value
+        Cv, cells_v, extra_v = bc.value
         for pdf in it:
             if len(pdf) == 0:
                 yield pd.DataFrame({"id": [], "vec": [], "partition": []}).astype(
@@ -152,18 +147,21 @@ def _assign_centroid_partitions(
                 )
                 continue
             X = np.array(list(pdf["vec"]), dtype=np.float64)
-            cells = _nearest_cells(X, C, assign_n)
-            n_rep = cells.shape[1]
-            out = pd.DataFrame(
+            parts = cells_v[_nearest_cells(X, Cv, n)]  # map row index -> cell id
+            if len(extra_v):
+                parts = np.concatenate(
+                    [parts, np.broadcast_to(extra_v, (len(parts), len(extra_v)))], axis=1
+                )
+            n_rep = parts.shape[1]
+            yield pd.DataFrame(
                 {
                     "id": np.repeat(pdf["id"].to_numpy(dtype=np.int64), n_rep),
                     "vec": np.repeat(pdf["vec"].to_numpy(), n_rep),
-                    "partition": cells.reshape(-1),
+                    "partition": parts.reshape(-1),
                 }
             )
-            yield out
 
-    return narrow.mapInPandas(assign, "id long, vec array<float>, partition int")
+    return rows.mapInPandas(assign, "id long, vec array<float>, partition int")
 
 
 def _assignment_exprs(
@@ -205,6 +203,37 @@ def _assignment_exprs(
     return dots, bucket, parts
 
 
+def _place(
+    vectors_df: DataFrame,
+    dim: int,
+    routing: str,
+    cells: tuple[np.ndarray, np.ndarray] | None,
+    assign_n: int,
+    num_partitions: int,
+    n_planes: int,
+    replicas: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The routed placement of a vector batch, as (id, vec, partition)
+    rows: its ``assign_n`` nearest centroid ``cells`` (centroid routing)
+    or its LSH home bucket + ``replicas`` flip buckets mod
+    ``num_partitions`` (LSH routing). The build and append_routed both
+    place through here, so an appended vector lands exactly where a
+    rebuild would put it (given the same centroids)."""
+    narrow = [F.col(id_col).cast("long").alias("id"), F.col(vec_col).cast("array<float>").alias("vec")]
+    if routing == "centroid":
+        return _cell_rows(vectors_df.select(*narrow), cells, assign_n)
+    dots, bucket, parts = _assignment_exprs(
+        f"cast(`{vec_col}` as array<double>)", dim, n_planes, num_partitions, replicas
+    )
+    return (
+        vectors_df.select(*narrow, F.expr(dots).alias("_dots"))
+        .withColumn("_bucket", F.expr(bucket))
+        .select("id", "vec", F.explode(F.expr(parts)).alias("partition"))
+    )
+
+
 def hnsw_build_routed(
     vectors_df: DataFrame,
     params: HnswParams,
@@ -216,9 +245,9 @@ def hnsw_build_routed(
     routing: str = "centroid",
     assign_n: int = 2,
 ) -> HnswIndex:
-    """Same kernel build as hnsw_build, but the partitioner co-locates
-    likely neighbors (see module docstring for the two routing families
-    and why centroid is the default).
+    """Same kernel build as hnsw_build (``build_graphs``), but the
+    partitioner co-locates likely neighbors (see module docstring for
+    the two routing families and why centroid is the default).
 
     ``routing="centroid"``: partition = one of the vector's ``assign_n``
     nearest k-means cells (SPANN multi-assignment, ``assign_n``x
@@ -230,77 +259,27 @@ def hnsw_build_routed(
     restores the single-home layout). Either way the probe merge
     deduplicates (query, neighbor) pairs, so results are
     replication-independent."""
-    import numpy as np
-    import pandas as pd
-
     if routing not in ("centroid", "lsh"):
         raise ValueError(f"unknown routing {routing!r}; expected 'centroid' or 'lsh'")
-    pickled = params
-    centroids_df = None
+    cells = centroids_df = None
     if routing == "centroid":
         C = _train_centroids(vectors_df, num_partitions, id_col, vec_col, dim=params.dim)
-        src = _assign_centroid_partitions(vectors_df, C, assign_n, id_col, vec_col)
-        spark = vectors_df.sparkSession
-        centroids_df = spark.createDataFrame(
+        cells = (C, np.arange(len(C), dtype=np.int32))
+        centroids_df = vectors_df.sparkSession.createDataFrame(
             [(int(i), [float(v) for v in C[i]]) for i in range(len(C))],
             "cell int, centroid array<double>",
         )
-    else:
-        dots, bucket, parts = _assignment_exprs(
-            f"cast(`{vec_col}` as array<double>)",
-            params.dim,
-            n_planes,
-            num_partitions,
-            replicas,
-        )
-        src = (
-            vectors_df.select(
-                F.col(id_col).cast("long").alias("id"),
-                F.col(vec_col).cast("array<float>").alias("vec"),
-                F.expr(dots).alias("_dots"),
-            )
-            .withColumn("_bucket", F.expr(bucket))
-            .select("id", "vec", F.explode(F.expr(parts)).alias("partition"))
-        )
-
-    def build_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["partition"].iloc[0])
-        idx = LocalHNSW(pickled)
-        idx.add_batch(pdf["id"].to_numpy(dtype=np.int64), np.array(list(pdf["vec"]), dtype=np.float32))
-        layer, s, t = idx.edges()
-        return pd.DataFrame(
-            {
-                "partition": np.full(len(layer), part, dtype=np.int32),
-                "layer": layer,
-                "src": s,
-                "dst": t,
-                "entry_point": np.full(len(layer), idx.ids[idx.entry_point], dtype=np.int64),
-                "max_layer": np.full(len(layer), idx.max_layer, dtype=np.int32),
-            }
-        )
-
-    edges_raw = src.groupBy("partition").applyInPandas(
-        build_partition, EDGES_SCHEMA + ", entry_point long, max_layer int"
-    ).transform(persist_tracked)
-    edges = edges_raw.select("partition", "layer", "src", "dst")
-    meta = edges_raw.groupBy("partition").agg(
-        F.first("entry_point").alias("entry_point"),
-        F.first("max_layer").alias("max_layer"),
-        F.countDistinct("src").alias("n_nodes"),
-    )
-    from .build import _level_expr
-
-    nodes = src.select(
-        "partition", "id", "vec", _level_expr(F.col("id"), pickled).alias("level"), F.lit(False).alias("deleted")
-    )
+    src = _place(vectors_df, params.dim, routing, cells, assign_n, num_partitions,
+                 n_planes, replicas, id_col, vec_col)
+    nodes, edges, meta, kernel_out = build_graphs(src, params)
     idx = HnswIndex(
         nodes, edges, meta, params, num_partitions=num_partitions,
-        routed=True, n_planes=n_planes, replicas=replicas,
+        n_planes=n_planes, replicas=replicas,
         routing=routing, assign_n=assign_n, centroids=centroids_df,
     )
-    if routing == "centroid":
-        # seed the probe-side cache — the build already holds C
-        idx._centroids_np = (C, np.arange(len(C), dtype=np.int32))
+    idx.kernel_out = kernel_out
+    # seed the probe-side cache — the build already holds the centroids
+    idx._centroids_np = cells
     return idx
 
 
@@ -330,15 +309,13 @@ def _centroids_np(index: HnswIndex) -> tuple[np.ndarray, np.ndarray]:
     """(centroid matrix, cell ids) for a centroid-routed index, collected
     once per handle and cached — the table is bounded (P rows), but the
     collect is still a Spark job the probe shouldn't pay per call."""
-    cached = getattr(index, "_centroids_np", None)
-    if cached is None:
+    if index._centroids_np is None:
         rows = index.centroids.orderBy("cell").collect()
-        cached = (
+        index._centroids_np = (
             np.array([r["centroid"] for r in rows], dtype=np.float64),
             np.array([r["cell"] for r in rows], dtype=np.int32),
         )
-        index._centroids_np = cached
-    return cached
+    return index._centroids_np
 
 
 def knn_hnsw_routed(
@@ -354,7 +331,9 @@ def knn_hnsw_routed(
     """Multi-probe routed query: each query is replicated only to its
     candidate partitions — ``n_probe`` nearest centroid cells
     (centroid routing; default ~4.5*sqrt(P), sublinear in P) or the
-    Hamming<=2 bucket ball (LSH routing; <= 37 independent of P).
+    Hamming<=2 bucket ball (LSH routing; <= 37 independent of P) — and
+    probed by ``query.probe_placed`` (the kernel and merge every probe
+    path shares).
 
     Partitions added by ``HnswIndex.append`` are hash-placed, outside
     the routing space — every query probes ALL of them in addition
@@ -366,147 +345,45 @@ def knn_hnsw_routed(
     over hash placement silently probes partitions unrelated to the
     query's true neighbors — at large P recall collapses with no
     error. Use ``knn_hnsw`` (probe-all) for hash-placed indexes."""
-    import numpy as np
-    import pandas as pd
-
-    if not getattr(index, "routed", False):
+    if not index.routed:
         raise ValueError(
             "knn_hnsw_routed requires an index built by hnsw_build_routed "
             "(routed placement); this index is hash-placed — use knn_hnsw "
             "(probe-all) or rebuild with hnsw_build_routed"
         )
-    params = index.params
     # route with the BUILD modulus: meta.count() undercounts when a
     # build partition carried 0/1 nodes (no edges -> no meta row), and a
     # wrong modulus silently routes queries away from their home bucket
     num_partitions = index.num_partitions
     if num_partitions is None:
         num_partitions = index.meta.count()
-    appended = getattr(index, "appended_partitions", None) or []
-    routing = getattr(index, "routing", None) or "lsh"
-    if routing == "centroid":
-        C, cell_ids = _centroids_np(index)
+    appended = index.appended_partitions
+    if index.routing == "centroid":
         R = int(n_probe) if n_probe is not None else default_n_probe(int(num_partitions))
-        spark = queries_df.sparkSession
-        bc = spark.sparkContext.broadcast((C, cell_ids, np.array(appended, dtype=np.int32)))
         nq = queries_df.select(
             F.col(query_id_col).cast("long").alias("id"),
             F.col(query_vec_col).cast("array<float>").alias("vec"),
         )
-
-        def route_q(it):
-            Cv, cells_v, app_v = bc.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    yield pd.DataFrame({"id": [], "vec": [], "partition": []}).astype(
-                        {"id": "int64", "partition": "int32"}
-                    )
-                    continue
-                X = np.array(list(pdf["vec"]), dtype=np.float64)
-                near = _nearest_cells(X, Cv, R)
-                parts = cells_v[near]  # map row index -> cell id
-                if len(app_v):
-                    parts = np.concatenate(
-                        [parts, np.broadcast_to(app_v, (len(parts), len(app_v)))],
-                        axis=1,
-                    )
-                n_rep = parts.shape[1]
-                yield pd.DataFrame(
-                    {
-                        "id": np.repeat(pdf["id"].to_numpy(dtype=np.int64), n_rep),
-                        "vec": np.repeat(pdf["vec"].to_numpy(), n_rep),
-                        "partition": parts.reshape(-1),
-                    }
-                )
-
-        routed = nq.mapInPandas(route_q, "id long, vec array<float>, partition int")
+        placed = _cell_rows(nq, _centroids_np(index), R, appended)
     else:
         # route with the BUILD's plane count: a query hashed with a
         # different hyperplane set than the build lands in an unrelated
         # bucket (explicit arg still wins for experiments)
         if n_planes is None:
-            n_planes = int(getattr(index, "n_planes", None) or 8)
+            n_planes = int(index.n_planes or 8)
         route = route_partitions(
-            f"cast(`{query_vec_col}` as array<double>)", params.dim, int(num_partitions), n_planes
+            f"cast(`{query_vec_col}` as array<double>)", index.params.dim, int(num_partitions), n_planes
         )
         if appended:
             route = F.array_distinct(
                 F.concat(route, F.array(*[F.lit(int(p)).cast("int") for p in appended]))
             )
-        routed = queries_df.select(
+        placed = queries_df.select(
             F.col(query_id_col).alias("id"),
             F.col(query_vec_col).cast("array<float>").alias("vec"),
             F.explode(route).alias("partition"),
         )
-    tagged = index.nodes.select(
-        "partition", "id", "vec", "level", "deleted", F.lit(False).alias("is_query")
-    ).unionByName(
-        routed.select(
-            "partition", "id", "vec", F.lit(0).alias("level"), F.lit(False).alias("deleted"),
-            F.lit(True).alias("is_query"),
-        )
-    )
-    meta_rows = {
-        int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
-        for r in index.meta.collect()
-    }
-    spark = index.nodes.sparkSession
-    bmeta = spark.sparkContext.broadcast(meta_rows)
-
-    def probe(mixed_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype="int64"), "neighbor_id": pd.Series(dtype="int64"),
-             "dist": pd.Series(dtype="float64")}
-        )
-        if len(mixed_pdf) == 0:
-            return empty
-        is_q = mixed_pdf["is_query"].to_numpy(dtype=bool)
-        nodes_pdf = mixed_pdf[~is_q]
-        queries_pdf = mixed_pdf[is_q]
-        if len(nodes_pdf) == 0 or len(queries_pdf) == 0:
-            return empty
-        part = int(nodes_pdf["partition"].iloc[0])
-        entry_point, max_layer = bmeta.value.get(part, (None, -1))
-        idx = LocalHNSW.from_tables(
-            params,
-            nodes_pdf["id"].to_numpy(dtype=np.int64),
-            np.array(list(nodes_pdf["vec"]), dtype=np.float32),
-            nodes_pdf["level"].to_numpy(dtype=np.int32),
-            nodes_pdf["deleted"].to_numpy(dtype=bool),
-            edges_pdf["layer"].to_numpy(dtype=np.int32),
-            edges_pdf["src"].to_numpy(dtype=np.int64),
-            edges_pdf["dst"].to_numpy(dtype=np.int64),
-            entry_point,
-            max_layer,
-        )
-        out_q, out_n, out_d = [], [], []
-        for qid, qv in zip(queries_pdf["id"].to_numpy(dtype=np.int64), queries_pdf["vec"]):
-            for nid, d in idx.search(np.asarray(qv, dtype=np.float32), k=k, ef=ef):
-                out_q.append(qid)
-                out_n.append(nid)
-                out_d.append(d)
-        return pd.DataFrame(
-            {
-                "query_id": np.array(out_q, dtype=np.int64),
-                "neighbor_id": np.array(out_n, dtype=np.int64),
-                "dist": np.array(out_d, dtype=np.float64),
-            }
-        )
-
-    partial = (
-        tagged.groupBy("partition")
-        .cogroup(index.edges.groupBy("partition"))
-        .applyInPandas(probe, "query_id long, neighbor_id long, dist double")
-    )
-    # dropDuplicates: a replicated routed layout (or probe-all over it)
-    # surfaces the same (query, neighbor) hit from several partitions
-    # with identical dist; keep one before ranking so replicas never
-    # crowd distinct neighbors out of the top-k. The partial frame is
-    # O(P*Q*k) — the dedup shuffle is tiny and shares the window key.
-    partial = partial.dropDuplicates(["query_id", "neighbor_id"])
-    return topk_per_group(partial, ["query_id"], ["dist", "neighbor_id"], k).select(
-        "query_id", "neighbor_id", "dist", "rnk"
-    )
+    return probe_placed(index, placed, k, ef)
 
 
 def append_routed(
@@ -516,64 +393,40 @@ def append_routed(
     vec_col: str = "vec",
 ) -> HnswIndex:
     """Incremental insert that PRESERVES the routed layout: new vectors
-    are LSH-placed with the index's own modulus/planes/replication, and
-    only the partitions that actually receive rows have their local
-    graphs rebuilt (over old + new members together). Untouched
-    partitions' node and edge rows pass through unchanged.
+    are placed by ``_place`` with the index's own routing family,
+    centroids (no retraining — standard IVF behavior; rebuild()
+    re-trains), modulus, planes and replication, and only the
+    partitions that actually receive rows have their local graphs
+    rebuilt (over old + new members together). Untouched partitions'
+    node and edge rows pass through unchanged.
 
     Contrast ``HnswIndex.append`` (the hash-placed batch form): that
     keeps existing graphs immutable but every routed query must probe
     ALL appended partitions, so the probe bound grows with the number
     of append batches until a rebuild. This form keeps knn_hnsw_routed's
-    probe bound at the Hamming ball forever — the shape a continuously
-    ingesting deployment needs — at the cost of re-running the build
-    kernel for the touched partitions (cost ∝ vectors living in touched
+    probe bound fixed forever — the shape a continuously ingesting
+    deployment needs — at the cost of re-running the build kernel for
+    the touched partitions (cost ∝ vectors living in touched
     partitions, NOT index size; a batch that routes into b of P
     partitions rebuilds only those b).
 
-    The whole update is declarative: one assignment projection over the
+    The whole update is declarative: one placement projection over the
     batch, one distinct on its partition ids (bounded by P), an
-    anti-join split of the old tables, and the same cogrouped
-    applyInPandas kernel as the build over the touched slice. Returns a
-    new handle; tables are immutable as everywhere else."""
-    import numpy as np
-    import pandas as pd
-
-    if not getattr(index, "routed", False):
+    anti-join split of the old tables, and ``build_graphs`` over the
+    touched slice. Returns a new handle whose ``kernel_out`` is the
+    touched slice's kernel output; tables are immutable as everywhere
+    else."""
+    if not index.routed:
         raise ValueError(
             "append_routed requires a routed-built index; use "
             "HnswIndex.append for hash-placed indexes"
         )
-    params = index.params
-    pickled = params
-    num_partitions = int(index.num_partitions or index.meta.count())
-    n_planes = int(index.n_planes or 8)
-    replicas = int(getattr(index, "replicas", 0))
-    routing = getattr(index, "routing", None) or "lsh"
-    if routing == "centroid":
-        # place the batch with the index's OWN trained centroids (no
-        # retraining — standard IVF behavior; rebuild() re-trains)
-        C, _ = _centroids_np(index)
-        fresh = _assign_centroid_partitions(
-            vectors_df, C, int(getattr(index, "assign_n", 2) or 2), id_col, vec_col
-        )
-    else:
-        dots, bucket, parts = _assignment_exprs(
-            f"cast(`{vec_col}` as array<double>)",
-            params.dim,
-            n_planes,
-            num_partitions,
-            replicas,
-        )
-        fresh = (
-            vectors_df.select(
-                F.col(id_col).cast("long").alias("id"),
-                F.col(vec_col).cast("array<float>").alias("vec"),
-                F.expr(dots).alias("_dots"),
-            )
-            .withColumn("_bucket", F.expr(bucket))
-            .select("id", "vec", F.explode(F.expr(parts)).alias("partition"))
-        )
+    cells = _centroids_np(index) if index.routing == "centroid" else None
+    fresh = _place(
+        vectors_df, index.params.dim, index.routing, cells, index.assign_n,
+        int(index.num_partitions or index.meta.count()), int(index.n_planes or 8),
+        index.replicas, id_col, vec_col,
+    )
     touched = fresh.select("partition").distinct()
     old_members = index.nodes.join(F.broadcast(touched), "partition").select(
         "partition", "id", "vec", "deleted"
@@ -586,58 +439,14 @@ def append_routed(
         .select("partition", "id", "vec")
         .unionByName(fresh)
     )
-
-    def build_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["partition"].iloc[0])
-        idx = LocalHNSW(pickled)
-        idx.add_batch(
-            pdf["id"].to_numpy(dtype=np.int64),
-            np.array(list(pdf["vec"]), dtype=np.float32),
-        )
-        layer, s, t = idx.edges()
-        return pd.DataFrame(
-            {
-                "partition": np.full(len(layer), part, dtype=np.int32),
-                "layer": layer,
-                "src": s,
-                "dst": t,
-                "entry_point": np.full(len(layer), idx.ids[idx.entry_point], dtype=np.int64),
-                "max_layer": np.full(len(layer), idx.max_layer, dtype=np.int32),
-            }
-        )
-
-    rebuilt_raw = members.groupBy("partition").applyInPandas(
-        build_partition, EDGES_SCHEMA + ", entry_point long, max_layer int"
-    ).transform(persist_tracked)
-    rebuilt_edges = rebuilt_raw.select("partition", "layer", "src", "dst")
-    rebuilt_meta = rebuilt_raw.groupBy("partition").agg(
-        F.first("entry_point").alias("entry_point"),
-        F.first("max_layer").alias("max_layer"),
-        F.countDistinct("src").alias("n_nodes"),
+    nodes, edges, meta, kernel_out = build_graphs(members, index.params)
+    keep = lambda df: df.join(F.broadcast(touched), "partition", "left_anti")  # noqa: E731
+    out = HnswIndex(
+        keep(index.nodes).unionByName(nodes),
+        keep(index.edges).unionByName(edges),
+        keep(index.meta).unionByName(meta),
+        index.params,
+        **index._layout(),
     )
-    from .build import _level_expr
-
-    rebuilt_nodes = members.select(
-        "partition",
-        "id",
-        "vec",
-        _level_expr(F.col("id"), pickled).alias("level"),
-        F.lit(False).alias("deleted"),
-    )
-    keep_nodes = index.nodes.join(F.broadcast(touched), "partition", "left_anti")
-    keep_edges = index.edges.join(F.broadcast(touched), "partition", "left_anti")
-    keep_meta = index.meta.join(F.broadcast(touched), "partition", "left_anti")
-    return HnswIndex(
-        keep_nodes.unionByName(rebuilt_nodes),
-        keep_edges.unionByName(rebuilt_edges),
-        keep_meta.unionByName(rebuilt_meta),
-        params,
-        num_partitions=index.num_partitions,
-        appended_partitions=index.appended_partitions,
-        routed=True,
-        n_planes=index.n_planes,
-        replicas=replicas,
-        routing=routing,
-        assign_n=getattr(index, "assign_n", 2),
-        centroids=getattr(index, "centroids", None),
-    )
+    out.kernel_out = kernel_out
+    return out
