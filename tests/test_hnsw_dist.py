@@ -81,6 +81,38 @@ def test_distributed_probe_matches_broadcast_probe(spark, emb, queries, request,
         assert ranked(knn_hnsw_routed(index, queries, k=10, n_probe=index.num_partitions)) == a
 
 
+def test_probes_reach_partitions_without_meta_row(spark):
+    """A partition holding 0 or 1 nodes emits no edges, so it has no
+    meta row. Both probe-all paths must still visit it: here partition
+    3 holds only id 3, and every vector must come back as its own
+    top-1 from ``knn_hnsw`` and from ``knn_hnsw_distributed``."""
+    X = np.random.default_rng(0).standard_normal((6, 8))
+    vecs = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(6)], "id long, vec array<double>"
+    )
+    idx = hnsw_build(vecs, HnswParams(dim=8, metric="l2"), num_partitions=4)
+    meta_parts = {r["partition"] for r in idx.meta.collect()}
+    node_parts = {r["partition"] for r in idx.nodes.select("partition").collect()}
+    assert node_parts - meta_parts, "fixture must hold a partition with no meta row"
+    q = vecs.select(F.col("id").alias("query_id"), F.col("vec").alias("query_vec"))
+    for probe in (knn_hnsw, knn_hnsw_distributed):
+        top1 = {r["query_id"]: r["neighbor_id"] for r in probe(idx, q, k=1).collect()}
+        assert top1 == {i: i for i in range(6)}, probe.__name__
+
+
+def test_distributed_probe_without_recorded_modulus(index, queries):
+    """A handle that records no build modulus (``num_partitions=None``,
+    e.g. an index saved before the modulus was kept) replicates queries
+    over the partitions of its entry-point record and still answers
+    exactly like the broadcast probe."""
+    bare = HnswIndex(index.nodes, index.edges, index.meta, index.params)
+
+    def ranked(df):
+        return {(r["query_id"], r["neighbor_id"], r["rnk"]) for r in df.collect()}
+
+    assert ranked(knn_hnsw_distributed(bare, queries, k=10)) == ranked(knn_hnsw(index, queries, k=10))
+
+
 def test_results_sorted_and_self_match(index, queries):
     rows = knn_hnsw(index, queries, k=5).filter(F.col("query_id") == 0).collect()
     ds = [r["dist"] for r in sorted(rows, key=lambda r: r["rnk"])]

@@ -717,3 +717,84 @@ def test_skipgram_pairs_single_exchange(spark, sf_smoke):
     assert all("RoundRobinPartitioning" in e for e in other) and len(other) <= 1, exch
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
     assert df.count() > 0
+
+
+def _hnsw_probe_fixture(spark, sf_smoke):
+    from vectorsearch_with_hnsw_spark.index.build import HnswParams, hnsw_build
+
+    emb = load_table(spark, sf_smoke, "embeddings").filter(F.col("vec_id") < 200)
+    idx = hnsw_build(
+        emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
+        HnswParams(dim=64, metric="l2"),
+        num_partitions=3,
+    )
+    q = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    return idx, q
+
+
+def test_distributed_hnsw_probe_replicates_without_join(spark, sf_smoke):
+    """knn_hnsw_distributed places queries on the index layout's
+    partitions with a narrow explode: no meta scan, no broadcast and no
+    join in its plan."""
+    from vectorsearch_with_hnsw_spark.index.query import knn_hnsw_distributed
+
+    idx, q = _hnsw_probe_fixture(spark, sf_smoke)
+    df = knn_hnsw_distributed(idx, q, k=3)
+    for token in ("Join", "CartesianProduct", "BroadcastExchange"):
+        assert count_occurrences(df, token) == 0, token
+
+
+def test_hnsw_merge_topk_is_one_exchange(spark):
+    """The probe merge (dedup + per-query top-k window) adds exactly one
+    Exchange over its per-partition input."""
+    import re
+
+    from vectorsearch_with_hnsw_spark.index.query import _merge_topk
+
+    partial = spark.createDataFrame(
+        [(qid, nid, float(nid)) for qid in range(3) for nid in range(6)] * 2,
+        "query_id long, neighbor_id long, dist double",
+    )
+
+    def exchanges(df):
+        return len(re.findall(r"\(\d+\) Exchange\n", formatted_plan(df)))
+
+    merged = _merge_topk(partial, 2)
+    assert exchanges(merged) - exchanges(partial) == 1
+    assert sorted((r["query_id"], r["neighbor_id"]) for r in merged.collect()) == [
+        (qid, nid) for qid in range(3) for nid in range(2)
+    ]
+
+
+def test_repeat_hnsw_probe_runs_no_meta_job(spark, sf_smoke):
+    """The handle keeps its entry-point record: a second knn_hnsw on it
+    runs fewer jobs than the first, and none on meta — a meta that
+    fails when evaluated does not stop the second probe."""
+    from pyspark.sql.functions import udf
+
+    from vectorsearch_with_hnsw_spark.index.query import knn_hnsw
+
+    idx, q = _hnsw_probe_fixture(spark, sf_smoke)
+    sc = spark.sparkContext
+
+    def probe_jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            rows = sorted(tuple(r) for r in knn_hnsw(idx, q, k=3).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, first_jobs = probe_jobs("test_repeat_hnsw_probe_first")
+
+    @udf("long")
+    def boom(v):
+        raise RuntimeError("meta evaluated")
+
+    idx.meta = idx.meta.withColumn("entry_point", boom("entry_point"))
+    second, second_jobs = probe_jobs("test_repeat_hnsw_probe_second")
+    assert second == first
+    assert 0 < second_jobs < first_jobs

@@ -91,6 +91,30 @@ def test_streaming_index_ingest_builds_probeable_index(spark, sf_smoke):
             assert abs(r["dist"]) < 1e-6
 
 
+def test_streaming_index_ingest_rebuilds_by_layout_partition_count(spark):
+    """``rebuild_every`` counts the layout's partitions (build modulus +
+    appended), not meta rows: one-vector micro-batches leave every
+    partition without edges (no meta row at all), yet the second batch
+    brings 2 build + 2 appended partitions to ``rebuild_every=4`` and
+    the ingest compacts back to one 2-partition build."""
+    from vectorsearch_with_hnsw_spark.index.build import HnswParams
+    from vectorsearch_with_hnsw_spark.streaming.ingest import StreamingIndexIngest
+
+    ingest = StreamingIndexIngest(
+        HnswParams(dim=4, metric="l2"), partitions_per_batch=2, rebuild_every=4,
+        id_col="id", vec_col="vec",
+    )
+
+    def batch(i):
+        return spark.createDataFrame([(i, [float(i), 1.0, 0.0, 0.0])], "id long, vec array<float>")
+
+    ingest(batch(0), 0)
+    assert ingest.index.meta.count() == 0 and ingest.index.appended_partitions == []
+    ingest(batch(1), 1)
+    assert ingest.index.appended_partitions == [] and ingest.index.num_partitions == 2
+    assert sorted(r["id"] for r in ingest.index.nodes.collect()) == [0, 1]
+
+
 def test_curate_stream_matches_batch(spark, sf_smoke):
     """The streaming curation (score->gate->sample) is a stateless plan:
     applying the SAME transformation to the batch frame must give the

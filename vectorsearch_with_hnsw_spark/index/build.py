@@ -106,6 +106,9 @@ class HnswIndex:
         # (centroid matrix, cell ids) probe-side cache of a
         # centroid-routed handle, filled by index.routed
         self._centroids_np = None
+        # {partition: (entry_point, max_layer)}, read from meta by the
+        # first probe (see _entry_points)
+        self._entries: dict[int, tuple[int, int]] | None = None
 
     @property
     def routed(self) -> bool:
@@ -117,6 +120,20 @@ class HnswIndex:
         routing, or a wrong routing modulus, collapses recall with no
         error — so delete/append/append_routed pass all of it."""
         return {key: getattr(self, key) for key in _LAYOUT}
+
+    def _entry_points(self) -> dict[int, tuple[int, int]]:
+        """Each graph's search entry, ``{partition: (entry_point,
+        max_layer)}``: one collect of meta on the handle's first probe,
+        reused by every later probe (meta never changes under a handle).
+        Taken at the first probe, not at build or load, so a build stays
+        lazy. A partition with 0/1 nodes has no meta row and no entry
+        here; its kernel falls back to its own entry point."""
+        if self._entries is None:
+            self._entries = {
+                int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
+                for r in self.meta.select("partition", "entry_point", "max_layer").collect()
+            }
+        return self._entries
 
     def save(self, path: str) -> None:
         """Persist as Parquet tables + params sidecar (logical equivalent
@@ -179,7 +196,10 @@ class HnswIndex:
             .withColumn("deleted", F.col("deleted") | F.col("_del_id").isNotNull())
             .drop("_del_id")
         )
-        return HnswIndex(nodes, self.edges, self.meta, self.params, **self._layout())
+        out = HnswIndex(nodes, self.edges, self.meta, self.params, **self._layout())
+        # same meta, same entry points
+        out._entries = self._entries
+        return out
 
     def rebuild(self, num_partitions: int | None = None) -> "HnswIndex":
         """Compaction: rebuild from the alive subset only (reference

@@ -10,11 +10,16 @@ work stays constant).
 
 Three probe modes differ only in how queries reach the partitions:
 broadcast to every partition (``knn_hnsw`` — bounded artifact, same rule
-as the label join), replicated to every partition by a join
-(``knn_hnsw_distributed``) or routed to candidate partitions
-(``index.routed.knn_hnsw_routed``); the latter two go through
+as the label join), replicated to every partition of the layout by a
+narrow explode (``knn_hnsw_distributed``) or routed to candidate
+partitions (``index.routed.knn_hnsw_routed``); the latter two go through
 ``probe_placed``. All three run one kernel (``_probe_kernel``) and one
-merge (``_merge_topk``). Semantics match the reference search (hsnw_trial.py:267-294): greedy
+merge (``_merge_topk``, a single Exchange). Per-index search state is
+taken once: meta is read once per index handle
+(``HnswIndex._entry_points``), and the partition list comes from the
+handle's layout fields, so a repeat probe runs no meta job, broadcast
+or join.
+Semantics match the reference search (hsnw_trial.py:267-294): greedy
 descent, ef-search at layer 0 with ef = max(ef, k), tombstones skipped,
 results ascending, k-truncated.
 """
@@ -23,7 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.knn import topk_per_group
@@ -34,23 +39,20 @@ PROBE_SCHEMA = "query_id long, neighbor_id long, dist double"
 
 
 def _probe_kernel(index: HnswIndex, k: int, ef: int | None):
-    """The partition probe kernel every probe path runs. Collects +
-    broadcasts the meta table once and returns
+    """The partition probe kernel every probe path runs. Returns
     ``probe(nodes_pdf, edges_pdf, qids, qvecs)``: it rebuilds the
     partition's local graph from its nodes/edges rows and emits each
-    query's per-partition top-k as (query_id, neighbor_id, dist)."""
+    query's per-partition top-k as (query_id, neighbor_id, dist). The
+    entry points come from the handle's record (one meta collect per
+    handle) and travel in the closure: no job, no broadcast."""
     params = index.params
-    meta_rows = {
-        int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
-        for r in index.meta.collect()
-    }
-    bmeta = index.nodes.sparkSession.sparkContext.broadcast(meta_rows)
+    entries = index._entry_points()
 
     def probe(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame, qids, qvecs) -> pd.DataFrame:
         out_q, out_n, out_d = [], [], []
         if len(nodes_pdf) and len(qids):
             part = int(nodes_pdf["partition"].iloc[0])
-            entry_point, max_layer = bmeta.value.get(part, (None, -1))
+            entry_point, max_layer = entries.get(part, (None, -1))
             idx = LocalHNSW.from_tables(
                 params,
                 nodes_pdf["id"].to_numpy(dtype=np.int64),
@@ -91,8 +93,9 @@ def _merge_topk(partial: DataFrame, k: int) -> DataFrame:
     surfaces the same (query, neighbor) hit from several partitions
     with identical dist; keep one before ranking so replicas never
     crowd distinct neighbors out of the top-k. The partial frame is
-    O(P*Q*k) — the dedup shuffle is tiny and shares the window key."""
-    return _ranked(partial.dropDuplicates(["query_id", "neighbor_id"]), k)
+    O(P*Q*k); hashing it by query_id first lets the dedup and the
+    ranking window share that one Exchange."""
+    return _ranked(partial.repartition("query_id").dropDuplicates(["query_id", "neighbor_id"]), k)
 
 
 def probe_placed(index: HnswIndex, placed: DataFrame, k: int, ef: int | None) -> DataFrame:
@@ -140,17 +143,33 @@ def knn_hnsw_distributed(
     """Probe with NO driver-side query collection — the path for query
     batches too large to broadcast (millions of rows at 100 TB scale).
 
-    Queries are replicated across index partitions by an explode join
-    (each query visits every partition, exactly the probe-all contract)
-    and probed by ``probe_placed``. Shuffle volume: |Q| * P query rows +
-    one pass of the index tables; the merge stays O(P * Q * k).
+    Each query is replicated to every partition of the index layout —
+    ``range(num_partitions)`` plus ``appended_partitions``, read off
+    the handle — by one narrow explode (no meta scan, no join; exactly
+    the probe-all contract, including partitions too small to have a
+    meta row) and probed by ``probe_placed``. Shuffle volume: |Q| * P
+    query rows + one pass of the index tables; the merge stays
+    O(P * Q * k).
     """
-    parts = index.meta.select("partition")
     q_rep = queries_df.select(
         F.col(query_id_col).alias("id"),
         F.col(query_vec_col).cast("array<float>").alias("vec"),
-    ).crossJoin(F.broadcast(parts))
+        F.explode(_every_partition(index)).alias("partition"),
+    )
     return probe_placed(index, q_rep, k, ef)
+
+
+def _every_partition(index: HnswIndex) -> Column:
+    """The index's partition ids as one array expression: a ``sequence``
+    over the build modulus (the same size at any P) concatenated with
+    the appended partitions. A handle without a recorded modulus lists
+    the partitions of its entry-point record instead."""
+    ints = lambda ps: F.array(*[F.lit(int(p)) for p in ps]).cast("array<int>")  # noqa: E731
+    if index.num_partitions is None:
+        return ints(sorted(set(index._entry_points()) | set(index.appended_partitions)))
+    return F.concat(
+        F.sequence(F.lit(0), F.lit(int(index.num_partitions) - 1)), ints(index.appended_partitions)
+    )
 
 
 def knn_hnsw(

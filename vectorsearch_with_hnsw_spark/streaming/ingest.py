@@ -100,7 +100,9 @@ class StreamingIndexIngest:
                 id_col=self.id_col,
                 vec_col=self.vec_col,
             )
-        n_parts = self.index.meta.count()
+        # from the layout, not meta.count(): that runs a job per batch
+        # and misses partitions too small to have edges
+        n_parts = self.index.num_partitions + len(self.index.appended_partitions)
         if n_parts >= self.rebuild_every:
             self.index = self.index.rebuild(num_partitions=self.partitions_per_batch)
 
