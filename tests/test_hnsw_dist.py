@@ -17,7 +17,11 @@ DIM = 64
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_smoke):
-    return load_table(spark, sf_smoke, "embeddings").cache()
+    # released after the module: a cached embeddings relation left
+    # behind shows up in later modules' plans as InMemoryRelation
+    df = load_table(spark, sf_smoke, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -264,3 +268,121 @@ def test_knn_hnsw_allowed_ids_post_filter_api(spark, sf_smoke):
     for qid, rnks in per_q.items():
         assert sorted(rnks) == list(range(1, len(rnks) + 1)), (qid, rnks)
         assert len(rnks) == 5, (qid, rnks)  # half the corpus allowed, 4x boost
+
+
+def _vectors(spark, ids, dim=8, seed=0):
+    X = np.random.default_rng(seed).standard_normal((len(ids), dim))
+    return spark.createDataFrame(
+        [(int(i), [float(v) for v in x]) for i, x in zip(ids, X)], "id long, vec array<double>"
+    )
+
+
+def test_append_never_reuses_an_empty_appended_partition(spark):
+    """A one-vector append over two fresh partitions leaves one of them
+    empty; the next append must still take new partition ids (from the
+    layout record, not from the nodes table), or two unrelated local
+    graphs share one probe group."""
+    params = HnswParams(dim=8, metric="l2")
+    idx = hnsw_build(_vectors(spark, range(40)), params, num_partitions=2)
+    for i, new_id in enumerate((1002, 1004)):
+        idx = idx.append(_vectors(spark, [new_id], seed=i + 1), num_partitions=2)
+    assert idx.appended_partitions == [2, 3, 4, 5]
+    q = _vectors(spark, [1002], seed=1).select(
+        F.col("id").alias("query_id"), F.col("vec").alias("query_vec")
+    )
+    assert knn_hnsw(idx, q, k=1).first()["neighbor_id"] == 1002
+
+
+def test_fresh_handle_tables_equal_saved_copy(spark, index, tmp_path):
+    """nodes, edges and meta of a fresh handle (views of the persisted
+    kernel output) hold exactly the rows of its saved-then-loaded copy."""
+    path = str(tmp_path / "idx")
+    index.save(path)
+    loaded = HnswIndex.load(spark, path)
+    for name in ("nodes", "edges", "meta"):
+        fresh, back = getattr(index, name), getattr(loaded, name)
+
+        def rows(df):
+            return sorted(tuple(r) for r in df.select(*fresh.columns).collect())
+
+        assert rows(fresh) == rows(back), name
+
+
+@pytest.mark.parametrize("derive", ["append", "delete"])
+def test_derived_handles_carry_kernel_out(spark, derive):
+    """append hands on its fresh build's kernel output and delete its
+    parent's: the derived handle's cache entry is set and cached, and
+    the handle answers the same after it is released."""
+    params = HnswParams(dim=8, metric="l2")
+    base = hnsw_build(_vectors(spark, range(60)), params, num_partitions=2)
+    if derive == "append":
+        idx = base.append(_vectors(spark, range(100, 120), seed=1), num_partitions=1)
+        assert idx.kernel_out is not base.kernel_out
+    else:
+        idx = base.delete(spark.createDataFrame([(3,), (7,)], "id long"))
+        assert idx.kernel_out is base.kernel_out
+    q = _vectors(spark, range(100, 105), seed=1).select(
+        F.col("id").alias("query_id"), F.col("vec").alias("query_vec")
+    )
+
+    def answer():
+        return sorted(tuple(r) for r in knn_hnsw(idx, q, k=5).collect())
+
+    before = answer()
+    assert idx.kernel_out is not None and idx.kernel_out.is_cached
+    idx.kernel_out.unpersist(blocking=True)
+    assert answer() == before
+    base.kernel_out.unpersist(blocking=True)
+
+
+def test_routed_probe_after_append_routed_keeps_self_join_check(spark, emb, centroid_index):
+    """append_routed unions views of two kernel outputs with the old
+    tables; its routed probe cogroups nodes with edges. Each view has
+    its own partition attribute, so that runs with Spark's default
+    ambiguous self-join check on, and the appended vectors are found."""
+    from vectorsearch_with_hnsw_spark.index.routed import append_routed, knn_hnsw_routed
+
+    assert spark.conf.get("spark.sql.analyzer.failAmbiguousSelfJoin", "true") == "true"
+    new = emb.filter(F.col("vec_id") < 10).select(
+        (F.col("vec_id") + 1_000_000).alias("id"), F.col("embedding").alias("vec")
+    )
+    out = append_routed(centroid_index, new)
+    q = new.select(F.col("id").alias("query_id"), F.col("vec").alias("query_vec"))
+    top1 = knn_hnsw_routed(out, q, k=2).filter(F.col("rnk") <= 2).collect()
+    found = {(r["query_id"], r["neighbor_id"]) for r in top1}
+    assert {(i, i) for i in range(1_000_000, 1_000_010)} <= found
+    out.kernel_out.unpersist(blocking=True)
+
+
+def test_save_load_probe_is_bit_identical_after_append(spark, tmp_path):
+    """The saved nodes keep each partition's rows in the order its build
+    kernel inserted them, so a loaded handle scores from the same matrix
+    as the fresh one: every probe column, dist included, survives the
+    round trip bit for bit — also after an append. (float32 matvec
+    rounding depends on a row's position in the matrix, so a saved row
+    order that differs from the kernel's moves cosine distances by an
+    ulp.)"""
+    rng = np.random.default_rng(7)
+    X, A = rng.standard_normal((240, 16)), rng.standard_normal((40, 16))
+    X[17], X[29] = X[3], 0.0
+    Q = np.vstack([rng.standard_normal((8, 16)), X[[3, 50]], A[[1, 7]]])
+
+    def frame(ids, M, names="id int, vec array<double>"):
+        return spark.createDataFrame([(int(i), [float(v) for v in r]) for i, r in zip(ids, M)], names)
+
+    idx = hnsw_build(frame(range(240), X), HnswParams(dim=16, metric="cosine", M=6, ef_construction=40),
+                     num_partitions=4)
+    appended = idx.append(frame(range(10000, 10040), A), num_partitions=2)
+    path = str(tmp_path / "idx")
+    appended.save(path)
+    loaded = HnswIndex.load(spark, path)
+    q = frame(range(len(Q)), Q, "query_id int, query_vec array<double>")
+
+    def answer(index):
+        return sorted(tuple(r) for r in knn_hnsw(index, q, k=5).collect())
+
+    fresh, back = answer(appended), answer(loaded)
+    for handle in (idx, appended):
+        if handle.kernel_out is not None:
+            handle.kernel_out.unpersist(blocking=True)
+    assert back == fresh

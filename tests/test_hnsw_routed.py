@@ -20,7 +20,11 @@ DIM = 64
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_smoke):
-    return load_table(spark, sf_smoke, "embeddings").cache()
+    # released after the module: a cached embeddings relation left
+    # behind shows up in later modules' plans as InMemoryRelation
+    df = load_table(spark, sf_smoke, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

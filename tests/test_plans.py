@@ -798,3 +798,17 @@ def test_repeat_hnsw_probe_runs_no_meta_job(spark, sf_smoke):
     second, second_jobs = probe_jobs("test_repeat_hnsw_probe_second")
     assert second == first
     assert 0 < second_jobs < first_jobs
+
+
+def test_fresh_hnsw_probe_reads_levels_from_the_kernel_output(spark, sf_smoke):
+    """A fresh handle's nodes are a view of the persisted build-kernel
+    output, which carries each node's level: the probe plan holds no
+    Python level UDF (no ArrowEvalPython) and no re-scan of the build
+    source."""
+    from vectorsearch_with_hnsw_spark.index.query import knn_hnsw
+
+    idx, q = _hnsw_probe_fixture(spark, sf_smoke)
+    df = knn_hnsw(idx, q, k=3)
+    assert count_occurrences(df, "ArrowEvalPython") == 0
+    assert count_occurrences(df, "InMemoryTableScan") >= 2
+    idx.kernel_out.unpersist(blocking=True)

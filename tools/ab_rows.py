@@ -1,11 +1,11 @@
-"""Generic round-15 interleaved A/B row timer: times the registry
-.count() (exactly what bench.py times) for the given rows, min-of-reps
-with the bench's between-rep state scrub. Run alternately from the HEAD
-checkout and from a worktree at the comparison commit in ONE time window
+"""Interleaved A/B row timer: times the registry .count() (exactly
+what bench.py times) for the given rows, min-of-reps with the bench's
+between-rep state scrub. Run alternately from the HEAD checkout and
+from a second checkout of the comparison commit in ONE time window
 (each invocation imports ITS OWN tree — sys.path pinned to the script's
 repo root), carrying an untouched control row in every batch.
 
-Usage:  python tools/ab_rows_r15.py <tag> <row> [<row> ...]
+Usage:  python tools/ab_rows.py <tag> <row> [<row> ...]
 Prints one JSON line {"tag": ..., "rows": {...}}.
 """
 
@@ -51,7 +51,7 @@ def main() -> None:
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name=f"ab_rows_r15_{tag}", master=f"local[{cpus}]",
+    spark = get_spark(app_name=f"ab_rows_{tag}", master=f"local[{cpus}]",
                       shuffle_partitions=2 * cpus)
     spark.sparkContext.setLogLevel("ERROR")
     qmap = registry.queries()

@@ -15,7 +15,15 @@ reference's vectors.npy / graph.json / meta.json, hsnw_trial.py:310-342):
 
   nodes(partition, id, vec, level, deleted)
   edges(partition, layer, src, dst)
-  meta (partition, entry_point, max_layer) + params as a JSON column
+  meta (partition, entry_point, max_layer, n_nodes) + a params JSON sidecar
+
+A built handle holds all three as filter + projection views of ONE
+persisted build-kernel output (``build_graphs``: node, edge and meta
+rows of each partition, written by the kernel that built its graph) —
+the in-memory index object of the reference (vectors, levels and graph
+together, hsnw_trial.py:197-265). Levels are drawn once, by the kernel,
+and a probe reads the index from that output, never from the build's
+source. A loaded handle reads the same views from Parquet.
 
 Scale notes: partition count P scales with data (vectors per partition
 bounded by executor memory); the build is one shuffle (repartition by
@@ -39,6 +47,10 @@ from ..cache import persist_tracked
 NODES_SCHEMA = "partition int, id long, vec array<float>, level int, deleted boolean"
 EDGES_SCHEMA = "partition int, layer int, src long, dst long"
 META_SCHEMA = "partition int, entry_point long, max_layer int, n_nodes long"
+# the build kernel's output: node, edge and meta rows in one frame, each
+# kind filling only its own columns (level / layer / n_nodes non-NULL)
+KERNEL_SCHEMA = ("partition int, id long, vec array<float>, level int, layer int, src long, dst long, "
+                 "entry_point long, max_layer int, n_nodes long")
 # the placement record of an index (HnswIndex constructor arguments);
 # all but centroids travel in the saved params JSON
 _LAYOUT = (
@@ -97,11 +109,13 @@ class HnswIndex:
         # hold assign_n rows per id under centroid routing)
         self.assign_n = int(assign_n)
         self.centroids = centroids
-        # the persisted build-kernel output (set by hnsw_build,
-        # hnsw_build_routed and append_routed), exposed so callers
-        # (bench, repeated rebuilds) can release exactly this cache
-        # entry — edges/meta are projections of it and unpersisting
-        # those is a no-op
+        # the persisted build-kernel output, the storage of a built
+        # handle: nodes/edges/meta are filter + projection views of it
+        # (unpersisting those is a no-op). Set by every build path and
+        # handed on by delete/append; exposed so callers (bench,
+        # repeated rebuilds) can release exactly this cache entry. After
+        # its unpersist a probe recomputes the kernel once per side of
+        # its cogroup, from the build's source. None on a loaded handle.
         self.kernel_out: DataFrame | None = None
         # (centroid matrix, cell ids) probe-side cache of a
         # centroid-routed handle, filled by index.routed
@@ -197,7 +211,8 @@ class HnswIndex:
             .drop("_del_id")
         )
         out = HnswIndex(nodes, self.edges, self.meta, self.params, **self._layout())
-        # same meta, same entry points
+        # same storage, same meta, same entry points
+        out.kernel_out = self.kernel_out
         out._entries = self._entries
         return out
 
@@ -251,15 +266,17 @@ class HnswIndex:
         prefer ``index.routed.append_routed``: it places the batch into
         the existing layout and rebuilds only the touched partitions,
         so the routed probe bound never grows with append count."""
-        # offset from the NODES table: meta lacks rows for 0/1-node
-        # partitions, and a colliding partition id would merge two
-        # unrelated local graphs into one probe group. Floor at the
-        # routing modulus so appended ids NEVER land inside
-        # [0, num_partitions) even when trailing build partitions ended
-        # up empty, and tolerate an all-deleted/empty nodes table
-        # (max -> NULL).
-        max_part = self.nodes.agg(F.max("partition")).first()[0]
-        offset = max(int(self.num_partitions or 0), (int(max_part) if max_part is not None else -1) + 1)
+        # the offset comes from the layout record, not from the nodes
+        # table: an appended partition that holds no rows has no nodes
+        # row, and a colliding partition id would merge two unrelated
+        # local graphs into one probe group. Floor at the routing
+        # modulus so appended ids NEVER land inside [0, num_partitions)
+        # even when trailing build partitions ended up empty. Only a
+        # handle with no recorded modulus reads the nodes table.
+        ends = [int(self.num_partitions or 0)] + [p + 1 for p in self.appended_partitions]
+        if self.num_partitions is None:
+            ends.append(self.nodes.agg(F.coalesce(F.max("partition"), F.lit(-1))).first()[0] + 1)
+        offset = max(ends)
         fresh = hnsw_build(vectors_df, self.params, num_partitions=num_partitions,
                            id_col=id_col, vec_col=vec_col)
         shift = lambda df: df.withColumn("partition", (F.col("partition") + F.lit(offset)).cast("int"))  # noqa: E731
@@ -267,13 +284,16 @@ class HnswIndex:
             self._layout(),
             appended_partitions=self.appended_partitions + [offset + i for i in range(num_partitions)],
         )
-        return HnswIndex(
+        out = HnswIndex(
             self.nodes.unionByName(shift(fresh.nodes)),
             self.edges.unionByName(shift(fresh.edges)),
             self.meta.unionByName(shift(fresh.meta)),
             self.params,
             **layout,
         )
+        # the appended vectors' storage; the base partitions keep theirs
+        out.kernel_out = fresh.kernel_out
+        return out
 
 
 def load_or_build(
@@ -322,62 +342,60 @@ def build_graphs(
     """The partition build kernel, shared by every build path: ``src``
     holds the placed rows (id, vec, partition), and each partition's
     local graph is built by a single Arrow exchange + numpy build
-    inside ``applyInPandas``. Levels derive from global ids
-    (order-independent), so the result is deterministic under any
-    cluster layout.
+    inside ``applyInPandas``. Levels derive from global ids, so they do
+    not depend on the cluster layout; the edges do — ``add_batch``
+    inserts rows in the order the grouped shuffle delivers them.
 
-    Returns (nodes, edges, meta, kernel_out). The kernel output is
-    persisted — edges and meta both derive from it, and at scale you'd
-    rather not run the build twice — and returned so the caller can
-    release exactly that cache entry."""
+    The kernel writes the whole index once, as one frame of three row
+    kinds (``KERNEL_SCHEMA``): a node row (id, vec, level) per input
+    row, with the vectors it was given and the levels it drew; an edge
+    row (layer, src, dst) per graph edge; and, for a partition with
+    edges, one meta row (entry_point, max_layer, n_nodes = distinct src
+    count). That output is persisted and is the index's storage: nodes,
+    edges and meta are filter + projection views of it, so a probe of
+    a fresh handle neither re-scans ``src`` nor recomputes levels.
+
+    Returns (nodes, edges, meta, kernel_out); ``kernel_out`` is returned
+    so the caller can release exactly that cache entry. After its
+    ``unpersist`` every view recomputes the kernel from ``src`` — a
+    probe then runs it once per side of its cogroup."""
 
     def build_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["partition"].iloc[0])
+        ids = pdf["id"].to_numpy(dtype=np.int64)
         idx = LocalHNSW(params)
-        idx.add_batch(pdf["id"].to_numpy(dtype=np.int64), np.array(list(pdf["vec"]), dtype=np.float32))
+        idx.add_batch(ids, np.array(list(pdf["vec"]), dtype=np.float32))
         layer, s, t = idx.edges()
-        return pd.DataFrame(
-            {
-                "partition": np.full(len(layer), part, dtype=np.int32),
-                "layer": layer,
-                "src": s,
-                "dst": t,
-                "entry_point": np.full(len(layer), idx.ids[idx.entry_point], dtype=np.int64),
-                "max_layer": np.full(len(layer), idx.max_layer, dtype=np.int32),
-            }
-        )
+        # row kinds in order: nodes [0, e0), edges [e0, m0), meta [m0, end)
+        e0, m0 = len(ids), len(ids) + len(layer)
+        meta = ([idx.ids[idx.entry_point]], [idx.max_layer], [np.unique(s).size]) if len(layer) else ([], [], [])
+        end = m0 + len(meta[0])
+
+        def rows(start: int, values, dtype="Int64") -> pd.Series:
+            # one row kind's column; NULL on the other kinds' rows
+            return pd.Series(values, index=np.arange(start, start + len(values)), dtype=dtype)
+
+        return pd.DataFrame({
+            "partition": np.full(end, pdf["partition"].iloc[0], dtype=np.int32),
+            "id": rows(0, ids), "level": rows(0, idx.levels, "Int32"),
+            "vec": list(pdf["vec"]) + [None] * (end - e0),
+            "layer": rows(e0, layer, "Int32"), "src": rows(e0, s), "dst": rows(e0, t),
+            "entry_point": rows(m0, meta[0]), "max_layer": rows(m0, meta[1], "Int32"), "n_nodes": rows(m0, meta[2]),
+        })
 
     kernel_out = src.groupBy("partition").applyInPandas(
-        build_partition, EDGES_SCHEMA + ", entry_point long, max_layer int"
+        build_partition, KERNEL_SCHEMA
     ).transform(persist_tracked)
-    edges = kernel_out.select("partition", "layer", "src", "dst")
-    meta = kernel_out.groupBy("partition").agg(
-        F.first("entry_point").alias("entry_point"),
-        F.first("max_layer").alias("max_layer"),
-        F.countDistinct("src").alias("n_nodes"),
-    )
-    nodes = src.select(
-        "partition",
-        "id",
-        "vec",
-        _level_expr(F.col("id"), params).alias("level"),
-        F.lit(False).alias("deleted"),
-    )
+
+    def view(kind: str, *cols) -> DataFrame:
+        # each view's own partition attribute: two views of one kernel
+        # output meet in probe cogroups and append_routed's anti-joins,
+        # where a shared attribute fails Spark's self-join check
+        return kernel_out.filter(F.col(kind).isNotNull()).select(F.col("partition").alias("partition"), *cols)
+
+    nodes = view("level", "id", "vec", "level", F.lit(False).alias("deleted"))
+    edges = view("layer", "layer", "src", "dst")
+    meta = view("n_nodes", "entry_point", "max_layer", "n_nodes")
     return nodes, edges, meta, kernel_out
-
-
-def _level_expr(id_col, params: HnswParams):
-    """Level as a pandas UDF batch (exact same splitmix64 draw as the
-    kernel)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def lvl(ids: pd.Series) -> pd.Series:
-        from .local_hnsw import level_for_id
-
-        return ids.map(lambda i: level_for_id(int(i), params.mL, params.seed)).astype("int32")
-
-    return lvl(id_col)
 
 
 def hnsw_stats(index: "HnswIndex") -> DataFrame:
