@@ -509,10 +509,11 @@ def main() -> None:
     spreads["knn_graph_hnsw"] = round(spread2, 3)
     graph_recall = round(len(ann_edges & exact_edges) / max(1, len(exact_edges)), 4)
 
-    # LSH-routed index: bounded-probe build + query (boundary-replicated
-    # layout), recall next to the time, PLUS the append contract — a
-    # batch appended to a routed index must stay reachable through the
-    # routed probe (appended partitions are probed unconditionally).
+    # centroid-routed index: bounded-probe build + query (assign_n=2
+    # multi-assigned layout), recall next to the time, PLUS the append
+    # contract — a batch appended to a routed index must stay reachable
+    # through the routed probe (appended partitions are probed
+    # unconditionally).
     from vectorsearch_with_hnsw_spark.index.routed import (
         hnsw_build_routed,
         knn_hnsw_routed,

@@ -1,7 +1,9 @@
-"""LSH-routed HNSW: recall stays high while each query visits only
-O(n_planes) partitions instead of all P."""
+"""Centroid-routed HNSW: recall stays high while each query visits only
+its ~4.5*sqrt(P) nearest cells instead of all P partitions."""
 
 from __future__ import annotations
+
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,7 +12,6 @@ from vectorsearch_with_hnsw_spark.index.build import HnswParams
 from vectorsearch_with_hnsw_spark.index.routed import (
     hnsw_build_routed,
     knn_hnsw_routed,
-    route_partitions,
 )
 from vectorsearch_with_hnsw_spark.operators.knn import knn_exact
 from vectorsearch_with_hnsw_spark.sources import load_table
@@ -34,15 +35,6 @@ def queries(emb):
     )
 
 
-def test_routing_is_bounded(spark, emb):
-    routes = emb.limit(20).select(
-        route_partitions(F.col("embedding").cast("array<double>"), DIM, 1000).alias("parts")
-    )
-    for r in routes.collect():
-        # own bucket + 8 single flips + 28 double flips, mod 1000
-        assert 1 <= len(r["parts"]) <= 37
-
-
 def test_routed_recall(spark, emb, queries):
     idx = hnsw_build_routed(
         emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
@@ -58,14 +50,14 @@ def test_routed_recall(spark, emb, queries):
         for r in knn_exact(emb, queries, k=10, metric="cosine").collect()
     }
     recall = len(ann & exact) / len(exact)
-    # boundary replication (replicas=2 default) recovered most of the
-    # old 0.8-recall gap
+    # multi-assignment (assign_n=2 default) keeps boundary neighbors
+    # reachable from both sides of a cell border
     assert recall >= 0.9, f"routed recall {recall}"
 
 
 def test_routed_self_match(spark, emb, queries):
     """An indexed vector queried against the routed index must find
-    itself: its own bucket is always probed."""
+    itself: its nearest cell is always probed."""
     idx = hnsw_build_routed(
         emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
         HnswParams(dim=DIM, metric="cosine"),
@@ -78,11 +70,11 @@ def test_routed_self_match(spark, emb, queries):
 
 
 def test_routed_modulus_survives_empty_partitions(spark, emb, queries):
-    """Routing must use the BUILD modulus even when some build
-    partitions end up with 0/1 nodes (no edge rows -> no meta row): a
-    meta-derived modulus would shift every pmod route. 40 vectors
-    across 64 partitions guarantees empty partitions and 1-node
-    partitions; self-match must still hold for every query."""
+    """The routed index records the BUILD's P even when some build
+    partitions end up with 0/1 nodes (no edge rows -> no meta row), and
+    the probe reaches the 1-node partitions: 40 vectors across 64
+    partitions guarantees empty and 1-node partitions; self-match must
+    still hold for every query."""
     small = emb.filter(F.col("vec_id") < 40).select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     )
@@ -120,10 +112,11 @@ def test_single_node_partition_is_searchable(spark, emb):
 
 
 def test_routed_probe_after_append(spark, emb, tmp_path):
-    """append must NOT change the routing modulus (appended partitions
-    are hash-placed, outside the LSH layout): originals keep routing
-    correctly AND appended vectors are reachable (their partitions are
-    probed unconditionally). Also round-trips through save/load."""
+    """append must NOT change the build's partition count (appended
+    partitions are hash-placed, outside the centroid cells): originals
+    keep routing correctly AND appended vectors are reachable (their
+    partitions are probed unconditionally). Also round-trips through
+    save/load."""
     from vectorsearch_with_hnsw_spark.index.build import HnswIndex
 
     old = emb.filter(F.col("vec_id") < 400)
@@ -168,13 +161,24 @@ def test_num_partitions_survives_save_load(spark, emb, tmp_path):
     assert loaded.params.dim == DIM
 
 
+def _rewrite_params(spark, path, **changes):
+    """Overwrite a saved index's params JSON with ``changes`` applied
+    (a key set to None is removed)."""
+    raw = json.loads(spark.read.json(f"{path}/params").first()["params_json"])
+    raw.update(changes)
+    raw = {k: v for k, v in raw.items() if v is not None}
+    spark.createDataFrame([(json.dumps(raw),)], "params_json string").coalesce(1).write.mode(
+        "overwrite"
+    ).json(f"{path}/params")
+
+
 def test_centroid_routing_contracts(spark, emb, queries, tmp_path):
-    """The default centroid routing: (a) recall holds at a P large
-    enough that the LSH ball used to collapse (P=64 on 2k vectors);
-    (b) the probe result is identical through a save/load round-trip
-    (centroids persist with the index); (c) routing="lsh" still builds
-    and answers (the Hamming-ball layout remains available); (d) an
-    unknown routing name raises."""
+    """Centroid routing: (a) recall holds at a P large enough that the
+    removed LSH ball collapsed (P=64 on 2k vectors); (b) the probe
+    result is identical through a save/load round-trip (centroids
+    persist with the index); (c) so it is when the params carry the
+    ``n_planes``/``replicas`` keys that earlier versions wrote for
+    every routed index, centroid-routed ones too."""
     from vectorsearch_with_hnsw_spark.index.build import HnswIndex
     from vectorsearch_with_hnsw_spark.operators.knn import knn_exact
 
@@ -182,7 +186,7 @@ def test_centroid_routing_contracts(spark, emb, queries, tmp_path):
     idx = hnsw_build_routed(
         src, HnswParams(dim=DIM, metric="cosine"), num_partitions=64
     )
-    assert idx.routing == "centroid" and idx.centroids is not None
+    assert idx.routed and idx.centroids is not None
     got = {
         (r["query_id"], r["neighbor_id"])
         for r in knn_hnsw_routed(idx, queries, k=10).collect()
@@ -194,20 +198,43 @@ def test_centroid_routing_contracts(spark, emb, queries, tmp_path):
     assert len(got & exact) / len(exact) >= 0.85
     idx.save(str(tmp_path / "cidx"))
     loaded = HnswIndex.load(spark, str(tmp_path / "cidx"))
-    assert loaded.routing == "centroid" and loaded.assign_n == idx.assign_n
+    assert loaded.routed and loaded.centroids is not None
+    assert loaded.assign_n == idx.assign_n
     got2 = {
         (r["query_id"], r["neighbor_id"])
         for r in knn_hnsw_routed(loaded, queries, k=10).collect()
     }
     assert got2 == got
-    lsh = hnsw_build_routed(
-        src, HnswParams(dim=DIM, metric="cosine"), num_partitions=8, routing="lsh"
+    _rewrite_params(spark, str(tmp_path / "cidx"), n_planes=8, replicas=2)
+    legacy = HnswIndex.load(spark, str(tmp_path / "cidx"))
+    assert legacy.routed and legacy.num_partitions == 64 and legacy.assign_n == idx.assign_n
+    got3 = {
+        (r["query_id"], r["neighbor_id"])
+        for r in knn_hnsw_routed(legacy, queries, k=10).collect()
+    }
+    assert got3 == got
+
+
+def test_load_refuses_lsh_routed_index(spark, emb, tmp_path):
+    """LSH routing is gone: an index saved under it, in either params
+    form (``routing: "lsh"``, or the older ``routed: true`` with no
+    ``routing`` key), fails to load and names the way out, instead of
+    being probed through centroid cells it does not have."""
+    from vectorsearch_with_hnsw_spark.index.build import HnswIndex
+
+    idx = hnsw_build_routed(
+        emb.filter(F.col("vec_id") < 100).select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+        ),
+        HnswParams(dim=DIM, metric="cosine"),
+        num_partitions=4,
     )
-    assert lsh.routing == "lsh" and lsh.centroids is None
-    rows = knn_hnsw_routed(lsh, queries, k=1).filter(F.col("rnk") == 1).collect()
-    assert rows and all(r["neighbor_id"] == r["query_id"] for r in rows)
-    with pytest.raises(ValueError, match="unknown routing"):
-        hnsw_build_routed(src, HnswParams(dim=DIM, metric="cosine"), routing="geo")
+    path = str(tmp_path / "lidx")
+    idx.save(path)
+    for routing in ("lsh", None):
+        _rewrite_params(spark, path, n_planes=8, replicas=2, routing=routing)
+        with pytest.raises(ValueError, match="'lsh'-routed.*rebuild the index with hnsw_build_routed"):
+            HnswIndex.load(spark, path)
 
 
 def test_routed_probe_refuses_hash_built_index(spark, emb, queries):
@@ -226,14 +253,13 @@ def test_routed_probe_refuses_hash_built_index(spark, emb, queries):
 
 def test_rebuild_of_routed_index_stays_routed(spark, emb, queries):
     """rebuild() must dispatch to the routed builder for a routed-built
-    index: the output is LSH-placed again (routed probe allowed, recall
-    preserved) rather than silently hash-placed."""
+    index: the output is centroid-routed again (routed probe allowed,
+    recall preserved) rather than silently hash-placed."""
     small = emb.filter(F.col("vec_id") < 300)
     idx = hnsw_build_routed(
         small.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
         HnswParams(dim=DIM, metric="cosine"),
         num_partitions=4,
-        n_planes=6,
     )
     appended = idx.append(
         emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 340)),
@@ -242,7 +268,7 @@ def test_rebuild_of_routed_index_stays_routed(spark, emb, queries):
         vec_col="embedding",
     )
     rebuilt = appended.rebuild()
-    assert rebuilt.routed and rebuilt.n_planes == 6
+    assert rebuilt.routed and rebuilt.centroids is not None
     assert rebuilt.appended_partitions == []
     # appended vectors are now inside the routed layout and reachable
     got = {
@@ -259,8 +285,7 @@ def test_rebuild_of_routed_index_stays_routed(spark, emb, queries):
     assert got >= {i for i in range(300, 340)}, "appended vectors reachable post-rebuild"
 
 
-@pytest.mark.parametrize("routing", ["centroid", "lsh"])
-def test_routed_build_exposes_kernel_out(spark, emb, queries, routing):
+def test_routed_build_exposes_kernel_out(spark, emb, queries):
     """A routed build (and so a routed rebuild) hands back its persisted
     kernel output, like hnsw_build: the caller can release exactly that
     cache entry, and the index answers the same afterwards (edges/meta
@@ -271,7 +296,6 @@ def test_routed_build_exposes_kernel_out(spark, emb, queries, routing):
         ),
         HnswParams(dim=DIM, metric="cosine"),
         num_partitions=4,
-        routing=routing,
     )
 
     def answer(index):
@@ -286,7 +310,8 @@ def test_routed_build_exposes_kernel_out(spark, emb, queries, routing):
     assert not idx.kernel_out.is_cached
     assert answer(idx) == before
     rebuilt = idx.rebuild()
-    assert rebuilt.routing == routing and rebuilt.kernel_out is not None
+    assert rebuilt.routed and rebuilt.centroids is not None
+    assert rebuilt.kernel_out is not None
     assert rebuilt.kernel_out.is_cached
     rebuilt.kernel_out.unpersist(blocking=True)
 
@@ -311,9 +336,9 @@ def test_append_offset_clears_routing_space(spark, emb):
 
 
 def test_append_routed_preserves_layout_and_probe_bound(spark, emb):
-    """append_routed LSH-places the batch into the EXISTING routed
-    layout: no appended_partitions growth (the probe bound stays at the
-    Hamming ball forever), new vectors reachable through routing,
+    """append_routed places the batch into the EXISTING centroid cells:
+    no appended_partitions growth (the probe bound stays at n_probe
+    cells forever), new vectors reachable through routing,
     untouched partitions bit-identical, tombstones in touched
     partitions compacted away."""
     from vectorsearch_with_hnsw_spark.index.routed import append_routed
@@ -328,7 +353,7 @@ def test_append_routed_preserves_layout_and_probe_bound(spark, emb):
     out = append_routed(idx, new, id_col="vec_id", vec_col="embedding")
     assert out.appended_partitions == idx.appended_partitions == []
     assert out.routed and out.num_partitions == idx.num_partitions
-    # every partition id stays inside the routing modulus
+    # every partition id stays a cell of the build
     parts = {r["partition"] for r in out.nodes.select("partition").distinct().collect()}
     assert parts <= set(range(8))
     # new vectors reachable by ROUTING (no appended probe-all involved)
@@ -388,22 +413,21 @@ def test_append_routed_compacts_tombstones_in_touched_partitions(spark, emb):
 
 
 def test_delete_and_append_preserve_centroid_routing(spark, emb, queries):
-    """delete()/append() must carry routing/assign_n/centroids through to
-    the new handle: losing them silently falls back to routing='lsh', so
-    a centroid-placed index would be probed with LSH routing (recall
-    collapses with no error) and rebuild() would re-train under the
-    wrong family. Pin recall through delete()+probe at P=64, the setting
-    where misrouting is catastrophic."""
+    """delete()/append() must carry assign_n/centroids through to the
+    new handle: losing them would make the index read as hash-placed,
+    so rebuild() would silently hash-build it. Pin recall through
+    delete()+probe at P=64, the setting where misrouting is
+    catastrophic."""
     from vectorsearch_with_hnsw_spark.operators.knn import knn_exact
 
     src = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     idx = hnsw_build_routed(
         src, HnswParams(dim=DIM, metric="cosine"), num_partitions=64
     )
-    assert idx.routing == "centroid"
+    assert idx.routed
     # delete an id far from the query block so exact top-10 is unchanged
     after_del = idx.delete(spark.createDataFrame([(1900,)], "id long"))
-    assert after_del.routing == "centroid"
+    assert after_del.routed
     assert after_del.assign_n == idx.assign_n
     assert after_del.centroids is not None
     got = {
@@ -419,17 +443,17 @@ def test_delete_and_append_preserve_centroid_routing(spark, emb, queries):
     recall = len(got & exact) / len(exact)
     assert recall >= 0.85, f"post-delete routed recall {recall}"
     assert not any(n == 1900 for _, n in got)
-    # append: routing family survives too, and rebuild() re-trains under
-    # the centroid family (not LSH)
+    # append: the routed layout survives too, and rebuild() re-trains
+    # centroids
     after_app = after_del.append(
         emb.filter(F.col("vec_id") >= 1990).filter(F.col("vec_id") < 1995),
         num_partitions=1,
         id_col="vec_id",
         vec_col="embedding",
     )
-    assert after_app.routing == "centroid" and after_app.centroids is not None
+    assert after_app.routed and after_app.centroids is not None
     rebuilt = after_app.rebuild()
-    assert rebuilt.routing == "centroid" and rebuilt.centroids is not None
+    assert rebuilt.routed and rebuilt.centroids is not None
 
 
 def test_centroid_train_empty_corpus(spark):
@@ -442,3 +466,20 @@ def test_centroid_train_empty_corpus(spark):
     assert C.shape == (0, DIM) and C.dtype == "float64"
     idx = hnsw_build_routed(empty, HnswParams(dim=DIM, metric="cosine"), num_partitions=8)
     assert idx.nodes.count() == 0 and idx.edges.count() == 0
+
+
+def test_index_without_cells_refuses_append_routed_and_probes_empty(spark, emb, queries):
+    """A routed index built over an empty frame has no trained cells:
+    append_routed refuses the batch (it has no cell to land in) rather
+    than drop it, and a probe of any handle of that index, including
+    one that re-collects the empty centroid table, returns no rows."""
+    from vectorsearch_with_hnsw_spark.index.routed import append_routed
+
+    empty = spark.createDataFrame([], "id long, vec array<float>")
+    idx = hnsw_build_routed(empty, HnswParams(dim=DIM, metric="cosine"), num_partitions=4)
+    batch = emb.filter(F.col("vec_id") < 20)
+    with pytest.raises(ValueError, match="no trained centroid cells"):
+        append_routed(idx, batch, id_col="vec_id", vec_col="embedding")
+    derived = idx.delete(spark.createDataFrame([], "id long"))
+    assert derived._centroids_np is None
+    assert knn_hnsw_routed(derived, queries, k=3).count() == 0

@@ -75,11 +75,12 @@ def test_knn_graph_hnsw_backend_parity(spark, sf_oracle):
 
 
 def test_knn_graph_routed_backend(spark, sf_oracle):
-    """Routed backend: probe cost bounded by the Hamming ball instead
-    of P. Looser contract than probe-all (boundary neighbors can sit in
-    un-probed partitions): no self edges, <= k out-edges, edge recall
-    >= 0.9 vs exact at the small-P test setting (boundary replication
-    + the NN-descent stitch pass closed the old 0.75 gap)."""
+    """Routed backend: each node probes its ~4.5*sqrt(P) nearest cells
+    instead of all P. Looser contract than probe-all (boundary neighbors
+    can sit in un-probed partitions): no self edges, <= k out-edges,
+    edge recall >= 0.9 vs exact at the small-P test setting
+    (multi-assignment + the NN-descent stitch pass closed the old 0.75
+    gap)."""
     emb = load_table(spark, sf_oracle, "embeddings")
     exact = {(r.src_id, r.dst_id) for r in knn_graph(emb, k=5, metric="l2").collect()}
     ann_rows = knn_graph(

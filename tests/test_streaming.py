@@ -511,7 +511,7 @@ def test_gopher_stream_matches_batch(spark, sf_smoke):
 
 
 def test_streaming_routed_ingest_preserves_probe_bound(spark, sf_smoke):
-    """Routed micro-batch ingest: the drained index is LSH-placed with
+    """Routed micro-batch ingest: the drained index is centroid-routed with
     NO appended probe-all tail, and every streamed vector is reachable
     through the routed probe."""
     from pyspark.sql import functions as F

@@ -1,6 +1,7 @@
 """Interleaved A/B row timer: times the registry .count() (exactly
-what bench.py times) for the given rows, min-of-reps with the bench's
-between-rep state scrub. Run alternately from the HEAD checkout and
+what bench.py times) for the given rows, with bench.py's own
+min-of-reps (its escalation to 5 or 6 reps included) and between-rep
+state scrub. Run alternately from the HEAD checkout and
 from a second checkout of the comparison commit in ONE time window
 (each invocation imports ITS OWN tree — sys.path pinned to the script's
 repo root), carrying an untouched control row in every batch.
@@ -19,31 +20,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import _min_of_reps, _release_row_state  # noqa: E402
 from vectorsearch_with_hnsw_spark.session import get_spark  # noqa: E402
 from vectorsearch_with_hnsw_spark import registry  # noqa: E402
 from vectorsearch_with_hnsw_spark.sources import load_table  # noqa: E402
-
-
-def _release_row_state(spark):
-    from vectorsearch_with_hnsw_spark.cache import release_caches
-
-    release_caches()
-    spark.catalog.clearCache()
-    jsc = spark.sparkContext._jsc
-    for rdd in list(jsc.getPersistentRDDs().values()):
-        rdd.unpersist(True)
-
-
-def _min_of_reps(run, n_min=3, n_max=4, tol=0.10):
-    ts = []
-    while True:
-        ts.append(run())
-        if len(ts) >= n_min:
-            s = sorted(ts)
-            if (s[1] - s[0]) / s[0] <= tol or len(ts) >= n_max:
-                break
-    s = sorted(ts)
-    return s[0], ts
 
 
 def main() -> None:
@@ -70,7 +50,7 @@ def main() -> None:
             _release_row_state(spark)
             return dt
 
-        best, ts = _min_of_reps(run_count)
+        best, _, ts = _min_of_reps(run_count)
         out[name] = {"min": round(best, 3), "runs": [round(t, 3) for t in ts]}
         print(f"# {name}: {out[name]}", file=sys.stderr)
 

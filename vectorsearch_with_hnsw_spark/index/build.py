@@ -53,24 +53,21 @@ KERNEL_SCHEMA = ("partition int, id long, vec array<float>, level int, layer int
                  "entry_point long, max_layer int, n_nodes long")
 # the placement record of an index (HnswIndex constructor arguments);
 # all but centroids travel in the saved params JSON
-_LAYOUT = (
-    "num_partitions", "appended_partitions", "n_planes", "replicas", "routing", "assign_n",
-    "centroids",
-)
+_LAYOUT = ("num_partitions", "appended_partitions", "assign_n", "centroids")
 
 
 class HnswIndex:
     """Handle to the three index tables + params + the placement layout.
 
-    ``num_partitions`` records the BUILD modulus. The routed probe must
-    route with exactly this value — deriving it from meta.count() is
-    wrong when a partition ends up with 0/1 nodes (no edge rows -> no
-    meta row), which would silently shift every query's pmod routing.
-    ``append`` therefore NEVER bumps it: appended partitions are
-    hash-placed (not LSH-placed), so they live outside the routing
-    space and are tracked in ``appended_partitions`` — the routed probe
-    adds them to every query's candidate set (probe-all for the
-    appended tail, routed for the original build)."""
+    ``num_partitions`` records the BUILD's partition count: the hash
+    modulus of a hash-placed index, the P that sets a routed index's
+    default probe budget. Deriving it from meta.count() is wrong when a
+    partition ends up with 0/1 nodes (no edge rows -> no meta row).
+    ``append`` NEVER bumps it: appended partitions are hash-placed, not
+    centroid cells, so they live outside the routing space and are
+    tracked in ``appended_partitions`` — the routed probe adds them to
+    every query's candidate set (probe-all for the appended tail,
+    routed for the original build)."""
 
     def __init__(
         self,
@@ -80,9 +77,6 @@ class HnswIndex:
         params: HnswParams,
         num_partitions: int | None = None,
         appended_partitions: list[int] | None = None,
-        n_planes: int | None = None,
-        replicas: int = 0,
-        routing: str | None = None,
         assign_n: int = 2,
         centroids: DataFrame | None = None,
     ):
@@ -92,21 +86,14 @@ class HnswIndex:
         self.params = params
         self.num_partitions = num_partitions
         self.appended_partitions = list(appended_partitions or [])
-        # placement of the build partitions: None = hash (hnsw_build),
-        # "centroid" | "lsh" = routed (hnsw_build_routed). rebuild()
-        # dispatches on this so a routed index stays routed across
-        # compactions; knn_hnsw_routed refuses hash-placed indexes
-        # (routing over hash placement silently collapses recall — most
-        # true neighbors live in un-probed partitions).
-        self.routing = routing
-        self.n_planes = n_planes
-        # routed boundary-replication factor (0 = single home bucket);
-        # recorded so rebuild() reproduces the same layout and so
-        # consumers know nodes may hold (1+replicas) rows per id
-        self.replicas = int(replicas)
-        # centroid-routing artifacts: the trained cell centroids
-        # (bounded P-row table) and the multi-assignment factor (nodes
-        # hold assign_n rows per id under centroid routing)
+        # placement of the build partitions: the trained cell centroids
+        # (bounded P-row table) of a routed index (hnsw_build_routed),
+        # None for hash placement (hnsw_build). rebuild() dispatches on
+        # this so a routed index stays routed across compactions;
+        # knn_hnsw_routed refuses hash-placed indexes (routing over hash
+        # placement silently collapses recall — most true neighbors live
+        # in un-probed partitions). assign_n is the multi-assignment
+        # factor: a routed index's nodes hold assign_n rows per id.
         self.assign_n = int(assign_n)
         self.centroids = centroids
         # the persisted build-kernel output, the storage of a built
@@ -117,8 +104,8 @@ class HnswIndex:
         # its unpersist a probe recomputes the kernel once per side of
         # its cogroup, from the build's source. None on a loaded handle.
         self.kernel_out: DataFrame | None = None
-        # (centroid matrix, cell ids) probe-side cache of a
-        # centroid-routed handle, filled by index.routed
+        # (centroid matrix, cell ids) probe-side cache of a routed
+        # handle, filled by index.routed
         self._centroids_np = None
         # {partition: (entry_point, max_layer)}, read from meta by the
         # first probe (see _entry_points)
@@ -126,13 +113,14 @@ class HnswIndex:
 
     @property
     def routed(self) -> bool:
-        return self.routing is not None
+        return self.centroids is not None
 
     def _layout(self) -> dict:
         """The placement state every derived handle carries over. Losing
-        one field is silent: a centroid-placed layout probed with LSH
-        routing, or a wrong routing modulus, collapses recall with no
-        error — so delete/append/append_routed pass all of it."""
+        one field is silent: without its centroids a routed layout
+        rebuilds hash-placed, and without appended_partitions a routed
+        probe never visits the appended tail — so delete/append/
+        append_routed pass all of it."""
         return {key: getattr(self, key) for key in _LAYOUT}
 
     def _entry_points(self) -> dict[int, tuple[int, int]]:
@@ -165,17 +153,10 @@ class HnswIndex:
         if self.appended_partitions:
             payload["appended_partitions"] = self.appended_partitions
         if self.routed:
-            payload["routed"] = True
-            if self.n_planes is not None:
-                payload["n_planes"] = self.n_planes
-            if self.replicas:
-                payload["replicas"] = self.replicas
-            payload["routing"] = self.routing
-            payload["assign_n"] = self.assign_n
-            if self.centroids is not None:
-                self.centroids.coalesce(1).write.mode("overwrite").parquet(
-                    f"{path}/centroids"
-                )
+            # "routing" stays in the record: earlier readers take
+            # routed: true without it for the removed LSH routing
+            payload.update(routed=True, routing="centroid", assign_n=self.assign_n)
+            self.centroids.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
         params_df = spark.createDataFrame([(json.dumps(payload),)], "params_json string")
         params_df.coalesce(1).write.mode("overwrite").json(f"{path}/params")
 
@@ -183,15 +164,24 @@ class HnswIndex:
     def load(cls, spark: SparkSession, path: str) -> "HnswIndex":
         """Re-open a persisted index (reference load(), hsnw_trial.py:
         344-376, including params defaulting via HnswParams defaults).
-        An index saved before the routing family was recorded
-        (``routed: true``, no ``routing`` key) is LSH-routed."""
+        Refuses an LSH-routed index (``routing: "lsh"``, or ``routed:
+        true`` with no ``routing`` key, the form saved before the
+        routing family was recorded): LSH routing is gone."""
         raw = json.loads(spark.read.json(f"{path}/params").first()["params_json"])
         layout = {key: raw.pop(key) for key in _LAYOUT if key in raw}
+        # keys of the removed LSH routing, which earlier versions wrote for
+        # every routed index, centroid-routed ones included
+        for key in ("n_planes", "replicas"):
+            raw.pop(key, None)
         if raw.pop("routed", False):
-            layout.setdefault("routing", "lsh")
-        params = HnswParams(**raw)
-        if layout.get("routing") == "centroid":
+            routing = raw.pop("routing", "lsh")
+            if routing != "centroid":
+                raise ValueError(
+                    f"index at {path} is {routing!r}-routed, a routing that no longer "
+                    "exists; rebuild the index with hnsw_build_routed"
+                )
             layout["centroids"] = spark.read.parquet(f"{path}/centroids")
+        params = HnswParams(**raw)
         return cls(
             spark.read.parquet(f"{path}/nodes"),
             spark.read.parquet(f"{path}/edges"),
@@ -220,10 +210,10 @@ class HnswIndex:
         """Compaction: rebuild from the alive subset only (reference
         rebuild(), hsnw_trial.py:381-389). Dispatches on placement: a
         routed-built index rebuilds through hnsw_build_routed (same
-        routing family, n_planes, replicas and assign_n; centroids are
-        re-trained), so appended hash-placed partitions are re-mixed into
-        the routed layout and knn_hnsw_routed keeps its recall contract;
-        a hash-built index rebuilds through hnsw_build."""
+        assign_n; centroids are re-trained), so appended hash-placed
+        partitions are re-mixed into the routed layout and
+        knn_hnsw_routed keeps its recall contract; a hash-built index
+        rebuilds through hnsw_build."""
         # dropDuplicates on id: a replicated routed layout stores each
         # vector in several partitions; rebuilding from raw nodes rows
         # would compound the replication factor every rebuild
@@ -236,13 +226,7 @@ class HnswIndex:
         if self.routed:
             from .routed import hnsw_build_routed
 
-            return hnsw_build_routed(
-                alive, self.params, num_partitions=nparts,
-                n_planes=int(self.n_planes or 8),
-                replicas=self.replicas,
-                routing=self.routing,
-                assign_n=self.assign_n,
-            )
+            return hnsw_build_routed(alive, self.params, num_partitions=nparts, assign_n=self.assign_n)
         return hnsw_build(alive, self.params, num_partitions=nparts)
 
     def append(self, vectors_df: DataFrame, num_partitions: int = 1,
@@ -254,15 +238,13 @@ class HnswIndex:
         (hsnw_trial.py:197-203; SURVEY.md §2 row 18) — run ``rebuild``
         periodically to re-mix partitions.
 
-        ``num_partitions`` (the routing modulus) is deliberately NOT
-        bumped: the fresh partitions are hash-placed by hnsw_build, not
-        routed, so folding them into the modulus would misroute every
-        routed probe (wrong pmod) AND leave the appended vectors
-        unreachable by routing. They are recorded in
-        ``appended_partitions`` instead; knn_hnsw_routed probes them
-        unconditionally (probe-all for the appended tail), while the
-        ORIGINAL build partitions keep being routed by the family that
-        placed them. For a ROUTED index under continuous ingestion
+        ``num_partitions`` (the build's partition count) is deliberately
+        NOT bumped: the fresh partitions are hash-placed by hnsw_build,
+        not centroid cells, so routing cannot reach them. They are
+        recorded in ``appended_partitions`` instead; knn_hnsw_routed
+        probes them unconditionally (probe-all for the appended tail),
+        while the ORIGINAL build partitions keep being routed by their
+        centroids. For a ROUTED index under continuous ingestion
         prefer ``index.routed.append_routed``: it places the batch into
         the existing layout and rebuilds only the touched partitions,
         so the routed probe bound never grows with append count."""
@@ -377,7 +359,9 @@ def build_graphs(
         return pd.DataFrame({
             "partition": np.full(end, pdf["partition"].iloc[0], dtype=np.int32),
             "id": rows(0, ids), "level": rows(0, idx.levels, "Int32"),
-            "vec": list(pdf["vec"]) + [None] * (end - e0),
+            # Python float lists: pyspark's Arrow converter runs list()
+            # over each cell, which on a numpy array yields numpy scalars
+            "vec": [v.tolist() for v in pdf["vec"]] + [None] * (end - e0),
             "layer": rows(e0, layer, "Int32"), "src": rows(e0, s), "dst": rows(e0, t),
             "entry_point": rows(m0, meta[0]), "max_layer": rows(m0, meta[1], "Int32"), "n_nodes": rows(m0, meta[2]),
         })

@@ -1,30 +1,28 @@
-"""Routed HNSW: partition the index by locality (centroid cell or LSH
-bucket) and probe only the partitions a query can plausibly live in.
+"""Routed HNSW: partition the index by centroid cell and probe only the
+partitions a query can plausibly live in.
 
 The plain build partitions by hash(id): correct, but every probe must
-visit every partition, so probe cost grows with P. Routing fixes that.
-Two routing families share the build kernel, probe kernel and merge:
+visit every partition, so probe cost grows with P. Routing fixes that
+(SPANN-style) and shares the build kernel, probe kernel and merge with
+the plain build: partition = one of P k-means cells, each vector
+multi-assigned to its ``assign_n`` closest cells (default 2 -> 2x
+storage); a query probes its ``n_probe`` nearest cells (default
+~4.5*sqrt(P), sublinear in P). Centroids are trained driver-side on a
+bounded deterministic sample (<= 64 per cell, capped — the same
+bounded-artifact class as the PQ codebooks) with plain Lloyd
+iterations.
 
-- ``routing="centroid"`` (default, SPANN-style): partition = nearest
-  of P k-means centroids, each vector multi-assigned to its
-  ``assign_n`` closest cells (default 2 -> 2x storage); a query probes
-  its ``n_probe`` nearest cells (default ~4.5*sqrt(P), sublinear in P).
-  Centroids are trained driver-side on a bounded deterministic sample
-  (<= 64 per cell, capped — the same bounded-artifact class as the PQ
-  codebooks) with plain Lloyd iterations.
-- ``routing="lsh"``: partition = lsh_bucket(vec) % P with boundary
-  vectors replicated into their ``replicas`` lowest-margin flip
-  buckets; queries probe their Hamming<=2 ball (37 buckets regardless
-  of P).
-
-Why centroid is the default: on the near-uniform gaussian testdata
-(worst case for sign-bit LSH — true neighbors average Hamming distance
-4-5 over 8 planes, unreachable by any bounded Hamming ball), measured
-candidate coverage of the true top-10 at P=128 with equal probe budget
-(37 partitions) is 0.63 for the LSH ball vs 0.93 for assign_n=2
-centroid routing; recall@10 through the full index tracks coverage.
-operators.retrieval._stitch_graph repairs the kNN-graph use case
-further with NN-descent rounds.
+Centroid cells are the only routed placement. The LSH Hamming-ball
+layout they replaced (partition = sign-bit bucket % P, boundary
+vectors replicated into flip buckets, queries probing the Hamming<=2
+ball) lost on every axis measured on the sf0.1 embeddings (2,000x64,
+cosine, 100 queries, local[3]) at P = 16 / 64 / 128: recall@10 0.957 /
+0.767 / 0.676 against 1.000 / 1.000 / 0.976, probe time 9.1 / 7.8 /
+7.5 s against 3.6 / 2.0 / 2.5 s, stored rows 2.0x / 2.5x / 2.8x against
+2.0x, at about the same build time. On near-uniform gaussians true
+neighbors average Hamming distance 4-5 over 8 planes, out of reach of
+any bounded ball. operators.retrieval._stitch_graph repairs the
+kNN-graph use case further with NN-descent rounds.
 """
 
 from __future__ import annotations
@@ -36,7 +34,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.ann import hyperplane_ints, lsh_bucket
 from .build import HnswIndex, HnswParams, build_graphs
 from .query import probe_placed
 
@@ -122,19 +119,25 @@ def _nearest_cells(X: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:
     return order.astype(np.int32)
 
 
-def _cell_rows(
-    rows: DataFrame,
+def _place(
+    vectors_df: DataFrame,
     cells: tuple[np.ndarray, np.ndarray],
     n: int,
     extra: Sequence[int] = (),
+    id_col: str = "id",
+    vec_col: str = "vec",
 ) -> DataFrame:
-    """(id, vec, partition) with each (id, vec) row exploded to the cell
-    ids of its ``n`` nearest centroids, plus the ``extra`` partitions —
-    the centroid twin of the LSH multi-assignment projection, for index
-    rows (n = assign_n) and query rows (n = n_probe, extra = the
-    appended partitions) alike. One broadcast + one Arrow map pass; no
-    shuffle here (the build's groupBy / the probe's cogroup supplies
-    it)."""
+    """The routed placement, as (id, vec, partition) rows: each vector
+    exploded to the cell ids of its ``n`` nearest centroids, plus the
+    ``extra`` partitions. Index rows (n = assign_n) and query rows
+    (n = n_probe, extra = the appended partitions) are placed alike, and
+    the build and append_routed both place here, so an appended vector
+    lands exactly where a rebuild would put it (given the same
+    centroids). One broadcast + one Arrow map pass; no shuffle here (the
+    build's groupBy / the probe's cogroup supplies it)."""
+    rows = vectors_df.select(
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).cast("array<float>").alias("vec")
+    )
     C, cell_ids = cells
     bc = rows.sparkSession.sparkContext.broadcast((C, cell_ids, np.array(extra, dtype=np.int32)))
 
@@ -164,118 +167,31 @@ def _cell_rows(
     return rows.mapInPandas(assign, "id long, vec array<float>, partition int")
 
 
-def _assignment_exprs(
-    vec_sql: str, dim: int, n_planes: int, num_partitions: int, replicas: int
-) -> tuple[str, str, str]:
-    """SQL for the multi-assignment placement: (dots array, home bucket
-    from ``_dots``, partition array from ``_bucket``/``_dots``).
-
-    A vector lands in its home bucket PLUS the flip buckets of its
-    ``replicas`` smallest-|margin| hyperplanes — the SPANN-style
-    boundary replication: a vector close to a hyperplane is ambiguous
-    between the two sides, so it is stored on both. Storage grows by at
-    most (1+replicas)x; query-side probe cost is unchanged (same
-    Hamming-ball routing), while boundary neighbors become reachable
-    from both sides of the cut. Bit order matches lsh_band_bucket's
-    fold (plane 0 = MSB), so home buckets are identical to the
-    replica-free build."""
-    planes = ", ".join(
-        "array(" + ",".join(f"{float(v)!r}D" for v in hyperplane_ints(p, dim)) + ")"
-        for p in range(n_planes)
-    )
-    dots = (
-        f"transform(array({planes}), pl -> aggregate(zip_with({vec_sql}, pl, "
-        "(x, y) -> x * y), 0.0D, (acc, v) -> acc + v))"
-    )
-    bucket = (
-        "aggregate(_dots, 0, (acc, d) -> acc * 2 + "
-        "(CASE WHEN d >= 0.0D THEN 1 ELSE 0 END))"
-    )
-    flips = (
-        f"transform(slice(array_sort(transform(sequence(0, {n_planes - 1}), "
-        f"i -> struct(abs(element_at(_dots, i + 1)) AS m, i AS p))), 1, {replicas}), "
-        f"s -> _bucket ^ shiftleft(1, {n_planes - 1} - s.p))"
-    )
-    parts = (
-        f"array_distinct(transform(concat(array(_bucket), {flips}), "
-        f"b -> CAST(pmod(b, {num_partitions}) AS INT)))"
-    )
-    return dots, bucket, parts
-
-
-def _place(
-    vectors_df: DataFrame,
-    dim: int,
-    routing: str,
-    cells: tuple[np.ndarray, np.ndarray] | None,
-    assign_n: int,
-    num_partitions: int,
-    n_planes: int,
-    replicas: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """The routed placement of a vector batch, as (id, vec, partition)
-    rows: its ``assign_n`` nearest centroid ``cells`` (centroid routing)
-    or its LSH home bucket + ``replicas`` flip buckets mod
-    ``num_partitions`` (LSH routing). The build and append_routed both
-    place through here, so an appended vector lands exactly where a
-    rebuild would put it (given the same centroids)."""
-    narrow = [F.col(id_col).cast("long").alias("id"), F.col(vec_col).cast("array<float>").alias("vec")]
-    if routing == "centroid":
-        return _cell_rows(vectors_df.select(*narrow), cells, assign_n)
-    dots, bucket, parts = _assignment_exprs(
-        f"cast(`{vec_col}` as array<double>)", dim, n_planes, num_partitions, replicas
-    )
-    return (
-        vectors_df.select(*narrow, F.expr(dots).alias("_dots"))
-        .withColumn("_bucket", F.expr(bucket))
-        .select("id", "vec", F.explode(F.expr(parts)).alias("partition"))
-    )
-
-
 def hnsw_build_routed(
     vectors_df: DataFrame,
     params: HnswParams,
     num_partitions: int = 8,
-    n_planes: int = 8,
-    replicas: int = 2,
     id_col: str = "id",
     vec_col: str = "vec",
-    routing: str = "centroid",
     assign_n: int = 2,
 ) -> HnswIndex:
     """Same kernel build as hnsw_build (``build_graphs``), but the
-    partitioner co-locates likely neighbors (see module docstring for
-    the two routing families and why centroid is the default).
-
-    ``routing="centroid"``: partition = one of the vector's ``assign_n``
-    nearest k-means cells (SPANN multi-assignment, ``assign_n``x
-    storage). ``routing="lsh"``: partition = LSH bucket % P, with each
-    vector additionally replicated into the flip buckets of its
-    ``replicas`` lowest-margin hyperplanes (measured edge recall at
-    P=64 on the gaussian sf0.1 testdata: 0.58 replica-free -> 0.79
-    candidate coverage at replicas=2 for 3x storage; ``replicas=0``
-    restores the single-home layout). Either way the probe merge
-    deduplicates (query, neighbor) pairs, so results are
-    replication-independent."""
-    if routing not in ("centroid", "lsh"):
-        raise ValueError(f"unknown routing {routing!r}; expected 'centroid' or 'lsh'")
-    cells = centroids_df = None
-    if routing == "centroid":
-        C = _train_centroids(vectors_df, num_partitions, id_col, vec_col, dim=params.dim)
-        cells = (C, np.arange(len(C), dtype=np.int32))
-        centroids_df = vectors_df.sparkSession.createDataFrame(
-            [(int(i), [float(v) for v in C[i]]) for i in range(len(C))],
-            "cell int, centroid array<double>",
-        )
-    src = _place(vectors_df, params.dim, routing, cells, assign_n, num_partitions,
-                 n_planes, replicas, id_col, vec_col)
+    partitioner co-locates likely neighbors: partition = one of the
+    vector's ``assign_n`` nearest k-means cells (SPANN
+    multi-assignment, ``assign_n``x storage; see the module docstring).
+    The probe merge deduplicates (query, neighbor) pairs, so results
+    are replication-independent."""
+    C = _train_centroids(vectors_df, num_partitions, id_col, vec_col, dim=params.dim)
+    cells = (C, np.arange(len(C), dtype=np.int32))
+    centroids_df = vectors_df.sparkSession.createDataFrame(
+        [(int(i), [float(v) for v in C[i]]) for i in range(len(C))],
+        "cell int, centroid array<double>",
+    )
+    src = _place(vectors_df, cells, assign_n, id_col=id_col, vec_col=vec_col)
     nodes, edges, meta, kernel_out = build_graphs(src, params)
     idx = HnswIndex(
         nodes, edges, meta, params, num_partitions=num_partitions,
-        n_planes=n_planes, replicas=replicas,
-        routing=routing, assign_n=assign_n, centroids=centroids_df,
+        assign_n=assign_n, centroids=centroids_df,
     )
     idx.kernel_out = kernel_out
     # seed the probe-side cache — the build already holds the centroids
@@ -283,36 +199,17 @@ def hnsw_build_routed(
     return idx
 
 
-def route_partitions(
-    qvec: F.Column | str, dim: int, num_partitions: int, n_planes: int = 8, radius: int = 2
-) -> F.Column:
-    """Array of candidate partitions for a query: its own bucket plus all
-    Hamming<=radius flips (multi-probe LSH), deduplicated after mod P.
-
-    radius=2 over 8 planes = 37 buckets — a constant independent of P.
-    At small P the distinct partitions cover everything (probe-all, full
-    recall); at P=1000 a query touches <= 37 of 1000 partitions."""
-    b = lsh_bucket(qvec, dim, n_planes)
-    flips = [b]
-    for i in range(n_planes):
-        flips.append(b.bitwiseXOR(F.lit(1 << i)))
-    if radius >= 2:
-        for i in range(n_planes):
-            for j in range(i + 1, n_planes):
-                flips.append(b.bitwiseXOR(F.lit((1 << i) | (1 << j))))
-    return F.array_distinct(
-        F.transform(F.array(*flips), lambda x: F.pmod(x, F.lit(num_partitions)).cast("int"))
-    )
-
-
 def _centroids_np(index: HnswIndex) -> tuple[np.ndarray, np.ndarray]:
-    """(centroid matrix, cell ids) for a centroid-routed index, collected
-    once per handle and cached — the table is bounded (P rows), but the
-    collect is still a Spark job the probe shouldn't pay per call."""
+    """(centroid matrix, cell ids) of a routed index, collected once per
+    handle and cached — the table is bounded (P rows), but the collect
+    is still a Spark job the probe shouldn't pay per call. The matrix
+    keeps its (0, dim) shape when no cell was trained (empty corpus)."""
     if index._centroids_np is None:
         rows = index.centroids.orderBy("cell").collect()
         index._centroids_np = (
-            np.array([r["centroid"] for r in rows], dtype=np.float64),
+            np.array([r["centroid"] for r in rows], dtype=np.float64).reshape(
+                len(rows), index.params.dim
+            ),
             np.array([r["cell"] for r in rows], dtype=np.int32),
         )
     return index._centroids_np
@@ -323,17 +220,14 @@ def knn_hnsw_routed(
     queries_df: DataFrame,
     k: int = 10,
     ef: int | None = None,
-    n_planes: int | None = None,
     n_probe: int | None = None,
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Multi-probe routed query: each query is replicated only to its
-    candidate partitions — ``n_probe`` nearest centroid cells
-    (centroid routing; default ~4.5*sqrt(P), sublinear in P) or the
-    Hamming<=2 bucket ball (LSH routing; <= 37 independent of P) — and
-    probed by ``query.probe_placed`` (the kernel and merge every probe
-    path shares).
+    ``n_probe`` nearest centroid cells (default ~4.5*sqrt(P),
+    sublinear in P) and probed by ``query.probe_placed`` (the kernel and
+    merge every probe path shares).
 
     Partitions added by ``HnswIndex.append`` are hash-placed, outside
     the routing space — every query probes ALL of them in addition
@@ -351,38 +245,14 @@ def knn_hnsw_routed(
             "(routed placement); this index is hash-placed — use knn_hnsw "
             "(probe-all) or rebuild with hnsw_build_routed"
         )
-    # route with the BUILD modulus: meta.count() undercounts when a
-    # build partition carried 0/1 nodes (no edges -> no meta row), and a
-    # wrong modulus silently routes queries away from their home bucket
+    # the probe budget scales with the BUILD's P, not the trained cell
+    # count (a tiny corpus trains fewer cells than P)
     num_partitions = index.num_partitions
     if num_partitions is None:
         num_partitions = index.meta.count()
-    appended = index.appended_partitions
-    if index.routing == "centroid":
-        R = int(n_probe) if n_probe is not None else default_n_probe(int(num_partitions))
-        nq = queries_df.select(
-            F.col(query_id_col).cast("long").alias("id"),
-            F.col(query_vec_col).cast("array<float>").alias("vec"),
-        )
-        placed = _cell_rows(nq, _centroids_np(index), R, appended)
-    else:
-        # route with the BUILD's plane count: a query hashed with a
-        # different hyperplane set than the build lands in an unrelated
-        # bucket (explicit arg still wins for experiments)
-        if n_planes is None:
-            n_planes = int(index.n_planes or 8)
-        route = route_partitions(
-            f"cast(`{query_vec_col}` as array<double>)", index.params.dim, int(num_partitions), n_planes
-        )
-        if appended:
-            route = F.array_distinct(
-                F.concat(route, F.array(*[F.lit(int(p)).cast("int") for p in appended]))
-            )
-        placed = queries_df.select(
-            F.col(query_id_col).alias("id"),
-            F.col(query_vec_col).cast("array<float>").alias("vec"),
-            F.explode(route).alias("partition"),
-        )
+    R = int(n_probe) if n_probe is not None else default_n_probe(int(num_partitions))
+    placed = _place(queries_df, _centroids_np(index), R, index.appended_partitions,
+                    query_id_col, query_vec_col)
     return probe_placed(index, placed, k, ef)
 
 
@@ -393,12 +263,11 @@ def append_routed(
     vec_col: str = "vec",
 ) -> HnswIndex:
     """Incremental insert that PRESERVES the routed layout: new vectors
-    are placed by ``_place`` with the index's own routing family,
-    centroids (no retraining — standard IVF behavior; rebuild()
-    re-trains), modulus, planes and replication, and only the
-    partitions that actually receive rows have their local graphs
-    rebuilt (over old + new members together). Untouched partitions'
-    node and edge rows pass through unchanged.
+    are placed by ``_place`` into the index's own centroid cells (no
+    retraining — standard IVF behavior; rebuild() re-trains) with its
+    ``assign_n``, and only the partitions that actually receive rows
+    have their local graphs rebuilt (over old + new members together).
+    Untouched partitions' node and edge rows pass through unchanged.
 
     Contrast ``HnswIndex.append`` (the hash-placed batch form): that
     keeps existing graphs immutable but every routed query must probe
@@ -415,18 +284,23 @@ def append_routed(
     anti-join split of the old tables, and ``build_graphs`` over the
     touched slice. Returns a new handle whose ``kernel_out`` is the
     touched slice's kernel output; tables are immutable as everywhere
-    else."""
+    else.
+
+    Raises ``ValueError`` on an index with no trained cells (built over
+    an empty frame): the batch would have no cell to land in."""
     if not index.routed:
         raise ValueError(
             "append_routed requires a routed-built index; use "
             "HnswIndex.append for hash-placed indexes"
         )
-    cells = _centroids_np(index) if index.routing == "centroid" else None
-    fresh = _place(
-        vectors_df, index.params.dim, index.routing, cells, index.assign_n,
-        int(index.num_partitions or index.meta.count()), int(index.n_planes or 8),
-        index.replicas, id_col, vec_col,
-    )
+    cells = _centroids_np(index)
+    if len(cells[1]) == 0:
+        raise ValueError(
+            "append_routed: the routed index has no trained centroid cells "
+            "(it was built over an empty frame), so the batch has no cell to "
+            "land in; build the index with hnsw_build_routed over the vectors instead"
+        )
+    fresh = _place(vectors_df, cells, index.assign_n, id_col=id_col, vec_col=vec_col)
     touched = fresh.select("partition").distinct()
     old_members = index.nodes.join(F.broadcast(touched), "partition").select(
         "partition", "id", "vec", "deleted"

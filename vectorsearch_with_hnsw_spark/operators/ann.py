@@ -52,11 +52,6 @@ def hyperplane(plane: int, dim: int) -> Column:
     return F.lit([float(v) for v in hyperplane_ints(plane, dim)])
 
 
-def lsh_bucket(vec: Column | str, dim: int, n_planes: int = 8) -> Column:
-    """Bucket id = concatenated sign bits of <vec, plane_i>."""
-    return lsh_band_bucket(vec, dim, band=0, planes_per_band=n_planes)
-
-
 def band_bucket_sql(vec_sql: str, dim: int, band: int, planes_per_band: int) -> str:
     """Spark-SQL text of one band's bucket over a SQL vector expression —
     the same fold shape as the Column form (and as the DuckDB oracle's

@@ -111,9 +111,9 @@ def knn_graph(
 
     ``method="hnsw_routed"`` bounds probe cost at cluster partition
     counts: the index is partitioned by nearest k-means cell with
-    SPANN-style multi-assignment (hnsw_build_routed's default centroid
-    routing) and each node probes only its ~3*sqrt(P) nearest cells —
-    sublinear in P, vs probe-all's O(P) per query. Residual misses are
+    SPANN-style multi-assignment (hnsw_build_routed's centroid routing)
+    and each node probes only its ~4.5*sqrt(P) nearest cells
+    (``default_n_probe``) — sublinear in P, vs probe-all's O(P) per query. Residual misses are
     repaired by ``stitch_rounds`` NN-descent passes over the graph
     itself (_stitch_graph: reverse + 2-hop candidates, exact re-score).
     Probe-all ``"hnsw"`` stays >= 0.97 edge recall on the gaussian
@@ -383,12 +383,12 @@ def _knn_graph_cluster(
 
     The HNSW-backed paths pay one sequential graph traversal per
     (query, probed partition): with the whole table as the query set
-    that is N * P (probe-all) or N * ~3*sqrt(P) (routed) Python-side
+    that is N * P (probe-all) or N * ~4.5*sqrt(P) (routed) Python-side
     searches — at 128k nodes the probe alone measured ~365 s. Graph
     construction doesn't need per-query traversals: the routed layout's
     own k-means cells hold members at SPANN-style ``assign_n``
     multi-assignment, every node probes its ``probe_n`` (default
-    ~3*sqrt(P), the routed probe budget) nearest cells, and inside a
+    ~3*sqrt(P), this path's own budget) nearest cells, and inside a
     cell the (queries x members) search is ONE blocked GEMM with a
     fold-exact rescore of the winners (the knn_exact_fast contract) —
     dense-matrix arithmetic instead of 128k beam traversals.
@@ -596,7 +596,7 @@ def _knn_graph_hnsw(
     The k+1/drop-self trick is recall-preserving here too: self is its
     own exact nearest neighbor at distance 0, which HNSW finds with
     near-certainty, so the k+1 probe leaves k real-neighbor slots
-    (routed mode always probes the query's own home bucket, where self
+    (routed mode always probes the query's nearest cell, where self
     lives by construction)."""
     from ..index.build import HnswParams, hnsw_build
     from ..index.query import knn_hnsw_distributed

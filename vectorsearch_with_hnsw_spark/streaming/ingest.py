@@ -41,7 +41,7 @@ class StreamingIndexIngest:
 
     ``routed=True`` switches to the layout-preserving ingest: the first
     micro-batch builds a routed index (``hnsw_build_routed`` — centroid
-    routing by default, centroids trained on that first batch) and
+    cells trained on that first batch) and
     every later batch merges through ``append_routed`` — only touched
     partitions rebuild, the routed probe bound never grows with batch
     count, and no rebuild threshold is needed (the layout does not
