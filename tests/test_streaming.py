@@ -539,6 +539,57 @@ def test_streaming_routed_ingest_preserves_probe_bound(spark, sf_smoke):
         assert r["neighbor_id"] == r["query_id"]
 
 
+def test_streaming_routed_ingest_skips_empty_first_batch(spark, sf_smoke, tmp_path):
+    """An empty first micro-batch does not build the routed index: it
+    would train no centroid cells, and every later batch would fail the
+    stream in ``append_routed``. A two-file stream (a 0-row file, then
+    50 embeddings, one file per trigger) ends with all 50 vectors
+    indexed and each one its own routed top-1."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    from vectorsearch_with_hnsw_spark.index.build import HnswParams
+    from vectorsearch_with_hnsw_spark.index.routed import knn_hnsw_routed
+    from vectorsearch_with_hnsw_spark.sources import load_table
+    from vectorsearch_with_hnsw_spark.streaming.ingest import (
+        EMBEDDINGS_SCHEMA,
+        StreamingIndexIngest,
+    )
+
+    emb = load_table(spark, sf_smoke, "embeddings").orderBy("vec_id").limit(50)
+    src = str(tmp_path / "vec_stream")
+    emb.limit(0).coalesce(1).write.parquet(src)
+    first_files = set(glob.glob(f"{src}/*.parquet"))
+    assert len(first_files) == 1
+    for f in first_files:
+        os.utime(f, (1_000_000_000, 1_000_000_000))
+    emb.coalesce(1).write.mode("append").parquet(src)
+    for f in set(glob.glob(f"{src}/*.parquet")) - first_files:
+        os.utime(f, (1_000_000_100, 1_000_000_100))
+
+    stream = (
+        spark.readStream.schema(EMBEDDINGS_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .format("parquet")
+        .load(src)
+    )
+    ingest = StreamingIndexIngest(
+        HnswParams(dim=64, metric="cosine"), routed=True, num_partitions=4
+    )
+    idx = ingest.run(stream)
+    assert ingest.batches_seen == 2
+    ids = sorted(r["vec_id"] for r in emb.collect())
+    # routed placement stores a vector in more than one cell
+    assert sorted({r["id"] for r in idx.nodes.collect()}) == ids
+    q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    rows = knn_hnsw_routed(idx, q, k=1).filter(F.col("rnk") == 1).collect()
+    assert sorted(r["query_id"] for r in rows) == ids
+    for r in rows:
+        assert r["neighbor_id"] == r["query_id"]
+
+
 def test_streaming_quantized_ingest_matches_batch_lifecycle(spark, sf_smoke, tmp_path):
     """StreamingQuantizedIngest == build(first batch).add(rest):
     a two-file stream (mtime-ordered so the even-id half is batch 1)

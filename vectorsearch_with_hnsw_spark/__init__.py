@@ -11,9 +11,36 @@ analysis, multimodal column plumbing).
 Design: declarative DataFrame plans everywhere Catalyst can optimize;
 Arrow-batched pandas kernels (`applyInPandas` / `mapInPandas`) only for
 the graph algorithms Spark genuinely cannot express.
+
+Importing the package drops the archive-backed import finders from
+`sys.path_importer_cache` (see `_drop_archive_finders`), so a Python
+worker stops re-reading pyspark.zip and the spark-core jar at the start
+of every task.
 """
 
 __version__ = "0.1.0"
+
+
+def _drop_archive_finders() -> None:
+    """Forget every `zipimporter` in `sys.path_importer_cache`.
+
+    pyspark's worker calls `importlib.invalidate_caches()` at the start
+    of each task, and on CPython 3.11 every cached `zipimporter` then
+    re-reads its archive's whole central directory: one per imported
+    pyspark subpackage plus the spark-core jar's, ~0.1-0.2 s per task.
+    The cache is only a cache: the path hooks rebuild a dropped finder
+    on the next import that needs it, from `zipimport`'s own directory
+    cache without a re-read, and imported modules stay in `sys.modules`."""
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
+_drop_archive_finders()
 
 
 def __getattr__(name):

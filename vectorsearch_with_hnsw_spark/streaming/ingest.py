@@ -39,9 +39,11 @@ class StreamingIndexIngest:
     HnswIndex, with rebuild compaction every ``rebuild_every`` appended
     partitions.
 
+    Empty micro-batches before the first non-empty one are skipped.
+
     ``routed=True`` switches to the layout-preserving ingest: the first
-    micro-batch builds a routed index (``hnsw_build_routed`` — centroid
-    cells trained on that first batch) and
+    non-empty micro-batch builds a routed index (``hnsw_build_routed`` —
+    centroid cells trained on that batch) and
     every later batch merges through ``append_routed`` — only touched
     partitions rebuild, the routed probe bound never grows with batch
     count, and no rebuild threshold is needed (the layout does not
@@ -69,6 +71,10 @@ class StreamingIndexIngest:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         self.batches_seen += 1
+        # the first batch with rows builds the index: an empty one would
+        # train no centroid cells, and every later append_routed raises
+        if self.index is None and batch_df.isEmpty():
+            return
         if self.routed:
             from ..index.routed import append_routed, hnsw_build_routed
 
