@@ -386,3 +386,43 @@ def test_save_load_probe_is_bit_identical_after_append(spark, tmp_path):
         if handle.kernel_out is not None:
             handle.kernel_out.unpersist(blocking=True)
     assert back == fresh
+
+
+def test_build_refuses_non_finite_vectors(spark):
+    """A NaN vector fails the build kernel loudly, naming its id, instead
+    of silently reordering its partition's neighbor lists."""
+    df = _vectors(spark, range(60)).withColumn(
+        "vec", F.when(F.col("id") == 23, F.array_repeat(F.lit(float("nan")), 8)).otherwise(F.col("vec"))
+    )
+    idx = hnsw_build(df, HnswParams(dim=8, metric="l2"), num_partitions=3)
+    with pytest.raises(Exception, match=r"NaN or infinite values; first id 23"):
+        idx.edges.count()
+    idx.kernel_out.unpersist(blocking=True)
+
+
+def test_build_and_probe_do_not_depend_on_input_layout(spark):
+    """The same vectors built from three physical layouts give the same
+    graphs and the same probe rows: the build and probe kernels number
+    each partition's rows by id, not by shuffle arrival order."""
+    rng = np.random.default_rng(13)
+    X = rng.standard_normal((600, 32))
+    rows = [(int(i), [float(v) for v in x]) for i, x in enumerate(X)]
+    schema = "id long, vec array<double>"
+    Q = np.vstack([rng.standard_normal((12, 32)), X[[5, 250, 599]]])
+    q = spark.createDataFrame(
+        [(int(i), [float(v) for v in x]) for i, x in enumerate(Q)], "query_id long, query_vec array<double>"
+    )
+    base = spark.createDataFrame(rows, schema)
+    layouts = [base.repartition(1), base.repartition(7), spark.createDataFrame(rows[::-1], schema)]
+    params = HnswParams(dim=32, metric="l2")
+    seen = []
+    for df in layouts:
+        idx = hnsw_build(df, params, num_partitions=3)
+        seen.append([
+            sorted(tuple(r) for r in frame.collect())
+            for frame in (idx.edges, knn_hnsw(idx, q, k=10), knn_hnsw_distributed(idx, q, k=10))
+        ])
+        idx.kernel_out.unpersist(blocking=True)
+    assert seen[0][0] and seen[0][1]
+    assert seen[1] == seen[0]
+    assert seen[2] == seen[0]

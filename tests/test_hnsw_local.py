@@ -314,3 +314,155 @@ def test_graph_identical_without_precomputed_column(data, metric, monkeypatch):
     new, old = _build_pair(metric, data[:250])
     assert new._query_dists_all(data[0]) is None
     _assert_identical(new, old, _queries(data[:250]))
+
+
+# ---------------- layer 0 from the pairwise matrix ----------------
+
+
+def _layer0_reference(idx):
+    """Oracle for the kernel's layer 0, as plain per-node loops over the
+    alive rows: all pairwise distances sorted by (dist, row) and cut to
+    ef_construction, the per-candidate diversity test of
+    ``_PerCandidateHNSW._select_neighbors``, reverse edges, then a
+    stable closest-max_m0 prune. Distances come from the kernel's matrix
+    (checked against a float64 brute force below), so exact ties resolve
+    the same way on both sides. Returns {row: layer-0 neighbor rows}."""
+    rows = [r for r in range(len(idx.ids)) if not idx.deleted[r]]
+    D = idx._layer0_matrix(np.array(rows)).tolist()
+    n, m, efc = len(rows), idx.p.max_m0, idx.p.ef_construction
+    fwd = []
+    for i in range(n):
+        cands = sorted((D[i][j], j) for j in range(n) if j != i)[:efc]
+        kept: list[int] = []
+        for d_q, j in cands:
+            if len(kept) >= m:
+                break
+            if any(D[j][kk] < d_q for kk in kept):
+                continue
+            kept.append(j)
+        fwd.append(kept)
+    lists = [list(kept) for kept in fwd]
+    for i in range(n):
+        for j in fwd[i]:
+            if i not in lists[j]:
+                lists[j].append(i)
+    out = {}
+    for i in range(n):
+        lst = lists[i]
+        if len(lst) > m:
+            lst = sorted(lst, key=lambda j: D[i][j])[:m]
+        out[rows[i]] = [rows[j] for j in lst]
+    return out
+
+
+def _assert_layer0_matches_reference(idx, x):
+    want = _layer0_reference(idx)
+    got = {r: idx.graph[r].get(0, []) for r in want}
+    assert got == want
+    # the kernel's matrix is the metric's exact all-pairs distance
+    rows = np.array(sorted(want))
+    D = idx._layer0_matrix(rows).astype(np.float64)
+    v = x[rows].astype(np.float64)
+    if idx.p.metric == "l2":
+        exact = np.sqrt(np.maximum(((v[:, None, :] - v[None, :, :]) ** 2).sum(-1), 0.0))
+    else:
+        norms = np.linalg.norm(v, axis=1)
+        denom = norms[:, None] * norms[None, :]
+        exact = np.where(denom == 0, 1.0, 1.0 - (v @ v.T) / np.where(denom == 0, 1.0, denom))
+    off = ~np.eye(len(rows), dtype=bool)
+    assert np.allclose(D[off], exact[off], rtol=1e-5, atol=1e-5)
+    assert np.isinf(np.diag(D)).all()
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_layer0_matches_reference(data, metric):
+    idx = LocalHNSW(HnswParams(dim=32, metric=metric))
+    idx.add_batch(np.arange(len(data)), data)
+    _assert_layer0_matches_reference(idx, data)
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_layer0_matches_reference_with_duplicates_and_zero_vectors(metric):
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal((150, 16)).astype(np.float32)
+    x = np.vstack([base, base[:40], base[:10], np.zeros((12, 16), np.float32)])
+    x = x[rng.permutation(len(x))]
+    idx = LocalHNSW(HnswParams(dim=16, metric=metric))
+    idx.add_batch(np.arange(len(x)), x)
+    _assert_layer0_matches_reference(idx, x)
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_layer0_matches_reference_after_delete(data, metric):
+    """A later batch rebuilds layer 0 over the alive rows: tombstones are
+    no one's candidate and keep the lists they had."""
+    idx = LocalHNSW(HnswParams(dim=32, metric=metric))
+    idx.add_batch(np.arange(300), data[:300])
+    dead = (0, 17, 123)
+    for gid in dead:
+        assert idx.delete(gid)
+    before = {gid: list(idx.graph[gid][0]) for gid in dead}
+    idx.add_batch(np.arange(300, 400), data[300:])
+    _assert_layer0_matches_reference(idx, data)
+    assert {gid: idx.graph[gid][0] for gid in dead} == before
+    for gid in dead:
+        assert not any(gid in idx.graph[r].get(0, []) for r in range(len(idx.ids)) if not idx.deleted[r])
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_walked_layer0_identical_past_the_matrix_cap(data, metric, monkeypatch):
+    """Past the matrix cap layer 0 is walked like the upper layers: the
+    same graphs and results as the per-candidate loops, within the
+    degree caps."""
+    monkeypatch.setattr(LocalHNSW, "_LAYER0_MAX_ROWS", 0)
+    new, old = _build_pair(metric, data)
+    _assert_identical(new, old, _queries(data))
+    matrix = LocalHNSW(new.p)
+    monkeypatch.undo()
+    matrix.add_batch(np.arange(len(data)), data)
+    assert [a.get(0) for a in matrix.graph] != [a.get(0) for a in new.graph]
+    for row, adj in enumerate(new.graph):
+        for layer, nbrs in adj.items():
+            assert len(nbrs) <= (new.p.max_m0 if layer == 0 else new.p.M), (row, layer)
+
+
+def _clustered(n, dim, seed, n_centers=20):
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((n_centers, dim))
+    x = centers[rng.integers(0, n_centers, n)] + 0.35 * rng.standard_normal((n, dim))
+    return x.astype(np.float32)
+
+
+@pytest.mark.parametrize("cap", [None, 0])
+def test_recall_at_ef50_on_clustered_set(cap, monkeypatch):
+    """recall@10 at ef=50 on 2,000 clustered 64-d vectors, for the matrix
+    layer 0 and for the walked one (cap 0)."""
+    if cap is not None:
+        monkeypatch.setattr(LocalHNSW, "_LAYER0_MAX_ROWS", cap)
+    x = _clustered(2050, 64, seed=21)
+    base, qs = x[:2000], x[2000:]
+    idx = LocalHNSW(HnswParams(dim=64, metric="l2"))
+    idx.add_batch(np.arange(len(base)), base)
+    hits = 0
+    for q in qs:
+        want, _ = brute_topk(base, q, 10, "l2")
+        hits += len({i for i, _ in idx.search(q, k=10, ef=50)} & set(want.tolist()))
+    assert hits / (10 * len(qs)) >= 0.95
+
+
+def test_non_finite_vectors_raise_before_the_graph_changes():
+    """A NaN or inf vector would reorder other rows' neighbors (an inf
+    row outranks an exact self-match under L2); the batch is refused
+    with the count and the first offending id, and nothing is added."""
+    x = np.random.default_rng(0).standard_normal((300, 16)).astype(np.float32)
+    idx = LocalHNSW(HnswParams(dim=16))
+    idx.add_batch(np.arange(100), x[:100])
+    edges = [a.copy() for a in idx.edges()]
+    bad = x[100:].copy()
+    bad[9, 0] = np.inf
+    bad[5, 3] = np.nan
+    with pytest.raises(ValueError, match=r"2 vector\(s\) with NaN or infinite values; first id 105"):
+        idx.add_batch(np.arange(100, 300), bad)
+    assert len(idx.ids) == 100
+    for a, b in zip(idx.edges(), edges):
+        assert np.array_equal(a, b)

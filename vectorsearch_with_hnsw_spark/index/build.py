@@ -324,9 +324,11 @@ def build_graphs(
     """The partition build kernel, shared by every build path: ``src``
     holds the placed rows (id, vec, partition), and each partition's
     local graph is built by a single Arrow exchange + numpy build
-    inside ``applyInPandas``. Levels derive from global ids, so they do
-    not depend on the cluster layout; the edges do — ``add_batch``
-    inserts rows in the order the grouped shuffle delivers them.
+    inside ``applyInPandas``. Neither the levels nor the edges depend
+    on the cluster layout: levels derive from global ids, and the kernel
+    sorts its partition's rows by id before ``add_batch``, so insert
+    order and distance ties follow ids, not the order the grouped
+    shuffle delivers rows in.
 
     The kernel writes the whole index once, as one frame of three row
     kinds (``KERNEL_SCHEMA``): a node row (id, vec, level) per input
@@ -343,6 +345,7 @@ def build_graphs(
     probe then runs it once per side of its cogroup."""
 
     def build_partition(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("id", kind="stable")
         ids = pdf["id"].to_numpy(dtype=np.int64)
         idx = LocalHNSW(params)
         idx.add_batch(ids, np.array(list(pdf["vec"]), dtype=np.float32))

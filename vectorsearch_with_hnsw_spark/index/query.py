@@ -43,6 +43,8 @@ def _probe_kernel(index: HnswIndex, k: int, ef: int | None):
     ``probe(nodes_pdf, edges_pdf, qids, qvecs)``: it rebuilds the
     partition's local graph from its nodes/edges rows and emits each
     query's per-partition top-k as (query_id, neighbor_id, dist). The
+    node rows are numbered in id order, as the build numbers them, so
+    exact-distance ties break by id, not by shuffle arrival order. The
     entry points come from the handle's record (one meta collect per
     handle) and travel in the closure: no job, no broadcast."""
     params = index.params
@@ -51,6 +53,7 @@ def _probe_kernel(index: HnswIndex, k: int, ef: int | None):
     def probe(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame, qids, qvecs) -> pd.DataFrame:
         out_q, out_n, out_d = [], [], []
         if len(nodes_pdf) and len(qids):
+            nodes_pdf = nodes_pdf.sort_values("id", kind="stable")
             part = int(nodes_pdf["partition"].iloc[0])
             entry_point, max_layer = entries.get(part, (None, -1))
             idx = LocalHNSW.from_tables(

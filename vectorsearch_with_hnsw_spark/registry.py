@@ -4902,8 +4902,11 @@ def q_hnsw_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       cap (the prune kernel's contract) and linked nodes a subset of
       the layer population.
 
-    Edge counts/mean degree stay in the full rollup — they depend on
-    insert interleaving and are exactly what the booleans bound."""
+    Edge counts/mean degree stay in the full rollup — they are a
+    function of the graph construction (layer 0 from exact candidates
+    pruned by the diversity rule, the insert walk above it), which an
+    oracle does not re-derive, and are exactly what the booleans
+    bound."""
     from .index.build import HnswParams, hnsw_build, hnsw_stats
 
     emb = load_table(spark, sf_dir, "embeddings")
