@@ -89,7 +89,10 @@ def test_probes_reach_partitions_without_meta_row(spark):
     """A partition holding 0 or 1 nodes emits no edges, so it has no
     meta row. Both probe-all paths must still visit it: here partition
     3 holds only id 3, and every vector must come back as its own
-    top-1 from ``knn_hnsw`` and from ``knn_hnsw_distributed``."""
+    top-1 from ``knn_hnsw`` and from ``knn_hnsw_distributed``, also on
+    a handle with no recorded modulus, which takes its partition count
+    from the nodes table (4 here, not the 2 partitions with edges) —
+    its ``rebuild`` too."""
     X = np.random.default_rng(0).standard_normal((6, 8))
     vecs = spark.createDataFrame(
         [(i, [float(v) for v in X[i]]) for i in range(6)], "id long, vec array<double>"
@@ -99,17 +102,19 @@ def test_probes_reach_partitions_without_meta_row(spark):
     node_parts = {r["partition"] for r in idx.nodes.select("partition").collect()}
     assert node_parts - meta_parts, "fixture must hold a partition with no meta row"
     q = vecs.select(F.col("id").alias("query_id"), F.col("vec").alias("query_vec"))
-    for probe in (knn_hnsw, knn_hnsw_distributed):
-        top1 = {r["query_id"]: r["neighbor_id"] for r in probe(idx, q, k=1).collect()}
+    bare = HnswIndex(idx.nodes, idx.edges, idx.params)
+    for handle, probe in ((idx, knn_hnsw), (idx, knn_hnsw_distributed), (bare, knn_hnsw_distributed)):
+        top1 = {r["query_id"]: r["neighbor_id"] for r in probe(handle, q, k=1).collect()}
         assert top1 == {i: i for i in range(6)}, probe.__name__
+    assert bare.rebuild().num_partitions == 4
 
 
 def test_distributed_probe_without_recorded_modulus(index, queries):
     """A handle that records no build modulus (``num_partitions=None``,
     e.g. an index saved before the modulus was kept) replicates queries
-    over the partitions of its entry-point record and still answers
-    exactly like the broadcast probe."""
-    bare = HnswIndex(index.nodes, index.edges, index.meta, index.params)
+    over the partitions of its nodes table and still answers exactly
+    like the broadcast probe."""
+    bare = HnswIndex(index.nodes, index.edges, index.params)
 
     def ranked(df):
         return {(r["query_id"], r["neighbor_id"], r["rnk"]) for r in df.collect()}
@@ -386,6 +391,25 @@ def test_save_load_probe_is_bit_identical_after_append(spark, tmp_path):
         if handle.kernel_out is not None:
             handle.kernel_out.unpersist(blocking=True)
     assert back == fresh
+
+
+def test_load_ignores_meta_table_of_earlier_saves(spark, index, queries, tmp_path):
+    """Earlier versions saved a ``meta/`` table (partition, entry_point,
+    max_layer, n_nodes) next to ``nodes/`` and ``edges/``. An index saved
+    that way loads and probes exactly like the same index saved
+    without it."""
+    new, old = str(tmp_path / "new"), str(tmp_path / "old")
+    index.save(new)
+    index.save(old)
+    index.meta.write.parquet(f"{old}/meta")
+
+    def answers(handle):
+        return [sorted(tuple(r) for r in probe(handle, queries, k=5).collect())
+                for probe in (knn_hnsw, knn_hnsw_distributed)]
+
+    a, b = HnswIndex.load(spark, new), HnswIndex.load(spark, old)
+    assert answers(b) == answers(a)
+    assert b.num_partitions == a.num_partitions == 4
 
 
 def test_build_refuses_non_finite_vectors(spark):

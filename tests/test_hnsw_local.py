@@ -426,6 +426,29 @@ def test_walked_layer0_identical_past_the_matrix_cap(data, metric, monkeypatch):
             assert len(nbrs) <= (new.p.max_m0 if layer == 0 else new.p.M), (row, layer)
 
 
+@pytest.mark.parametrize("cap", [None, 0])
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+@pytest.mark.parametrize("n", [1, 2, 50, 200])
+def test_entry_point_is_lowest_id_of_highest_level(metric, cap, n, monkeypatch):
+    """One add_batch over id-sorted rows ends with the lowest id of the
+    highest level as entry, for the matrix layer 0 and the walked one
+    (cap 0). Nothing stores the entry: a probe's from_tables takes it
+    from the node rows by this rule, and must land on the same row."""
+    if cap is not None:
+        monkeypatch.setattr(LocalHNSW, "_LAYER0_MAX_ROWS", cap)
+    rng = np.random.default_rng(n)
+    for _ in range(3):
+        ids = np.sort(rng.choice(1 << 40, size=n, replace=False))
+        x = rng.standard_normal((n, 16)).astype(np.float32)
+        idx = LocalHNSW(HnswParams(dim=16, metric=metric, M=4))
+        idx.add_batch(ids, x)
+        levels = np.array(idx.levels)
+        top = int(levels.max())
+        assert (idx.ids[idx.entry_point], idx.max_layer) == (int(ids[levels == top].min()), top)
+        back = LocalHNSW.from_tables(idx.p, ids, x, levels, np.zeros(n, dtype=bool), *idx.edges())
+        assert (back.entry_point, back.max_layer) == (idx.entry_point, idx.max_layer)
+
+
 def _clustered(n, dim, seed, n_centers=20):
     rng = np.random.default_rng(seed)
     centers = rng.standard_normal((n_centers, dim))

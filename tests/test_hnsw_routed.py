@@ -288,7 +288,7 @@ def test_rebuild_of_routed_index_stays_routed(spark, emb, queries):
 def test_routed_build_exposes_kernel_out(spark, emb, queries):
     """A routed build (and so a routed rebuild) hands back its persisted
     kernel output, like hnsw_build: the caller can release exactly that
-    cache entry, and the index answers the same afterwards (edges/meta
+    cache entry, and the index answers the same afterwards (nodes/edges
     are recomputed from the tables' lineage)."""
     idx = hnsw_build_routed(
         emb.filter(F.col("vec_id") < 300).select(

@@ -768,15 +768,16 @@ def test_hnsw_merge_topk_is_one_exchange(spark):
     ]
 
 
-def test_repeat_hnsw_probe_runs_no_meta_job(spark, sf_smoke):
-    """The handle keeps its entry-point record: a second knn_hnsw on it
-    runs fewer jobs than the first, and none on meta — a meta that
-    fails when evaluated does not stop the second probe."""
-    from pyspark.sql.functions import udf
-
+def test_first_hnsw_probe_runs_as_many_jobs_as_a_repeat(spark, sf_smoke):
+    """A probe reads each partition's entry point off the node rows it
+    receives, so a fresh handle's first knn_hnsw runs no extra job for
+    per-index search state: as many jobs as a repeat probe, with the
+    same rows. The build runs first, so both probes read its cached
+    output."""
     from vectorsearch_with_hnsw_spark.index.query import knn_hnsw
 
     idx, q = _hnsw_probe_fixture(spark, sf_smoke)
+    idx.kernel_out.count()
     sc = spark.sparkContext
 
     def probe_jobs(group):
@@ -788,16 +789,11 @@ def test_repeat_hnsw_probe_runs_no_meta_job(spark, sf_smoke):
             sc.setLocalProperty("spark.job.description", None)
         return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    first, first_jobs = probe_jobs("test_repeat_hnsw_probe_first")
-
-    @udf("long")
-    def boom(v):
-        raise RuntimeError("meta evaluated")
-
-    idx.meta = idx.meta.withColumn("entry_point", boom("entry_point"))
-    second, second_jobs = probe_jobs("test_repeat_hnsw_probe_second")
+    first, first_jobs = probe_jobs("test_first_hnsw_probe_first")
+    second, second_jobs = probe_jobs("test_first_hnsw_probe_second")
+    idx.kernel_out.unpersist(blocking=True)
     assert second == first
-    assert 0 < second_jobs < first_jobs
+    assert 0 < first_jobs == second_jobs
 
 
 def test_fresh_hnsw_probe_reads_levels_from_the_kernel_output(spark, sf_smoke):

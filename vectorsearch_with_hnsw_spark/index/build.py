@@ -10,17 +10,24 @@ graphs lose no recall as long as every partition is probed — the merge
 of per-partition exact top-k IS the global top-k, and per-partition ANN
 recall composes the same way.
 
-Index artifact = three Parquet-backed tables (the columnar analog of the
-reference's vectors.npy / graph.json / meta.json, hsnw_trial.py:310-342):
+Index artifact = two Parquet-backed tables + a params JSON sidecar (the
+columnar analog of the reference's vectors.npy / graph.json / meta.json,
+hsnw_trial.py:310-342):
 
   nodes(partition, id, vec, level, deleted)
   edges(partition, layer, src, dst)
-  meta (partition, entry_point, max_layer, n_nodes) + a params JSON sidecar
 
-A built handle holds all three as filter + projection views of ONE
-persisted build-kernel output (``build_graphs``: node, edge and meta
-rows of each partition, written by the kernel that built its graph) —
-the in-memory index object of the reference (vectors, levels and graph
+The reference stores entry_point / max_level because it inserts one point
+at a time. Here each partition graph is one ``add_batch`` over id-sorted
+rows, so its entry point is always the lowest id of its highest level
+(``LocalHNSW.from_tables`` takes it from the node rows a probe already
+reads), and ``HnswIndex.meta`` is a view derived from nodes and edges,
+not stored.
+
+A built handle holds nodes and edges as filter + projection views of ONE
+persisted build-kernel output (``build_graphs``: node and edge rows of
+each partition, written by the kernel that built its graph) — the
+in-memory index object of the reference (vectors, levels and graph
 together, hsnw_trial.py:197-265). Levels are drawn once, by the kernel,
 and a probe reads the index from that output, never from the build's
 source. A loaded handle reads the same views from Parquet.
@@ -46,23 +53,22 @@ from ..cache import persist_tracked
 
 NODES_SCHEMA = "partition int, id long, vec array<float>, level int, deleted boolean"
 EDGES_SCHEMA = "partition int, layer int, src long, dst long"
-META_SCHEMA = "partition int, entry_point long, max_layer int, n_nodes long"
-# the build kernel's output: node, edge and meta rows in one frame, each
-# kind filling only its own columns (level / layer / n_nodes non-NULL)
-KERNEL_SCHEMA = ("partition int, id long, vec array<float>, level int, layer int, src long, dst long, "
-                 "entry_point long, max_layer int, n_nodes long")
+# the build kernel's output: node and edge rows in one frame, each kind
+# filling only its own columns (level / layer non-NULL)
+KERNEL_SCHEMA = "partition int, id long, vec array<float>, level int, layer int, src long, dst long"
 # the placement record of an index (HnswIndex constructor arguments);
 # all but centroids travel in the saved params JSON
 _LAYOUT = ("num_partitions", "appended_partitions", "assign_n", "centroids")
 
 
 class HnswIndex:
-    """Handle to the three index tables + params + the placement layout.
+    """Handle to the nodes and edges tables + params + the placement
+    layout; ``meta`` is a view derived from the two tables.
 
     ``num_partitions`` records the BUILD's partition count: the hash
     modulus of a hash-placed index, the P that sets a routed index's
-    default probe budget. Deriving it from meta.count() is wrong when a
-    partition ends up with 0/1 nodes (no edge rows -> no meta row).
+    default probe budget. A handle without one (``None``) takes
+    ``max(partition) + 1`` of its nodes table (``_partition_count``).
     ``append`` NEVER bumps it: appended partitions are hash-placed, not
     centroid cells, so they live outside the routing space and are
     tracked in ``appended_partitions`` — the routed probe adds them to
@@ -73,7 +79,6 @@ class HnswIndex:
         self,
         nodes: DataFrame,
         edges: DataFrame,
-        meta: DataFrame,
         params: HnswParams,
         num_partitions: int | None = None,
         appended_partitions: list[int] | None = None,
@@ -82,7 +87,6 @@ class HnswIndex:
     ):
         self.nodes = nodes
         self.edges = edges
-        self.meta = meta
         self.params = params
         self.num_partitions = num_partitions
         self.appended_partitions = list(appended_partitions or [])
@@ -97,7 +101,7 @@ class HnswIndex:
         self.assign_n = int(assign_n)
         self.centroids = centroids
         # the persisted build-kernel output, the storage of a built
-        # handle: nodes/edges/meta are filter + projection views of it
+        # handle: nodes/edges are filter + projection views of it
         # (unpersisting those is a no-op). Set by every build path and
         # handed on by delete/append; exposed so callers (bench,
         # repeated rebuilds) can release exactly this cache entry. After
@@ -107,13 +111,37 @@ class HnswIndex:
         # (centroid matrix, cell ids) probe-side cache of a routed
         # handle, filled by index.routed
         self._centroids_np = None
-        # {partition: (entry_point, max_layer)}, read from meta by the
-        # first probe (see _entry_points)
-        self._entries: dict[int, tuple[int, int]] | None = None
 
     @property
     def routed(self) -> bool:
         return self.centroids is not None
+
+    @property
+    def meta(self) -> DataFrame:
+        """``(partition, entry_point, max_layer, n_nodes)`` of each
+        partition with edges, derived from nodes and edges when read:
+        the entry point is the lowest id of the highest level (the
+        build's entry, and the probe's), ``n_nodes`` the distinct edge
+        sources. A read-only view for callers; no build, probe, save or
+        load path reads it."""
+        top = self.nodes.groupBy("partition").agg(
+            F.min(F.struct((-F.col("level")).alias("neg_level"), "id")).alias("_top")
+        )
+        linked = self.edges.groupBy("partition").agg(F.countDistinct("src").alias("n_nodes"))
+        return top.join(linked, "partition").select(
+            "partition",
+            F.col("_top.id").alias("entry_point"),
+            (-F.col("_top.neg_level")).alias("max_layer"),
+            "n_nodes",
+        )
+
+    def _partition_count(self) -> int:
+        """The build's partition count: the recorded modulus, else the
+        nodes table's ``max(partition) + 1`` (one job, on a handle
+        without a recorded modulus only)."""
+        if self.num_partitions is not None:
+            return int(self.num_partitions)
+        return self.nodes.agg(F.coalesce(F.max("partition"), F.lit(-1))).first()[0] + 1
 
     def _layout(self) -> dict:
         """The placement state every derived handle carries over. Losing
@@ -123,20 +151,6 @@ class HnswIndex:
         append_routed pass all of it."""
         return {key: getattr(self, key) for key in _LAYOUT}
 
-    def _entry_points(self) -> dict[int, tuple[int, int]]:
-        """Each graph's search entry, ``{partition: (entry_point,
-        max_layer)}``: one collect of meta on the handle's first probe,
-        reused by every later probe (meta never changes under a handle).
-        Taken at the first probe, not at build or load, so a build stays
-        lazy. A partition with 0/1 nodes has no meta row and no entry
-        here; its kernel falls back to its own entry point."""
-        if self._entries is None:
-            self._entries = {
-                int(r["partition"]): (int(r["entry_point"]), int(r["max_layer"]))
-                for r in self.meta.select("partition", "entry_point", "max_layer").collect()
-            }
-        return self._entries
-
     def save(self, path: str) -> None:
         """Persist as Parquet tables + params sidecar (logical equivalent
         of the reference save(), hsnw_trial.py:310-342). nodes/edges are
@@ -145,7 +159,6 @@ class HnswIndex:
         job's cogroup starts from co-partitioned files."""
         self.nodes.write.mode("overwrite").partitionBy("partition").parquet(f"{path}/nodes")
         self.edges.write.mode("overwrite").partitionBy("partition").parquet(f"{path}/edges")
-        self.meta.write.mode("overwrite").parquet(f"{path}/meta")
         spark = self.nodes.sparkSession
         payload = dict(asdict(self.params))
         if self.num_partitions is not None:
@@ -166,7 +179,8 @@ class HnswIndex:
         344-376, including params defaulting via HnswParams defaults).
         Refuses an LSH-routed index (``routing: "lsh"``, or ``routed:
         true`` with no ``routing`` key, the form saved before the
-        routing family was recorded): LSH routing is gone."""
+        routing family was recorded): LSH routing is gone. A ``meta/``
+        table that earlier versions saved is not read."""
         raw = json.loads(spark.read.json(f"{path}/params").first()["params_json"])
         layout = {key: raw.pop(key) for key in _LAYOUT if key in raw}
         # keys of the removed LSH routing, which earlier versions wrote for
@@ -185,7 +199,6 @@ class HnswIndex:
         return cls(
             spark.read.parquet(f"{path}/nodes"),
             spark.read.parquet(f"{path}/edges"),
-            spark.read.parquet(f"{path}/meta"),
             params,
             **layout,
         )
@@ -200,10 +213,9 @@ class HnswIndex:
             .withColumn("deleted", F.col("deleted") | F.col("_del_id").isNotNull())
             .drop("_del_id")
         )
-        out = HnswIndex(nodes, self.edges, self.meta, self.params, **self._layout())
-        # same storage, same meta, same entry points
+        out = HnswIndex(nodes, self.edges, self.params, **self._layout())
+        # same storage
         out.kernel_out = self.kernel_out
-        out._entries = self._entries
         return out
 
     def rebuild(self, num_partitions: int | None = None) -> "HnswIndex":
@@ -222,7 +234,7 @@ class HnswIndex:
             .select("id", "vec")
             .dropDuplicates(["id"])
         )
-        nparts = int(num_partitions or self.num_partitions or self.meta.count())
+        nparts = int(num_partitions or self._partition_count())
         if self.routed:
             from .routed import hnsw_build_routed
 
@@ -255,10 +267,7 @@ class HnswIndex:
         # modulus so appended ids NEVER land inside [0, num_partitions)
         # even when trailing build partitions ended up empty. Only a
         # handle with no recorded modulus reads the nodes table.
-        ends = [int(self.num_partitions or 0)] + [p + 1 for p in self.appended_partitions]
-        if self.num_partitions is None:
-            ends.append(self.nodes.agg(F.coalesce(F.max("partition"), F.lit(-1))).first()[0] + 1)
-        offset = max(ends)
+        offset = max([self._partition_count()] + [p + 1 for p in self.appended_partitions])
         fresh = hnsw_build(vectors_df, self.params, num_partitions=num_partitions,
                            id_col=id_col, vec_col=vec_col)
         shift = lambda df: df.withColumn("partition", (F.col("partition") + F.lit(offset)).cast("int"))  # noqa: E731
@@ -269,7 +278,6 @@ class HnswIndex:
         out = HnswIndex(
             self.nodes.unionByName(shift(fresh.nodes)),
             self.edges.unionByName(shift(fresh.edges)),
-            self.meta.unionByName(shift(fresh.meta)),
             self.params,
             **layout,
         )
@@ -312,15 +320,13 @@ def hnsw_build(
         # differs from hash(long), and partitions must not move
         (F.pmod(F.hash(F.col(id_col)), F.lit(num_partitions))).alias("partition"),
     )
-    nodes, edges, meta, kernel_out = build_graphs(src, params)
-    idx = HnswIndex(nodes, edges, meta, params, num_partitions=num_partitions)
+    nodes, edges, kernel_out = build_graphs(src, params)
+    idx = HnswIndex(nodes, edges, params, num_partitions=num_partitions)
     idx.kernel_out = kernel_out
     return idx
 
 
-def build_graphs(
-    src: DataFrame, params: HnswParams
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+def build_graphs(src: DataFrame, params: HnswParams) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The partition build kernel, shared by every build path: ``src``
     holds the placed rows (id, vec, partition), and each partition's
     local graph is built by a single Arrow exchange + numpy build
@@ -330,16 +336,17 @@ def build_graphs(
     order and distance ties follow ids, not the order the grouped
     shuffle delivers rows in.
 
-    The kernel writes the whole index once, as one frame of three row
+    The kernel writes the whole index once, as one frame of two row
     kinds (``KERNEL_SCHEMA``): a node row (id, vec, level) per input
-    row, with the vectors it was given and the levels it drew; an edge
-    row (layer, src, dst) per graph edge; and, for a partition with
-    edges, one meta row (entry_point, max_layer, n_nodes = distinct src
-    count). That output is persisted and is the index's storage: nodes,
-    edges and meta are filter + projection views of it, so a probe of
-    a fresh handle neither re-scans ``src`` nor recomputes levels.
+    row, with the vectors it was given and the levels it drew, and an
+    edge row (layer, src, dst) per graph edge. That output is persisted
+    and is the index's storage: nodes and edges are filter + projection
+    views of it, so a probe of a fresh handle neither re-scans ``src``
+    nor recomputes levels. The graph's entry point is not written: it is
+    the lowest id of the highest level, which a probe reads off the
+    node rows.
 
-    Returns (nodes, edges, meta, kernel_out); ``kernel_out`` is returned
+    Returns (nodes, edges, kernel_out); ``kernel_out`` is returned
     so the caller can release exactly that cache entry. After its
     ``unpersist`` every view recomputes the kernel from ``src`` — a
     probe then runs it once per side of its cogroup."""
@@ -350,10 +357,8 @@ def build_graphs(
         idx = LocalHNSW(params)
         idx.add_batch(ids, np.array(list(pdf["vec"]), dtype=np.float32))
         layer, s, t = idx.edges()
-        # row kinds in order: nodes [0, e0), edges [e0, m0), meta [m0, end)
-        e0, m0 = len(ids), len(ids) + len(layer)
-        meta = ([idx.ids[idx.entry_point]], [idx.max_layer], [np.unique(s).size]) if len(layer) else ([], [], [])
-        end = m0 + len(meta[0])
+        # row kinds in order: nodes [0, e0), edges [e0, end)
+        e0, end = len(ids), len(ids) + len(layer)
 
         def rows(start: int, values, dtype="Int64") -> pd.Series:
             # one row kind's column; NULL on the other kinds' rows
@@ -366,7 +371,6 @@ def build_graphs(
             # over each cell, which on a numpy array yields numpy scalars
             "vec": [v.tolist() for v in pdf["vec"]] + [None] * (end - e0),
             "layer": rows(e0, layer, "Int32"), "src": rows(e0, s), "dst": rows(e0, t),
-            "entry_point": rows(m0, meta[0]), "max_layer": rows(m0, meta[1], "Int32"), "n_nodes": rows(m0, meta[2]),
         })
 
     kernel_out = src.groupBy("partition").applyInPandas(
@@ -381,8 +385,7 @@ def build_graphs(
 
     nodes = view("level", "id", "vec", "level", F.lit(False).alias("deleted"))
     edges = view("layer", "layer", "src", "dst")
-    meta = view("n_nodes", "entry_point", "max_layer", "n_nodes")
-    return nodes, edges, meta, kernel_out
+    return nodes, edges, kernel_out
 
 
 def hnsw_stats(index: "HnswIndex") -> DataFrame:

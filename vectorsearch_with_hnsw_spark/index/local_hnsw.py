@@ -58,7 +58,11 @@ build and probe kernels number a partition's rows in id order
 (``build.build_graphs``, ``query._probe_kernel``), so insert order and
 exact-distance ties — the (dist, row) candidate order, the walk, the
 search heap — follow ids, and a partition's graph and probe results do
-not depend on the order a shuffle delivers its rows in.
+not depend on the order a shuffle delivers its rows in. The same order
+fixes the entry point: the walk keeps the first row of the highest
+level, so one ``add_batch`` over id-sorted rows ends with the lowest id
+of the highest level as entry. Nothing stores it; ``from_tables``
+applies that rule to the node rows a probe receives.
 """
 
 from __future__ import annotations
@@ -514,11 +518,10 @@ class LocalHNSW:
         edge_layer: np.ndarray,
         edge_src: np.ndarray,
         edge_dst: np.ndarray,
-        entry_point: int | None,
-        max_layer: int,
     ) -> "LocalHNSW":
         """Reconstruct a probe-ready kernel from the persisted columnar
-        tables (the load() path)."""
+        tables (the load() path). The entry point is the build's: the
+        lowest id of the highest level (see the module docstring)."""
         idx = cls(params)
         idx.ids = [int(i) for i in ids]
         idx.vectors = [np.asarray(v, dtype=np.float32) for v in vectors]
@@ -528,20 +531,9 @@ class LocalHNSW:
         rowof = {gid: r for r, gid in enumerate(idx.ids)}
         for layer, s, t in zip(edge_layer, edge_src, edge_dst):
             idx.graph[rowof[int(s)]].setdefault(int(layer), []).append(rowof[int(t)])
-        if entry_point is not None:
-            idx.entry_point = rowof[int(entry_point)]
-            idx.max_layer = int(max_layer)
-        elif idx.ids:
-            # A partition can carry nodes but no meta row (a 0/1-node
-            # local graph emits no edges, and meta derives from the edge
-            # table) — without a fallback entry its nodes are silently
-            # unsearchable. Mirror the build's entry rule: the
-            # highest-level node, lowest id on ties.
-            best = max(range(len(idx.ids)), key=lambda r: (idx.levels[r], -idx.ids[r]))
-            idx.entry_point = best
-            idx.max_layer = idx.levels[best]
-        else:
-            idx.entry_point = None
-            idx.max_layer = int(max_layer)
+        if idx.ids:
+            # rowof: a duplicated id's edges hang off its last row
+            idx.max_layer = max(idx.levels)
+            idx.entry_point = rowof[min(i for i, l in zip(idx.ids, idx.levels) if l == idx.max_layer)]
         idx._refresh_cache()
         return idx

@@ -14,11 +14,11 @@ as the label join), replicated to every partition of the layout by a
 narrow explode (``knn_hnsw_distributed``) or routed to candidate
 partitions (``index.routed.knn_hnsw_routed``); the latter two go through
 ``probe_placed``. All three run one kernel (``_probe_kernel``) and one
-merge (``_merge_topk``, a single Exchange). Per-index search state is
-taken once: meta is read once per index handle
-(``HnswIndex._entry_points``), and the partition list comes from the
-handle's layout fields, so a repeat probe runs no meta job, broadcast
-or join.
+merge (``_merge_topk``, a single Exchange). The kernel takes a
+partition's entry point from the node rows it receives — the lowest id
+of the highest level, the entry the build's id-ordered ``add_batch``
+ends with — and the partition list comes from the handle's layout
+fields, so no probe runs a job for per-index search state.
 Semantics match the reference search (hsnw_trial.py:267-294): greedy
 descent, ef-search at layer 0 with ef = max(ef, k), tombstones skipped,
 results ascending, k-truncated.
@@ -44,18 +44,15 @@ def _probe_kernel(index: HnswIndex, k: int, ef: int | None):
     partition's local graph from its nodes/edges rows and emits each
     query's per-partition top-k as (query_id, neighbor_id, dist). The
     node rows are numbered in id order, as the build numbers them, so
-    exact-distance ties break by id, not by shuffle arrival order. The
-    entry points come from the handle's record (one meta collect per
-    handle) and travel in the closure: no job, no broadcast."""
+    exact-distance ties break by id, not by shuffle arrival order, and
+    the entry point is the one ``LocalHNSW.from_tables`` derives from
+    the node rows."""
     params = index.params
-    entries = index._entry_points()
 
     def probe(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame, qids, qvecs) -> pd.DataFrame:
         out_q, out_n, out_d = [], [], []
         if len(nodes_pdf) and len(qids):
             nodes_pdf = nodes_pdf.sort_values("id", kind="stable")
-            part = int(nodes_pdf["partition"].iloc[0])
-            entry_point, max_layer = entries.get(part, (None, -1))
             idx = LocalHNSW.from_tables(
                 params,
                 nodes_pdf["id"].to_numpy(dtype=np.int64),
@@ -65,8 +62,6 @@ def _probe_kernel(index: HnswIndex, k: int, ef: int | None):
                 edges_pdf["layer"].to_numpy(dtype=np.int32),
                 edges_pdf["src"].to_numpy(dtype=np.int64),
                 edges_pdf["dst"].to_numpy(dtype=np.int64),
-                entry_point,
-                max_layer,
             )
             for qid, qv in zip(qids, qvecs):
                 for nid, d in idx.search(qv, k=k, ef=ef):
@@ -148,9 +143,9 @@ def knn_hnsw_distributed(
 
     Each query is replicated to every partition of the index layout —
     ``range(num_partitions)`` plus ``appended_partitions``, read off
-    the handle — by one narrow explode (no meta scan, no join; exactly
-    the probe-all contract, including partitions too small to have a
-    meta row) and probed by ``probe_placed``. Shuffle volume: |Q| * P
+    the handle — by one narrow explode (no join; exactly the probe-all
+    contract, including partitions too small to have edges) and probed
+    by ``probe_placed``. Shuffle volume: |Q| * P
     query rows + one pass of the index tables; the merge stays
     O(P * Q * k).
     """
@@ -164,15 +159,12 @@ def knn_hnsw_distributed(
 
 def _every_partition(index: HnswIndex) -> Column:
     """The index's partition ids as one array expression: a ``sequence``
-    over the build modulus (the same size at any P) concatenated with
-    the appended partitions. A handle without a recorded modulus lists
-    the partitions of its entry-point record instead."""
-    ints = lambda ps: F.array(*[F.lit(int(p)) for p in ps]).cast("array<int>")  # noqa: E731
-    if index.num_partitions is None:
-        return ints(sorted(set(index._entry_points()) | set(index.appended_partitions)))
-    return F.concat(
-        F.sequence(F.lit(0), F.lit(int(index.num_partitions) - 1)), ints(index.appended_partitions)
-    )
+    over the build's partition count (``HnswIndex._partition_count``;
+    the same size at any P) concatenated with the appended partitions
+    outside it."""
+    P = index._partition_count()
+    tail = F.array(*[F.lit(int(p)) for p in index.appended_partitions if p >= P]).cast("array<int>")
+    return F.concat(F.sequence(F.lit(0), F.lit(P - 1)), tail) if P else tail
 
 
 def knn_hnsw(

@@ -188,9 +188,9 @@ def hnsw_build_routed(
         "cell int, centroid array<double>",
     )
     src = _place(vectors_df, cells, assign_n, id_col=id_col, vec_col=vec_col)
-    nodes, edges, meta, kernel_out = build_graphs(src, params)
+    nodes, edges, kernel_out = build_graphs(src, params)
     idx = HnswIndex(
-        nodes, edges, meta, params, num_partitions=num_partitions,
+        nodes, edges, params, num_partitions=num_partitions,
         assign_n=assign_n, centroids=centroids_df,
     )
     idx.kernel_out = kernel_out
@@ -247,10 +247,7 @@ def knn_hnsw_routed(
         )
     # the probe budget scales with the BUILD's P, not the trained cell
     # count (a tiny corpus trains fewer cells than P)
-    num_partitions = index.num_partitions
-    if num_partitions is None:
-        num_partitions = index.meta.count()
-    R = int(n_probe) if n_probe is not None else default_n_probe(int(num_partitions))
+    R = int(n_probe) if n_probe is not None else default_n_probe(index._partition_count())
     placed = _place(queries_df, _centroids_np(index), R, index.appended_partitions,
                     query_id_col, query_vec_col)
     return probe_placed(index, placed, k, ef)
@@ -313,12 +310,11 @@ def append_routed(
         .select("partition", "id", "vec")
         .unionByName(fresh)
     )
-    nodes, edges, meta, kernel_out = build_graphs(members, index.params)
+    nodes, edges, kernel_out = build_graphs(members, index.params)
     keep = lambda df: df.join(F.broadcast(touched), "partition", "left_anti")  # noqa: E731
     out = HnswIndex(
         keep(index.nodes).unionByName(nodes),
         keep(index.edges).unionByName(edges),
-        keep(index.meta).unionByName(meta),
         index.params,
         **index._layout(),
     )
