@@ -424,6 +424,18 @@ def test_build_refuses_non_finite_vectors(spark):
     idx.kernel_out.unpersist(blocking=True)
 
 
+def test_probe_refuses_non_finite_query(spark):
+    """A NaN query fails its probe loudly instead of returning k
+    arbitrary neighbors with NaN distances from every partition."""
+    idx = hnsw_build(_vectors(spark, range(60)), HnswParams(dim=8, metric="l2"), num_partitions=2)
+    q = spark.createDataFrame(
+        [(0, [0.5] * 8), (1, [0.0] * 7 + [float("nan")])], "query_id long, query_vec array<double>"
+    )
+    with pytest.raises(Exception, match="query vector with NaN or infinite values"):
+        knn_hnsw_distributed(idx, q, k=3).collect()
+    idx.kernel_out.unpersist(blocking=True)
+
+
 def test_build_and_probe_do_not_depend_on_input_layout(spark):
     """The same vectors built from three physical layouts give the same
     graphs and the same probe rows: the build and probe kernels number

@@ -71,8 +71,25 @@ def test_dim_mismatch_raises(data):
     idx.add_batch(np.arange(10), data[:10])
     with pytest.raises(ValueError):
         idx.search(np.zeros(16), k=3)
-    with pytest.raises(ValueError):
-        idx.add_batch(np.array([99]), np.zeros((1, 16), dtype=np.float32))
+    with pytest.raises(ValueError, match="expected"):
+        LocalHNSW(HnswParams(dim=32)).add_batch(np.array([99]), np.zeros((1, 16), dtype=np.float32))
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_non_finite_query_raises(data, metric):
+    """A NaN or inf query would score every row NaN and return k
+    arbitrary rows; search refuses it instead, as add_batch refuses a
+    non-finite build vector."""
+    idx = LocalHNSW(HnswParams(dim=32, metric=metric))
+    idx.add_batch(np.arange(len(data)), data)
+    for bad in (np.nan, np.inf, -np.inf):
+        q = data[0].copy()
+        q[4] = bad
+        with pytest.raises(ValueError, match="NaN or infinite"):
+            idx.search(q, k=5)
+    # a finite float64 past float32's range is inf once cast
+    with np.errstate(over="ignore"), pytest.raises(ValueError, match="NaN or infinite"):
+        idx.search(np.full(32, 1e300), k=5)
 
 
 def test_unknown_metric_raises():
@@ -81,12 +98,15 @@ def test_unknown_metric_raises():
 
 
 def test_deleted_never_returned(data):
-    idx = LocalHNSW(HnswParams(dim=32))
-    idx.add_batch(np.arange(len(data)), data)
-    assert idx.delete(3) is True
-    assert idx.delete(3) is False  # double delete
-    res = idx.search(data[3].astype(np.float64), k=10)
-    assert 3 not in [i for i, _ in res]
+    """Tombstones reach a kernel through from_tables' ``deleted`` column
+    (the probe path): a tombstoned row is walked past, never returned."""
+    built = LocalHNSW(HnswParams(dim=32))
+    built.add_batch(np.arange(len(data)), data)
+    dead = np.isin(np.arange(len(data)), [3, 40, 41])
+    idx = LocalHNSW.from_tables(built.p, np.arange(len(data)), data, built.levels, dead, *built.edges())
+    for q in (3, 40, 41):
+        res = [i for i, _ in idx.search(data[q].astype(np.float64), k=10)]
+        assert len(res) == 10 and not {3, 40, 41} & set(res)
 
 
 def test_degree_caps(data):
@@ -297,18 +317,6 @@ def test_graph_identical_with_duplicates_and_zero_vectors(metric):
 
 
 @pytest.mark.parametrize("metric", ["l2", "cosine"])
-def test_graph_identical_after_delete(data, metric):
-    new, old = _build_pair(metric, data[:300])
-    for gid in (0, 17, 123):
-        assert new.delete(gid) and old.delete(gid)
-    _assert_identical(new, old, _queries(data))
-    # inserts after the delete walk past the tombstones
-    new.add_batch(np.arange(300, 400), data[300:])
-    old.add_batch(np.arange(300, 400), data[300:])
-    _assert_identical(new, old, _queries(data))
-
-
-@pytest.mark.parametrize("metric", ["l2", "cosine"])
 def test_graph_identical_without_precomputed_column(data, metric, monkeypatch):
     monkeypatch.setattr(LocalHNSW, "_PRECOMPUTE_MAX_ROWS", 0)
     new, old = _build_pair(metric, data[:250])
@@ -321,15 +329,14 @@ def test_graph_identical_without_precomputed_column(data, metric, monkeypatch):
 
 def _layer0_reference(idx):
     """Oracle for the kernel's layer 0, as plain per-node loops over the
-    alive rows: all pairwise distances sorted by (dist, row) and cut to
+    rows: all pairwise distances sorted by (dist, row) and cut to
     ef_construction, the per-candidate diversity test of
     ``_PerCandidateHNSW._select_neighbors``, reverse edges, then a
     stable closest-max_m0 prune. Distances come from the kernel's matrix
     (checked against a float64 brute force below), so exact ties resolve
     the same way on both sides. Returns {row: layer-0 neighbor rows}."""
-    rows = [r for r in range(len(idx.ids)) if not idx.deleted[r]]
-    D = idx._layer0_matrix(np.array(rows)).tolist()
-    n, m, efc = len(rows), idx.p.max_m0, idx.p.ef_construction
+    D = idx._layer0_matrix().tolist()
+    n, m, efc = len(idx.ids), idx.p.max_m0, idx.p.ef_construction
     fwd = []
     for i in range(n):
         cands = sorted((D[i][j], j) for j in range(n) if j != i)[:efc]
@@ -351,7 +358,7 @@ def _layer0_reference(idx):
         lst = lists[i]
         if len(lst) > m:
             lst = sorted(lst, key=lambda j: D[i][j])[:m]
-        out[rows[i]] = [rows[j] for j in lst]
+        out[i] = lst
     return out
 
 
@@ -360,16 +367,15 @@ def _assert_layer0_matches_reference(idx, x):
     got = {r: idx.graph[r].get(0, []) for r in want}
     assert got == want
     # the kernel's matrix is the metric's exact all-pairs distance
-    rows = np.array(sorted(want))
-    D = idx._layer0_matrix(rows).astype(np.float64)
-    v = x[rows].astype(np.float64)
+    D = idx._layer0_matrix().astype(np.float64)
+    v = x.astype(np.float64)
     if idx.p.metric == "l2":
         exact = np.sqrt(np.maximum(((v[:, None, :] - v[None, :, :]) ** 2).sum(-1), 0.0))
     else:
         norms = np.linalg.norm(v, axis=1)
         denom = norms[:, None] * norms[None, :]
         exact = np.where(denom == 0, 1.0, 1.0 - (v @ v.T) / np.where(denom == 0, 1.0, denom))
-    off = ~np.eye(len(rows), dtype=bool)
+    off = ~np.eye(len(v), dtype=bool)
     assert np.allclose(D[off], exact[off], rtol=1e-5, atol=1e-5)
     assert np.isinf(np.diag(D)).all()
 
@@ -390,23 +396,6 @@ def test_layer0_matches_reference_with_duplicates_and_zero_vectors(metric):
     idx = LocalHNSW(HnswParams(dim=16, metric=metric))
     idx.add_batch(np.arange(len(x)), x)
     _assert_layer0_matches_reference(idx, x)
-
-
-@pytest.mark.parametrize("metric", ["l2", "cosine"])
-def test_layer0_matches_reference_after_delete(data, metric):
-    """A later batch rebuilds layer 0 over the alive rows: tombstones are
-    no one's candidate and keep the lists they had."""
-    idx = LocalHNSW(HnswParams(dim=32, metric=metric))
-    idx.add_batch(np.arange(300), data[:300])
-    dead = (0, 17, 123)
-    for gid in dead:
-        assert idx.delete(gid)
-    before = {gid: list(idx.graph[gid][0]) for gid in dead}
-    idx.add_batch(np.arange(300, 400), data[300:])
-    _assert_layer0_matches_reference(idx, data)
-    assert {gid: idx.graph[gid][0] for gid in dead} == before
-    for gid in dead:
-        assert not any(gid in idx.graph[r].get(0, []) for r in range(len(idx.ids)) if not idx.deleted[r])
 
 
 @pytest.mark.parametrize("metric", ["l2", "cosine"])
@@ -476,16 +465,68 @@ def test_recall_at_ef50_on_clustered_set(cap, monkeypatch):
 def test_non_finite_vectors_raise_before_the_graph_changes():
     """A NaN or inf vector would reorder other rows' neighbors (an inf
     row outranks an exact self-match under L2); the batch is refused
-    with the count and the first offending id, and nothing is added."""
-    x = np.random.default_rng(0).standard_normal((300, 16)).astype(np.float32)
+    with the count and the first offending id, and the kernel stays
+    empty."""
+    x = np.random.default_rng(0).standard_normal((200, 16)).astype(np.float32)
     idx = LocalHNSW(HnswParams(dim=16))
-    idx.add_batch(np.arange(100), x[:100])
-    edges = [a.copy() for a in idx.edges()]
-    bad = x[100:].copy()
-    bad[9, 0] = np.inf
-    bad[5, 3] = np.nan
+    x[9, 0] = np.inf
+    x[5, 3] = np.nan
     with pytest.raises(ValueError, match=r"2 vector\(s\) with NaN or infinite values; first id 105"):
-        idx.add_batch(np.arange(100, 300), bad)
+        idx.add_batch(np.arange(100, 300), x)
+    assert idx.ids == [] and idx.graph == [] and idx.entry_point is None
+    assert idx.search(np.zeros(16, np.float32), k=3) == []
+
+
+# ---------------- the kernel owns the row order ----------------
+
+
+@pytest.mark.parametrize("cap", [None, 0])
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_kernel_numbers_rows_by_id_whatever_the_input_order(metric, cap, monkeypatch):
+    """A kernel built from a shuffled copy of the rows is the kernel
+    built from the id-sorted rows: the same edges, levels, entry point
+    and search output, for the matrix layer 0 and the walked one (cap
+    0). Duplicates and a zero vector make exact-distance ties."""
+    if cap is not None:
+        monkeypatch.setattr(LocalHNSW, "_LAYER0_MAX_ROWS", cap)
+    rng = np.random.default_rng(17)
+    ids = np.sort(rng.choice(1 << 40, size=240, replace=False))
+    x = rng.standard_normal((240, 16)).astype(np.float32)
+    x[200:220] = x[:20]
+    x[230] = 0.0
+    p = HnswParams(dim=16, metric=metric, M=6)
+    want = LocalHNSW(p)
+    want.add_batch(ids, x)
+    perm = rng.permutation(len(ids))
+    got = LocalHNSW(p)
+    got.add_batch(ids[perm], x[perm])
+    for a, b in zip(got.edges(), want.edges()):
+        assert np.array_equal(a, b)
+    assert got.ids == want.ids == ids.tolist() and got.levels == want.levels
+    assert (got.ids[got.entry_point], got.max_layer) == (want.ids[want.entry_point], want.max_layer)
+    for q in _queries(x):
+        assert got.search(q, k=10) == want.search(q, k=10)
+    # a probe's from_tables fed shuffled node rows lands on the same entry
+    perm = rng.permutation(len(ids))
+    back = LocalHNSW.from_tables(
+        p, ids[perm], x[perm], np.array(want.levels)[perm], np.zeros(len(ids), bool), *want.edges()
+    )
+    assert (back.entry_point, back.max_layer) == (want.entry_point, want.max_layer)
+    for q in _queries(x):
+        assert back.search(q, k=10) == want.search(q, k=10)
+
+
+def test_a_kernel_is_built_once(data):
+    """One add_batch (or from_tables) sets a kernel's rows; a second
+    add_batch raises and leaves the graph as it was."""
+    idx = LocalHNSW(HnswParams(dim=32))
+    idx.add_batch(np.arange(100), data[:100])
+    edges = idx.edges()
+    with pytest.raises(ValueError, match="already holds its rows"):
+        idx.add_batch(np.arange(100, 200), data[100:200])
     assert len(idx.ids) == 100
     for a, b in zip(idx.edges(), edges):
         assert np.array_equal(a, b)
+    back = LocalHNSW.from_tables(idx.p, np.arange(100), data[:100], idx.levels, np.zeros(100, bool), *edges)
+    with pytest.raises(ValueError, match="already holds its rows"):
+        back.add_batch(np.arange(100, 200), data[100:200])

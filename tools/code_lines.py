@@ -47,4 +47,7 @@ def main(paths: list[str]) -> None:
 
 
 if __name__ == "__main__":
+    if len(sys.argv) < 2:
+        print("usage: python3 tools/code_lines.py FILE [FILE ...]", file=sys.stderr)
+        sys.exit(2)
     main(sys.argv[1:])

@@ -331,14 +331,15 @@ def build_graphs(src: DataFrame, params: HnswParams) -> tuple[DataFrame, DataFra
     holds the placed rows (id, vec, partition), and each partition's
     local graph is built by a single Arrow exchange + numpy build
     inside ``applyInPandas``. Neither the levels nor the edges depend
-    on the cluster layout: levels derive from global ids, and the kernel
-    sorts its partition's rows by id before ``add_batch``, so insert
-    order and distance ties follow ids, not the order the grouped
-    shuffle delivers rows in.
+    on the cluster layout: levels derive from global ids, and
+    ``LocalHNSW.add_batch`` numbers a partition's rows in id order
+    itself, so insert order and distance ties follow ids, not the order
+    the grouped shuffle delivers rows in.
 
     The kernel writes the whole index once, as one frame of two row
     kinds (``KERNEL_SCHEMA``): a node row (id, vec, level) per input
-    row, with the vectors it was given and the levels it drew, and an
+    row, in the kernel's (id) order, with the vectors it was given and
+    the levels it drew, and an
     edge row (layer, src, dst) per graph edge. That output is persisted
     and is the index's storage: nodes and edges are filter + projection
     views of it, so a probe of a fresh handle neither re-scans ``src``
@@ -352,13 +353,11 @@ def build_graphs(src: DataFrame, params: HnswParams) -> tuple[DataFrame, DataFra
     probe then runs it once per side of its cogroup."""
 
     def build_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("id", kind="stable")
-        ids = pdf["id"].to_numpy(dtype=np.int64)
         idx = LocalHNSW(params)
-        idx.add_batch(ids, np.array(list(pdf["vec"]), dtype=np.float32))
+        idx.add_batch(pdf["id"].to_numpy(dtype=np.int64), np.array(list(pdf["vec"]), dtype=np.float32))
         layer, s, t = idx.edges()
         # row kinds in order: nodes [0, e0), edges [e0, end)
-        e0, end = len(ids), len(ids) + len(layer)
+        e0, end = len(idx.ids), len(idx.ids) + len(layer)
 
         def rows(start: int, values, dtype="Int64") -> pd.Series:
             # one row kind's column; NULL on the other kinds' rows
@@ -366,10 +365,10 @@ def build_graphs(src: DataFrame, params: HnswParams) -> tuple[DataFrame, DataFra
 
         return pd.DataFrame({
             "partition": np.full(end, pdf["partition"].iloc[0], dtype=np.int32),
-            "id": rows(0, ids), "level": rows(0, idx.levels, "Int32"),
+            "id": rows(0, idx.ids), "level": rows(0, idx.levels, "Int32"),
             # Python float lists: pyspark's Arrow converter runs list()
             # over each cell, which on a numpy array yields numpy scalars
-            "vec": [v.tolist() for v in pdf["vec"]] + [None] * (end - e0),
+            "vec": idx.vectors.tolist() + [None] * (end - e0),
             "layer": rows(e0, layer, "Int32"), "src": rows(e0, s), "dst": rows(e0, t),
         })
 

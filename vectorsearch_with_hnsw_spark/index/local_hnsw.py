@@ -8,8 +8,8 @@ scores one candidate per interpreted-Python call (hsnw_trial.py:45,
 :183, :197-265), numpy here only does batched work.
 
 Layer 0 holds every node (the layers above about 1/M of them), so it is
-built offline: one pairwise distance matrix over the partition's alive
-rows gives each row its exact top-ef_construction candidates, the
+built offline: one pairwise distance matrix over the partition's rows
+gives each row its exact top-ef_construction candidates, the
 reference's diversity rule keeps up to max_m0 of them (candidate-pair
 distances read off the same matrix), and reverse edges plus the
 degree-cap re-prune finish the list. That is the bottom-layer
@@ -53,16 +53,18 @@ Semantics kept from the reference (cited for the parity judge):
 
 Determinism: levels are drawn from splitmix64(seed ^ global_id), so a
 node's level does not depend on insert order or partition layout —
-required for reproducible distributed builds (SURVEY.md §7 risk 2). The
-build and probe kernels number a partition's rows in id order
-(``build.build_graphs``, ``query._probe_kernel``), so insert order and
-exact-distance ties — the (dist, row) candidate order, the walk, the
-search heap — follow ids, and a partition's graph and probe results do
-not depend on the order a shuffle delivers its rows in. The same order
-fixes the entry point: the walk keeps the first row of the highest
-level, so one ``add_batch`` over id-sorted rows ends with the lowest id
-of the highest level as entry. Nothing stores it; ``from_tables``
-applies that rule to the node rows a probe receives.
+required for reproducible distributed builds (SURVEY.md §7 risk 2). A
+kernel is built once, by one ``add_batch`` or by ``from_tables``, and
+both number its rows in id order themselves (``_set_rows``), whatever
+order the caller passes them in. So insert order and exact-distance
+ties — the (dist, row) candidate order, the walk, the search heap —
+follow ids, and a partition's graph and probe results do not depend on
+the order a shuffle delivers its rows in. The same order fixes the
+entry point: the walk keeps the first row of the highest level, so
+``add_batch`` ends with the lowest id of the highest level as entry.
+Nothing stores it; ``from_tables`` applies that rule to the node rows
+a probe receives. Tombstones reach a kernel only through
+``from_tables``' ``deleted`` column; a built kernel has none.
 """
 
 from __future__ import annotations
@@ -144,24 +146,24 @@ class LocalHNSW:
     def __init__(self, params: HnswParams):
         self.p = params
         self.ids: list[int] = []
-        self.vectors: list[np.ndarray] = []
+        self.vectors = np.empty((0, params.dim), np.float32)  # (n, dim) f32, row order
         self.levels: list[int] = []
         self.deleted: list[bool] = []
         self.graph: list[dict[int, list[int]]] = []
         self.entry_point: int | None = None
         self.max_layer: int = -1
-        self._mat: np.ndarray | None = None  # cached (n, dim) f32 matrix
         # scoring matrix: f64 twin for L2 (exact expanded-form
-        # accumulation), the f4 matrix itself for cosine — see
-        # _refresh_cache for the numerics/throughput rationale
+        # accumulation), ``vectors`` itself for cosine — see _set_rows
+        # for the numerics/throughput rationale; None until the rows
+        # are set, which happens once
         self._matc: np.ndarray | None = None
-        self._norms: np.ndarray | None = None
 
     # -- vectorized distance of one query against a set of stored rows --
-    def _dists(self, vec: np.ndarray, rows: np.ndarray, inv_qn: float | None = None) -> np.ndarray:
-        """Distances of one query vector to a set of stored rows.
+    def _dists(self, vec: np.ndarray, rows: np.ndarray | slice = slice(None), inv_qn: float | None = None) -> np.ndarray:
+        """Distances of one query vector to a set of stored rows (every
+        row by default: a view of the matrix, no copy).
 
-        Same formulation and dtype as _query_dists_all and _pairwise —
+        Same formulation and dtype as _pairwise —
         every scoring path in the file uses ONE formulation, so graph
         structure cannot depend on which path scored an insert. L2 runs
         the expanded form in float64 (float32 expanded-form cancels
@@ -205,7 +207,24 @@ class LocalHNSW:
         sim = (a @ b.T) * (self._inv_norms[rows][:, None] * self._inv_norms[cols][None, :])
         return 1.0 - sim
 
-    def _refresh_cache(self) -> None:
+    def _set_rows(self, ids: np.ndarray, vectors: np.ndarray, levels=None, deleted=None) -> None:
+        """The one row setup of ``add_batch`` and ``from_tables``: number
+        the rows in id order (stable, so equal ids keep their input
+        order) and fill the scoring caches. Levels default to the id's
+        draw and tombstones to none, the build's case."""
+        ids = np.asarray(ids, dtype=np.int64)
+        order = np.argsort(ids, kind="stable")
+        self.ids = ids[order].tolist()
+        self.vectors = np.asarray(vectors, dtype=np.float32).reshape(len(order), self.p.dim)[order]
+        if levels is None:
+            self.levels = [level_for_id(gid, self.p.mL, self.p.seed) for gid in self.ids]
+        else:
+            self.levels = np.asarray(levels, dtype=np.int64)[order].tolist()
+        if deleted is None:
+            self.deleted = [False] * len(order)
+        else:
+            self.deleted = np.asarray(deleted, dtype=bool)[order].tolist()
+        self.graph = [{} for _ in order]
         # float32 STORAGE (reference stores float32, hsnw_trial.py:201).
         # L2 scoring additionally caches a float64 twin: the expanded
         # form ||x||^2 - 2<x,q> + ||q||^2 cancels catastrophically in
@@ -216,14 +235,12 @@ class LocalHNSW:
         # and the f4->f8 switch measured 2.2x slower on the dim-512
         # cosine build (fancy-index copies and gemms are bandwidth-bound
         # at these sizes). sq-norms always accumulate in float64.
-        self._mat = (
-            np.vstack(self.vectors) if self.vectors else np.empty((0, self.p.dim), np.float32)
-        )
-        self._matc = self._mat.astype(np.float64) if self.p.metric == "l2" else self._mat
-        self._sq_norms = np.einsum("ij,ij->i", self._mat, self._mat, dtype=np.float64)
-        self._norms = np.sqrt(self._sq_norms)
+        mat = self.vectors
+        self._matc = mat.astype(np.float64) if self.p.metric == "l2" else mat
+        self._sq_norms = np.einsum("ij,ij->i", mat, mat, dtype=np.float64)
+        norms = np.sqrt(self._sq_norms)
         with np.errstate(divide="ignore"):
-            self._inv_norms = np.where(self._norms == 0.0, 0.0, 1.0 / self._norms)
+            self._inv_norms = np.where(norms == 0.0, 0.0, 1.0 / norms)
 
     # Precompute the query's distance to EVERY stored row when one BLAS
     # matvec plus one ``tolist`` beats scoring the walk's fresh rows in
@@ -236,23 +253,16 @@ class LocalHNSW:
     # below only bounds the O(n) per-walk work (64k rows = one 512 KB
     # f64 column and its list). Every probe pays it once per query; a
     # build only for the rows that walk: those with level >= 1 up to
-    # _LAYER0_MAX_ROWS alive rows, every row past it.
+    # _LAYER0_MAX_ROWS rows, every row past it.
     _PRECOMPUTE_MAX_ROWS = 65536
 
     def _query_dists_all(self, vec: np.ndarray) -> list[float] | None:
         """The query's distance to every stored row as a plain list (one
-        BLAS matvec, one ``tolist``), or None past the row cap."""
-        n = len(self.ids)
-        if n == 0 or n > self._PRECOMPUTE_MAX_ROWS:
+        ``_dists`` over all rows, one ``tolist``), or None past the row
+        cap."""
+        if len(self.ids) > self._PRECOMPUTE_MAX_ROWS:
             return None
-        vec = np.asarray(vec, dtype=self._matc.dtype)
-        dots = self._matc @ vec
-        if self.p.metric == "l2":
-            vec64 = vec.astype(np.float64, copy=False)
-            qq = float(vec64 @ vec64)
-            return np.sqrt(np.maximum(self._sq_norms - 2.0 * dots + qq, 0.0)).tolist()
-        inv_qn = self._inv_norm_of(vec)
-        return (1.0 - dots * (self._inv_norms * inv_qn)).tolist()
+        return self._dists(vec).tolist()
 
     # ---------------- search internals ----------------
 
@@ -330,7 +340,7 @@ class LocalHNSW:
 
     # ---------------- layer 0 from one pairwise matrix ----------------
 
-    # Layer 0 is built from the alive rows' pairwise distance matrix,
+    # Layer 0 is built from the rows' pairwise distance matrix,
     # stored float32: n^2 * 4 bytes, 256 MiB at this cap (a float64
     # matrix at _PRECOMPUTE_MAX_ROWS would be 34 GB). Speed sets no
     # lower cap: single-threaded, 512-d cosine, M=16, efc=200, the whole
@@ -344,19 +354,20 @@ class LocalHNSW:
     # _LAYER0_BLOCK * n * 8 bytes (16 MiB at the cap)
     _LAYER0_BLOCK = 256
 
-    def _layer0_matrix(self, rows: np.ndarray) -> np.ndarray:
-        """Float32 distances among ``rows`` (``_pairwise``'s formulation
+    def _layer0_matrix(self) -> np.ndarray:
+        """Float32 distances among all rows (``_pairwise``'s formulation
         and scoring dtype, one row block at a time), diagonal +inf so
         that a row is never its own candidate."""
-        n = len(rows)
+        n = len(self.ids)
+        rows = np.arange(n)
         D = np.empty((n, n), dtype=np.float32)
         for s in range(0, n, self._LAYER0_BLOCK):
             D[s : s + self._LAYER0_BLOCK] = self._pairwise(rows[s : s + self._LAYER0_BLOCK], rows)
         np.fill_diagonal(D, np.inf)
         return D
 
-    def _build_layer0(self, rows: np.ndarray) -> None:
-        """Layer 0 of ``rows`` (the alive rows) from exact candidates —
+    def _build_layer0(self) -> None:
+        """Layer 0 of every row from exact candidates —
         the bottom-layer construction of NSG / Vamana with the HNSW
         diversity rule. Each row takes its top-ef_construction rows
         ordered by (dist, row), keeps up to max_m0 of them by the
@@ -364,9 +375,9 @@ class LocalHNSW:
         matrix; then every kept edge gets its reverse edge, and a list
         past max_m0 keeps its max_m0 closest (stable: forward edges,
         then reverse edges by source row, on equal distances)."""
-        n, m = len(rows), self.p.max_m0
+        n, m = len(self.ids), self.p.max_m0
         k = min(self.p.ef_construction, n - 1)
-        D = self._layer0_matrix(rows)
+        D = self._layer0_matrix()
         fwd: list[list[int]] = [[] for _ in range(n)]
         if k > 0 and m > 0:
             for s in range(0, n, self._LAYER0_BLOCK):
@@ -390,18 +401,22 @@ class LocalHNSW:
         for i, lst in enumerate(lists):
             if len(lst) > m:
                 lst = [lst[t] for t in np.argsort(D[i, lst], kind="stable")[:m]]
-            self.graph[rows[i]][0] = rows[lst].tolist()
+            self.graph[i][0] = lst
 
     # ---------------- public API ----------------
 
     def add_batch(self, ids: np.ndarray, vectors: np.ndarray) -> None:
-        """Insert a batch (the distributed build path: one call per
-        partition). Levels come from the global id, not insert order.
-        Up to ``_LAYER0_MAX_ROWS`` alive rows, layer 0 of every alive row
-        is (re)built from the pairwise matrix and only rows with level
-        >= 1 walk, on layers >= 1; past it every row walks every layer.
-        A non-finite vector raises before the graph is touched: a NaN or
-        inf distance would silently reorder other rows' neighbors."""
+        """Build the kernel from one batch (the distributed build path:
+        one call per partition, on a fresh kernel; a kernel holds one
+        set of rows, so a second call raises). Levels come from the
+        global id; rows are numbered and inserted in id order, whatever
+        the input order. Up to ``_LAYER0_MAX_ROWS`` rows, layer 0 is
+        built from the pairwise matrix and only rows with level >= 1
+        walk, on layers >= 1; past it every row walks every layer.
+        A non-finite vector raises before any row is set: a NaN or inf
+        distance would silently reorder other rows' neighbors."""
+        if self._matc is not None:
+            raise ValueError("this kernel already holds its rows: build a new LocalHNSW")
         vectors = np.asarray(vectors, dtype=np.float32)
         if vectors.ndim != 2 or vectors.shape[1] != self.p.dim:
             raise ValueError(f"expected (n, {self.p.dim}) vectors, got {vectors.shape}")
@@ -410,19 +425,11 @@ class LocalHNSW:
             raise ValueError(
                 f"{bad.size} vector(s) with NaN or infinite values; first id {int(ids[bad[0]])}"
             )
-        n0 = len(self.ids)
-        for gid, vec in zip(ids, vectors):
-            self.ids.append(int(gid))
-            self.vectors.append(vec)
-            self.levels.append(level_for_id(int(gid), self.p.mL, self.p.seed))
-            self.deleted.append(False)
-            self.graph.append({})
-        self._refresh_cache()
-        alive = np.flatnonzero(~np.array(self.deleted, dtype=bool))
-        bottom = 1 if len(alive) <= self._LAYER0_MAX_ROWS else 0
+        self._set_rows(ids, vectors)
+        bottom = 1 if len(self.ids) <= self._LAYER0_MAX_ROWS else 0
         if bottom:
-            self._build_layer0(alive)
-        for row in range(n0, len(self.ids)):
+            self._build_layer0()
+        for row in range(len(self.ids)):
             self._insert_row(row, bottom)
 
     def _insert_row(self, row: int, bottom: int = 0) -> None:
@@ -463,12 +470,16 @@ class LocalHNSW:
             self.entry_point = row
 
     def search(self, vec: np.ndarray, k: int = 10, ef: int | None = None) -> list[tuple[int, float]]:
-        """Top-k (global_id, dist), ascending; ef = max(ef, k)."""
+        """Top-k (global_id, dist), ascending; ef = max(ef, k). A
+        non-finite query raises: its distances would all be NaN, and
+        the search would return k arbitrary rows."""
         if self.entry_point is None:
             return []
         vec = np.asarray(vec, dtype=np.float32)
         if vec.shape != (self.p.dim,):
             raise ValueError(f"expected dim {self.p.dim}, got {vec.shape}")
+        if not np.isfinite(vec).all():
+            raise ValueError("query vector with NaN or infinite values")
         ef = max(ef or self.p.ef_search, k)
         dall = self._query_dists_all(vec)
         cur = self.entry_point
@@ -477,18 +488,6 @@ class LocalHNSW:
         found = self._search_layer(vec, cur, ef, 0, dall)
         out = [(self.ids[row], d) for d, row in found if not self.deleted[row]]
         return out[:k]
-
-    def delete(self, global_id: int) -> bool:
-        """Tombstone delete: flag only, edges stay (lazy, like the
-        reference); compaction is a rebuild."""
-        try:
-            row = self.ids.index(global_id)
-        except ValueError:
-            return False
-        if self.deleted[row]:
-            return False
-        self.deleted[row] = True
-        return True
 
     # ---------------- (de)serialization to flat arrays ----------------
 
@@ -520,14 +519,11 @@ class LocalHNSW:
         edge_dst: np.ndarray,
     ) -> "LocalHNSW":
         """Reconstruct a probe-ready kernel from the persisted columnar
-        tables (the load() path). The entry point is the build's: the
-        lowest id of the highest level (see the module docstring)."""
+        tables (the load() path), in any row order. The entry point is
+        the build's: the lowest id of the highest level (see the module
+        docstring)."""
         idx = cls(params)
-        idx.ids = [int(i) for i in ids]
-        idx.vectors = [np.asarray(v, dtype=np.float32) for v in vectors]
-        idx.levels = [int(l) for l in levels]
-        idx.deleted = [bool(d) for d in deleted]
-        idx.graph = [{} for _ in idx.ids]
+        idx._set_rows(ids, vectors, levels, deleted)
         rowof = {gid: r for r, gid in enumerate(idx.ids)}
         for layer, s, t in zip(edge_layer, edge_src, edge_dst):
             idx.graph[rowof[int(s)]].setdefault(int(layer), []).append(rowof[int(t)])
@@ -535,5 +531,4 @@ class LocalHNSW:
             # rowof: a duplicated id's edges hang off its last row
             idx.max_layer = max(idx.levels)
             idx.entry_point = rowof[min(i for i, l in zip(idx.ids, idx.levels) if l == idx.max_layer)]
-        idx._refresh_cache()
         return idx

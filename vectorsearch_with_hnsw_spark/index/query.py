@@ -16,9 +16,9 @@ partitions (``index.routed.knn_hnsw_routed``); the latter two go through
 ``probe_placed``. All three run one kernel (``_probe_kernel``) and one
 merge (``_merge_topk``, a single Exchange). The kernel takes a
 partition's entry point from the node rows it receives — the lowest id
-of the highest level, the entry the build's id-ordered ``add_batch``
-ends with — and the partition list comes from the handle's layout
-fields, so no probe runs a job for per-index search state.
+of the highest level, the entry the build's ``add_batch`` ends with —
+and the partition list comes from the handle's layout fields, so no
+probe runs a job for per-index search state.
 Semantics match the reference search (hsnw_trial.py:267-294): greedy
 descent, ef-search at layer 0 with ef = max(ef, k), tombstones skipped,
 results ascending, k-truncated.
@@ -42,17 +42,15 @@ def _probe_kernel(index: HnswIndex, k: int, ef: int | None):
     """The partition probe kernel every probe path runs. Returns
     ``probe(nodes_pdf, edges_pdf, qids, qvecs)``: it rebuilds the
     partition's local graph from its nodes/edges rows and emits each
-    query's per-partition top-k as (query_id, neighbor_id, dist). The
-    node rows are numbered in id order, as the build numbers them, so
-    exact-distance ties break by id, not by shuffle arrival order, and
-    the entry point is the one ``LocalHNSW.from_tables`` derives from
-    the node rows."""
+    query's per-partition top-k as (query_id, neighbor_id, dist).
+    ``LocalHNSW.from_tables`` numbers the node rows in id order, as the
+    build does, so exact-distance ties break by id, not by shuffle
+    arrival order, and derives the entry point from them."""
     params = index.params
 
     def probe(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame, qids, qvecs) -> pd.DataFrame:
         out_q, out_n, out_d = [], [], []
         if len(nodes_pdf) and len(qids):
-            nodes_pdf = nodes_pdf.sort_values("id", kind="stable")
             idx = LocalHNSW.from_tables(
                 params,
                 nodes_pdf["id"].to_numpy(dtype=np.int64),
