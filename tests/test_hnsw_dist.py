@@ -424,6 +424,15 @@ def test_build_refuses_non_finite_vectors(spark):
     idx.kernel_out.unpersist(blocking=True)
 
 
+def test_build_refuses_duplicate_ids(spark):
+    """Hash placement puts both copies of an id in one partition, whose
+    kernel refuses it, naming the id."""
+    idx = hnsw_build(_vectors(spark, list(range(60)) + [23]), HnswParams(dim=8), num_partitions=3)
+    with pytest.raises(Exception, match="duplicate id 23 in one HNSW partition"):
+        idx.edges.count()
+    idx.kernel_out.unpersist(blocking=True)
+
+
 def test_probe_refuses_non_finite_query(spark):
     """A NaN query fails its probe loudly instead of returning k
     arbitrary neighbors with NaN distances from every partition."""

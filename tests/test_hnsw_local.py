@@ -530,3 +530,21 @@ def test_a_kernel_is_built_once(data):
     back = LocalHNSW.from_tables(idx.p, np.arange(100), data[:100], idx.levels, np.zeros(100, bool), *edges)
     with pytest.raises(ValueError, match="already holds its rows"):
         back.add_batch(np.arange(100, 200), data[100:200])
+
+
+def test_duplicate_id_raises_in_both_entry_points():
+    """An id given twice is refused by add_batch and from_tables, which
+    name the lowest duplicated id: edges name rows by id, so the copies
+    could not keep graphs of their own, and a probe would search
+    another graph than the one built."""
+    x = np.random.default_rng(0).standard_normal((50, 16)).astype(np.float32)
+    ids = np.arange(50)
+    ids[[30, 40]] = [7, 3]  # ids 3 and 7 twice each
+    idx = LocalHNSW(HnswParams(dim=16))
+    with pytest.raises(ValueError, match="duplicate id 3 in one HNSW partition"):
+        idx.add_batch(ids, x)
+    assert idx.ids == [] and idx.graph == [] and idx.entry_point is None
+    built = LocalHNSW(HnswParams(dim=16))
+    built.add_batch(np.arange(50), x)
+    with pytest.raises(ValueError, match="duplicate id 3 in one HNSW partition"):
+        LocalHNSW.from_tables(built.p, ids, x, built.levels, np.zeros(50, bool), *built.edges())

@@ -406,7 +406,7 @@ def test_new_operators_are_total_on_empty_input(spark):
     """Empty in -> empty out, no exceptions: the totality contract the
     other pipeline ops already hold (test_edge_cases.py)."""
     from vectorsearch_with_hnsw_spark.operators.ann import binary_sign_knn
-    from vectorsearch_with_hnsw_spark.operators.ivf import kmeans_fit
+    from vectorsearch_with_hnsw_spark.operators.ivf import ivf_knn_cosine, kmeans_fit
     from vectorsearch_with_hnsw_spark.operators.pq import ivf_pq_knn, pq_adc_knn
     from vectorsearch_with_hnsw_spark.operators.retrieval import (
         bm25_rank,
@@ -434,6 +434,9 @@ def test_new_operators_are_total_on_empty_input(spark):
     assert weighted_sample(docs).count() == 0
     assert mix_corpus(docs, {"src0": 100}).count() == 0
     assert kmeans_fit(emb, dim=64).count() == 0
+    # queries against an empty corpus: no centroid cell to probe
+    q1 = spark.createDataFrame([(1, [0.5] * 64)], "query_id long, query_vec array<double>")
+    assert ivf_knn_cosine(emb, q1, dim=64).count() == 0
 
 
 # -- hypothesis: BM25 and RRF vs pure-Python reference models -------------
@@ -972,6 +975,30 @@ def test_similarity_search_accepts_quantized_index(spark, sf_smoke, tmp_path):
 
     with _pytest.raises(ValueError, match="needs a IvfPqIndex"):
         similarity_search(emb, q, method="ivf_pq", k=5, dim=64, index=sq8)
+
+
+def test_similarity_search_refuses_non_hnsw_index_for_hnsw_methods(spark, sf_smoke):
+    """The hnsw names refuse an index that is not an HnswIndex with the
+    table entries' ValueError, before any Spark job runs (they used to
+    collect the queries, then fail with an AttributeError)."""
+    import pytest as _pytest
+
+    from vectorsearch_with_hnsw_spark.operators.quantize import Sq8Index
+    from vectorsearch_with_hnsw_spark.operators.search import similarity_search
+
+    emb = load_table(spark, sf_smoke, "embeddings")
+    q = _queries(spark, sf_smoke, n=2)
+    sq8 = Sq8Index.build(emb, dim=64)
+    sc = spark.sparkContext
+    sc.setJobGroup("refused_hnsw_index", "similarity_search with a wrong index")
+    try:
+        for method in ("hnsw", "hnsw_rescored", "hnsw_routed"):
+            want = f"method '{method}' needs a HnswIndex index, got Sq8Index"
+            with _pytest.raises(ValueError, match=want):
+                similarity_search(emb, q, method=method, k=5, dim=64, index=sq8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("refused_hnsw_index") == []
 
 
 def test_hard_negatives_semantics_vs_numpy(spark, sf_smoke):

@@ -136,6 +136,22 @@ def test_cli_search_families(spark, capsys, sf_smoke):
     assert "score" in captured.out
 
 
+def test_cli_search_help_lists_every_method(capsys):
+    """`search --help` names every similarity_search method, built from
+    the dispatch table, plus the keyword methods."""
+    import re
+
+    import pytest
+
+    from vectorsearch_with_hnsw_spark import cli
+    from vectorsearch_with_hnsw_spark.operators.search import METHODS
+
+    with pytest.raises(SystemExit):
+        cli.main(["search", "--help"])
+    words = set(re.findall(r"[a-z0-9_]+", capsys.readouterr().out))
+    assert set(METHODS) | {"bm25", "hybrid"} <= words
+
+
 def test_cli_dedup_methods(spark, tmp_path, capsys):
     """The dedup subcommand writes each family's verdicts/pairs to
     parquet; the fuzzy sink matches the in-process operator exactly."""

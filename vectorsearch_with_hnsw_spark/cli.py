@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from .index.build import HnswIndex, HnswParams, hnsw_build
 from .index.query import knn_hnsw
+from .operators.search import METHODS
 from .operators.synth import synthetic_vectors
 from .session import get_spark
 from .sources import load_table
@@ -200,7 +201,7 @@ def main(argv: list[str] | None = None) -> None:
     s.add_argument(
         "--method",
         default="exact",
-        help="exact|exact_fast|hnsw|hnsw_rescored|hnsw_routed|lsh|ivf|ivf_kmeans|sq8|ivf_sq8|pq|pq_refine|ivf_pq|ivf_pq_refine|binary|binary_refine|matryoshka|bm25|hybrid",
+        help=", ".join(METHODS + ("bm25", "hybrid")),
     )
     s.add_argument("--sf-dir", required=True)
     s.add_argument("--k", type=int, default=10)

@@ -16,12 +16,18 @@ All arithmetic is done in DOUBLE with a left-to-right fold
 (``aggregate`` over ``zip_with``) so results are bit-identical to any
 engine evaluating the same fold shape — this is what makes the DuckDB
 oracle hash-stable without rounding tricks.
+
+The numpy twins of those folds live here too (``fold_dot``,
+``fold_sq_l2``, ``fold_cosine``): every Arrow kernel that promises
+bit-identity with an expression scores through them, so the fold order
+and the zero-norm guard are written once.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -73,6 +79,43 @@ def l2_normalize(a: Column) -> Column:
     expression — stays in whole-stage codegen, no UDF."""
     n = l2_norm(a)
     return F.when(n == F.lit(0.0), a).otherwise(F.transform(a, lambda x: x / n))
+
+
+def fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """numpy twin of ``dot``: sum of ``a * b`` over the last axis,
+    accumulated one dimension at a time in ascending order from 0.0 —
+    the expression's fold, elementwise across the broadcast leading
+    axes. IEEE add and multiply are correctly rounded and commutative,
+    so each element equals the expression's value bit for bit. Computes
+    in the inputs' dtype; an empty last axis gives zeros."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]), np.result_type(a, b))
+    for d in range(a.shape[-1]):
+        acc += a[..., d] * b[..., d]
+    return acc
+
+
+def fold_sq_l2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """numpy twin of the fold inside ``l2_distance``: sum of
+    ``(a - b)^2`` over the last axis, dimension-ascending from 0.0, with
+    broadcasting over the leading axes (``sqrt`` of it is
+    ``l2_distance``; negation is exact, so operand order is free)."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]), np.result_type(a, b))
+    for d in range(a.shape[-1]):
+        diff = a[..., d] - b[..., d]
+        acc += diff * diff
+    return acc
+
+
+def fold_cosine(dot: np.ndarray, a2: np.ndarray, b2: np.ndarray) -> np.ndarray:
+    """numpy twin of ``cosine_distance`` from its folds: ``dot`` =
+    ``fold_dot(a, b)``, ``a2`` / ``b2`` = ``fold_dot(a, a)`` /
+    ``fold_dot(b, b)`` (broadcastable). ``1 - dot / (|a| * |b|)``, and
+    exactly 1.0 wherever either norm is 0 — the expression's own
+    guard."""
+    na, nb = np.sqrt(a2), np.sqrt(b2)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        out = 1.0 - dot / (na * nb)
+    return np.where((na == 0.0) | (nb == 0.0), 1.0, out)
 
 
 METRICS: dict[str, Callable[[Column, Column], Column]] = {

@@ -51,8 +51,6 @@ from pyspark.sql import functions as F
 from .local_hnsw import HnswParams, LocalHNSW
 from ..cache import persist_tracked
 
-NODES_SCHEMA = "partition int, id long, vec array<float>, level int, deleted boolean"
-EDGES_SCHEMA = "partition int, layer int, src long, dst long"
 # the build kernel's output: node and edge rows in one frame, each kind
 # filling only its own columns (level / layer non-NULL)
 KERNEL_SCHEMA = "partition int, id long, vec array<float>, level int, layer int, src long, dst long"
@@ -155,8 +153,7 @@ class HnswIndex:
         """Persist as Parquet tables + params sidecar (logical equivalent
         of the reference save(), hsnw_trial.py:310-342). nodes/edges are
         laid out partitionBy(partition): a probe of one index partition
-        reads exactly one directory (partition pruning), and the probe
-        job's cogroup starts from co-partitioned files."""
+        reads exactly one directory (partition pruning)."""
         self.nodes.write.mode("overwrite").partitionBy("partition").parquet(f"{path}/nodes")
         self.edges.write.mode("overwrite").partitionBy("partition").parquet(f"{path}/edges")
         spark = self.nodes.sparkSession
@@ -312,7 +309,8 @@ def hnsw_build(
 ) -> HnswIndex:
     """Batch-build a partitioned HNSW index: one hash shuffle assigns
     rows to partitions, then ``build_graphs`` builds each partition's
-    graph."""
+    graph. Ids must be unique: hash placement puts every copy of an id
+    in one partition, whose kernel then raises."""
     src = vectors_df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<float>").alias("vec"),

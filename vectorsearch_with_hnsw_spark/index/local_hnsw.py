@@ -209,12 +209,17 @@ class LocalHNSW:
 
     def _set_rows(self, ids: np.ndarray, vectors: np.ndarray, levels=None, deleted=None) -> None:
         """The one row setup of ``add_batch`` and ``from_tables``: number
-        the rows in id order (stable, so equal ids keep their input
-        order) and fill the scoring caches. Levels default to the id's
-        draw and tombstones to none, the build's case."""
+        the rows in id order and fill the scoring caches. Levels default
+        to the id's draw and tombstones to none, the build's case. An id
+        given twice raises: edges name rows by id, so a second row of
+        one id would get a graph its table rows cannot describe."""
         ids = np.asarray(ids, dtype=np.int64)
         order = np.argsort(ids, kind="stable")
-        self.ids = ids[order].tolist()
+        sorted_ids = ids[order]
+        dup = np.flatnonzero(sorted_ids[1:] == sorted_ids[:-1])
+        if dup.size:
+            raise ValueError(f"duplicate id {int(sorted_ids[dup[0]])} in one HNSW partition")
+        self.ids = sorted_ids.tolist()
         self.vectors = np.asarray(vectors, dtype=np.float32).reshape(len(order), self.p.dim)[order]
         if levels is None:
             self.levels = [level_for_id(gid, self.p.mL, self.p.seed) for gid in self.ids]
@@ -414,7 +419,8 @@ class LocalHNSW:
         built from the pairwise matrix and only rows with level >= 1
         walk, on layers >= 1; past it every row walks every layer.
         A non-finite vector raises before any row is set: a NaN or inf
-        distance would silently reorder other rows' neighbors."""
+        distance would silently reorder other rows' neighbors. So does
+        an id given twice (``_set_rows``)."""
         if self._matc is not None:
             raise ValueError("this kernel already holds its rows: build a new LocalHNSW")
         vectors = np.asarray(vectors, dtype=np.float32)
@@ -519,16 +525,15 @@ class LocalHNSW:
         edge_dst: np.ndarray,
     ) -> "LocalHNSW":
         """Reconstruct a probe-ready kernel from the persisted columnar
-        tables (the load() path), in any row order. The entry point is
-        the build's: the lowest id of the highest level (see the module
-        docstring)."""
+        tables (the load() path), in any row order; an id given twice
+        raises (``_set_rows``). The entry point is the build's: the
+        lowest id of the highest level (see the module docstring)."""
         idx = cls(params)
         idx._set_rows(ids, vectors, levels, deleted)
         rowof = {gid: r for r, gid in enumerate(idx.ids)}
         for layer, s, t in zip(edge_layer, edge_src, edge_dst):
             idx.graph[rowof[int(s)]].setdefault(int(layer), []).append(rowof[int(t)])
         if idx.ids:
-            # rowof: a duplicated id's edges hang off its last row
             idx.max_layer = max(idx.levels)
             idx.entry_point = rowof[min(i for i, l in zip(idx.ids, idx.levels) if l == idx.max_layer)]
         return idx

@@ -284,7 +284,10 @@ def append_routed(
     else.
 
     Raises ``ValueError`` on an index with no trained cells (built over
-    an empty frame): the batch would have no cell to land in."""
+    an empty frame): the batch would have no cell to land in. An id
+    that is already in a partition the batch touches makes that
+    partition's rebuild raise too (``LocalHNSW`` refuses an id given
+    twice): delete the old row first to replace a vector."""
     if not index.routed:
         raise ValueError(
             "append_routed requires a routed-built index; use "

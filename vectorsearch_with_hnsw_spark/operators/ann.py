@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_distance, dot, to_vec
+from ..functions.vector import cosine_distance, dot, fold_dot, to_vec
 from .knn import _exact_rerank, topk_per_group
 
 _M64 = (1 << 64) - 1
@@ -131,19 +131,15 @@ def numpy_band_buckets(mat, n_bands: int, planes_per_band: int):
     """(n, n_bands) int32 band buckets for unit vectors ``mat``
     ((n, dim) float64) — BIT-IDENTICAL to the SQL path
     (sign_signature_sql + bands_from_signature_sql): the plane dot is
-    accumulated one dimension at a time in ascending order, exactly the
-    sequential ``aggregate(zip_with(...))`` fold, so sign bits agree
-    even for dots within one ulp of zero; the bucket fold is integer
-    ``acc*2+bit``. Parity is pinned by test_lsh_numpy_parity."""
+    ``functions.vector.fold_dot``, the numpy twin of the sequential
+    ``aggregate(zip_with(...))`` fold, so sign bits agree even for dots
+    within one ulp of zero; the bucket fold is integer ``acc*2+bit``.
+    Parity is pinned by test_lsh_numpy_parity."""
     import numpy as np
 
     n, dim = mat.shape
     planes = hyperplane_matrix(n_bands * planes_per_band, dim)
-    acc = np.zeros((n, n_bands * planes_per_band), dtype=np.float64)
-    for d in range(dim):
-        # per (row, plane): acc += x_d * y_d in d-ascending order — the
-        # sequential fold, vectorized across rows and planes
-        acc += mat[:, d : d + 1] * planes[:, d][None, :]
+    acc = fold_dot(mat[:, None], planes)  # (n, planes)
     bits = (acc >= 0.0).astype(np.int64)
     buckets = np.zeros((n, n_bands), dtype=np.int64)
     for b in range(n_bands):
@@ -211,7 +207,7 @@ def numpy_band_bits(mat, n_bands: int, planes_per_band: int, extra_bits: int):
     ``extra_bits`` FRESH planes per band per level (plane layout:
     depth-0 planes first, then level 1's n_bands*extra_bits, then
     level 2's), used to sub-split data-dependent hot blocks. Same
-    sequential per-dimension fold as numpy_band_buckets, so sign bits
+    ``fold_dot`` plane dots as numpy_band_buckets, so sign bits
     are bit-identical to the SQL oracle's plane dots."""
     import numpy as np
 
@@ -219,9 +215,7 @@ def numpy_band_bits(mat, n_bands: int, planes_per_band: int, extra_bits: int):
     base = n_bands * planes_per_band
     total = base + 2 * n_bands * extra_bits
     planes = hyperplane_matrix(total, dim)
-    acc = np.zeros((n, total), dtype=np.float64)
-    for d in range(dim):
-        acc += mat[:, d : d + 1] * planes[:, d][None, :]
+    acc = fold_dot(mat[:, None], planes)
     bits = (acc >= 0.0).astype(np.int64)
 
     def fold(lo: int, width: int) -> "np.ndarray":

@@ -36,7 +36,7 @@ from ..functions.text import (
     tokens,
     word_shingles,
 )
-from ..functions.vector import cosine_distance, to_vec
+from ..functions.vector import cosine_distance, fold_dot, to_vec
 from ..sources import load_table, spread
 from ..cache import persist_tracked
 
@@ -685,12 +685,6 @@ def embedding_neardup_pairs(
     )
     chunk = 4096
 
-    def _fold_norms(mat: np.ndarray) -> np.ndarray:
-        acc = np.zeros(len(mat), dtype=np.float64)
-        for d in range(mat.shape[1]):
-            acc += mat[:, d] * mat[:, d]
-        return np.sqrt(acc)
-
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         band = int(pdf["band"].iloc[0])
         ga, gb = int(pdf["_a"].iloc[0]), int(pdf["_b"].iloc[0])
@@ -711,8 +705,8 @@ def embedding_neardup_pairs(
         allb_r = np.array(list(right["bands"]), dtype=np.int32)
         # fold-order norms (bit-identical to l2_norm); zero norms score
         # 0.0 against everything and never pass the threshold
-        nl = _fold_norms(mat_l)
-        nr = nl if triangular else _fold_norms(mat_r)
+        nl = np.sqrt(fold_dot(mat_l, mat_l))
+        nr = nl if triangular else np.sqrt(fold_dot(mat_r, mat_r))
         # normalized fp32 copies for the approximate-cos candidate mask
         # only (bandwidth-bound GEMM, ~1.6x fp64); the slack covers the
         # fp32 unit-dot error bound, so the mask only over-admits —
@@ -746,6 +740,9 @@ def embedding_neardup_pairs(
             ii, jj = ii[own], jj[own]
             if len(ii) == 0:
                 continue
+            # fold_dot's accumulation, written out: it gathers rows of
+            # the d-major transposes (200k pairs, 64-d: 0.12 s against
+            # 0.58-0.71 s for fold_dot(mat_l[ii], mat_r[jj]))
             dots = np.zeros(len(ii), dtype=np.float64)
             for d in range(dim_b):
                 dots += t_l[d][ii] * t_r[d][jj]
@@ -1694,9 +1691,10 @@ def semantic_neardup_pairs(
             ii, jj = ii[own], jj[own]
             if len(ii) == 0:
                 continue
-            # exact dots for the kept pairs only, accumulated per
-            # dimension ascending — the sequential-fold order,
-            # vectorized across pairs
+            # exact dots for the kept pairs only: fold_dot's accumulation,
+            # written out to gather rows of the d-major transposes
+            # (~5x fold_dot over gathered rows, see the same loop in
+            # embedding_neardup_pairs)
             sims = np.zeros(len(ii), dtype=np.float64)
             for d in range(dim_b):
                 sims += t_l[d][ii] * t_r[d][jj]

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import persist_tracked, release
-from ..functions.vector import cosine_distance, to_vec
+from ..functions.vector import cosine_distance, fold_cosine, fold_dot, fold_sq_l2, to_vec
 from .artifact import QuantizedIndex
 from .knn import topk_per_group
 
@@ -75,55 +75,6 @@ def _l2sq(a, b):
     )
 
 
-def _d2_matrix(X, Cv):
-    """(N, k) squared distances accumulated one dimension at a time in
-    ascending order — the sequential fold (:func:`_l2sq`), elementwise.
-    Shared by the kmeans assign/step kernels and the fused IVF-PQ
-    assign+encode kernel (pq.py), so every consumer of a trained
-    centroid table assigns cells BIT-IDENTICALLY."""
-    import numpy as np
-
-    acc = np.zeros((len(X), len(Cv)), dtype=np.float64)
-    for d0 in range(Cv.shape[1]):
-        diff = X[:, d0][:, None] - Cv[:, d0][None, :]
-        acc += diff * diff
-    return acc
-
-
-def _cos_matrix(Q, X, qn2):
-    """(nq, nc) cosine distances by the canonical sequential folds —
-    bit-identical to the ``cosine_distance`` HOF (dot and both squared
-    norms accumulate one dimension at a time in ascending order;
-    multiplication is IEEE-commutative so operand orientation is
-    irrelevant; ``denom == 0`` maps to 1.0, the same convention
-    ``knn_exact_fast`` uses for the expression's zero-norm guard)."""
-    import numpy as np
-
-    nq = len(Q)
-    nc = len(X)
-    dot = np.zeros((nq, nc), dtype=np.float64)
-    x2 = np.zeros(nc, dtype=np.float64)
-    for d0 in range(X.shape[1] if nc else 0):
-        xd = X[:, d0]
-        dot += Q[:, d0][:, None] * xd[None, :]
-        x2 += xd * xd
-    denom = np.sqrt(x2)[None, :] * np.sqrt(qn2)[:, None]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out = 1.0 - dot / denom
-    return np.where(denom == 0.0, 1.0, out)
-
-
-def _seq_norm2(Q):
-    """Per-row |q|^2 by the ascending sequential fold (l2_norm's
-    order)."""
-    import numpy as np
-
-    qn2 = np.zeros(len(Q), dtype=np.float64)
-    for d0 in range(Q.shape[1] if len(Q) else 0):
-        qn2 += Q[:, d0] * Q[:, d0]
-    return qn2
-
-
 def _collect_cents(cents_df: DataFrame):
     """The (cell, centroid) table as cell-ascending driver arrays — the
     exact bounded collection :func:`_kernel_probe` performs, shared so a
@@ -150,9 +101,8 @@ def assign_frozen_cosine(
     centroid table, as an Arrow kernel — BIT-IDENTICAL to the
     crossJoin + ``cosine_distance`` + ``row_number().over(cdist, cell)``
     shape (:func:`assign_cells`) it replaces on the hot paths:
-    :func:`_cos_matrix` mirrors the ``cosine_distance`` fold (per-dim
-    ascending accumulation, zero-norm -> 1.0), and argmin over
-    cell-ascending columns returns the FIRST minimum — exactly the
+    ``fold_cosine`` is the ``cosine_distance`` fold's numpy twin, and
+    argmin over cell-ascending columns returns the FIRST minimum — exactly the
     (cdist, cell) window tie order. The old shape evaluated an
     interpreted HOF n_cells times per corpus row and then paid a
     corpus-wide ``Window.partitionBy(vec_id)`` shuffle; this is one
@@ -173,11 +123,12 @@ def assign_frozen_cosine(
 
     def kern(batches):
         cells_v, Cv = bc.value
+        c2 = fold_dot(Cv, Cv)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            D = _cos_matrix(X, Cv, _seq_norm2(X))
+            D = fold_cosine(fold_dot(X[:, None], Cv), fold_dot(X, X)[:, None], c2)
             pdf = pdf.copy()
             pdf["cell"] = cells_v[D.argmin(axis=1)]
             yield pdf
@@ -232,11 +183,13 @@ def _kernel_probe(
         cells_np, C = cents_df
     else:
         cells_np, C = _collect_cents(cents_df)
-    qn2 = _seq_norm2(Q)
+    if not len(cells_np):  # an empty corpus trains no cell to probe
+        return spark.createDataFrame([], out_schema + ", rnk int")
+    qn2 = fold_dot(Q, Q)
     if probe_metric == "l2sq":
-        D = _d2_matrix(Q, C)
+        D = fold_sq_l2(Q[:, None], C)
     else:
-        D = _cos_matrix(Q, C, qn2)
+        D = fold_cosine(fold_dot(Q[:, None], C), qn2[:, None], fold_dot(C, C))
     npb = min(n_probe, len(cells_np))
     cell_queries: dict[int, list[int]] = {}
     for qi in range(len(qids)):
@@ -274,6 +227,7 @@ def _kernel_probe(
             cells_arr = pdf["cell"].to_numpy(dtype=np.int64)
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             mat = np.array(list(pdf["v"]), dtype=np.float64)
+            x2 = fold_dot(mat, mat) if metric == "cosine" else None
             for cell in np.unique(cells_arr):
                 qsel = cellmap.get(int(cell))
                 if qsel is None:
@@ -282,9 +236,11 @@ def _kernel_probe(
                 sub = mat[mask]
                 sids = ids[mask]
                 if metric == "l2":
-                    Dm = np.sqrt(_d2_matrix(Qb[qsel], sub))
+                    Dm = np.sqrt(fold_sq_l2(Qb[qsel][:, None], sub))
                 else:
-                    Dm = _cos_matrix(Qb[qsel], sub, qn2_b[qsel])
+                    Dm = fold_cosine(
+                        fold_dot(Qb[qsel][:, None], sub), qn2_b[qsel][:, None], x2[mask]
+                    )
                 for row, qi in enumerate(qsel):
                     d = np.concatenate([best_d.get(qi, empty_f8), Dm[row]])
                     i = np.concatenate([best_i.get(qi, empty_i8), sids])
@@ -345,7 +301,7 @@ def assign_frozen(pts: DataFrame, cent_df: DataFrame) -> DataFrame:
             if len(pdf) == 0:
                 continue
             X = np.array(list(pdf["v"]), dtype=np.float64)
-            acc = _d2_matrix(X, Cv)
+            acc = fold_sq_l2(X[:, None], Cv)
             j = acc.argmin(axis=1)
             yield pd.DataFrame(
                 {
@@ -424,7 +380,7 @@ def _kmeans_impl(
                         "training input; fixed-point centroid sums require "
                         "finite values"
                     )
-                cells = cells_v[_d2_matrix(X, Cv).argmin(axis=1)]
+                cells = cells_v[fold_sq_l2(X[:, None], Cv).argmin(axis=1)]
                 FX = np.floor(X * 10000000.0).astype(np.int64)
                 out_c, out_s, out_n = [], [], []
                 for cell in np.unique(cells):
@@ -659,7 +615,7 @@ class IvfIndex(QuantizedIndex):
         probes with zero joins (``emb=None`` is then valid).
 
         Probe selection runs DRIVER-SIDE over the bounded
-        |queries| x n_cells grid using the shared :func:`_d2_matrix`
+        |queries| x n_cells grid using the shared ``fold_sq_l2``
         sequential fold — bit-identical to the ``_l2sq`` +
         ``row_number().over(d2, cell)`` window it replaces (per-dim
         ascending accumulation; stable argsort over cell-ascending
@@ -669,7 +625,7 @@ class IvfIndex(QuantizedIndex):
         the dynamic-pruning subquery the old probe-join shape relied
         on), and candidates flow through ONE join (vec_id -> vector)
         into an Arrow kernel that scores each candidate against the
-        queries probing its cell via ``sqrt(_d2_matrix(...))`` — the
+        queries probing its cell via ``sqrt(fold_sq_l2(...))`` — the
         same blocked per-dim kernel kmeans assignment uses, and
         bit-identical to the ``l2_distance`` HOF fold it replaces
         ((x-y)^2 == (y-x)^2 bitwise; same ascending accumulation;

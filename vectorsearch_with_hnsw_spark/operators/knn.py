@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import metric_expr, to_vec
+from ..functions.vector import fold_cosine, fold_dot, fold_sq_l2, metric_expr, to_vec
 
 
 def topk_per_group(
@@ -148,12 +148,10 @@ def knn_exact_fast(
 
     Candidates are picked per Arrow batch with the fast algebraic form
     (|x-q|^2 = |x|^2 - 2 x.q + |q|^2, one GEMM), then the kept k-per-
-    query rows are rescored inside the kernel by accumulating the
-    canonical metric fold one dimension at a time in ascending order —
+    query rows are rescored inside the kernel by the numpy twins of the
+    metric folds (``functions.vector.fold_sq_l2`` / ``fold_cosine``) —
     bit-identical to the zip_with/aggregate Column expression and the
-    SQL oracle (same trick as semantic_neardup_pairs; negation is IEEE-
-    exact so (x-y)^2 == (y-x)^2 bitwise, and sqrt/div are correctly
-    rounded in both engines). Emitting exact distances from the kernel
+    SQL oracle. Emitting exact distances from the kernel
     removes the rescore join and one of the two ranking windows the
     previous shape needed (measured ~0.5s off the sf0.1 exact kNN
     graph); shuffle volume stays O(P * Q * k), independent of index
@@ -167,37 +165,10 @@ def knn_exact_fast(
     sc = spark.sparkContext
     bq = sc.broadcast((qids, qmat))
 
-    def _exact_fold(R: np.ndarray, qm: np.ndarray, qn2: np.ndarray) -> np.ndarray:
-        """Fold-exact distances for candidates R (nq, c, dim) against
-        queries qm (nq, dim); qn2 = per-query sequential-fold |q|^2.
-        Accumulates per dimension ascending — the sequential fold."""
-        nq, c, dim = R.shape
-        if metric == "l2":
-            acc = np.zeros((nq, c), dtype=np.float64)
-            for d in range(dim):
-                diff = R[:, :, d] - qm[:, d][:, None]
-                acc += diff * diff
-            return np.sqrt(acc)
-        dot = np.zeros((nq, c), dtype=np.float64)
-        x2 = np.zeros((nq, c), dtype=np.float64)
-        for d in range(dim):
-            xd = R[:, :, d]
-            dot += xd * qm[:, d][:, None]
-            x2 += xd * xd
-        na = np.sqrt(x2)
-        nb = np.sqrt(qn2)[:, None]
-        denom = na * nb
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = 1.0 - dot / denom
-        return np.where(denom == 0.0, 1.0, out)
-
     def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_b, qm = bq.value
         nq = len(ids_b)
-        # sequential-fold |q|^2 per query (matches l2_norm's fold order)
-        qn2 = np.zeros(nq, dtype=np.float64)
-        for d in range(qm.shape[1] if nq else 0):
-            qn2 += qm[:, d] * qm[:, d]
+        qn2 = fold_dot(qm, qm)
         best_d = [np.empty(0, dtype=np.float64) for _ in range(nq)]
         best_i = [np.empty(0, dtype=np.int64) for _ in range(nq)]
         for pdf in batches:
@@ -223,7 +194,10 @@ def knn_exact_fast(
             # ... then fold-exact rescore of the kept rows only and a
             # merge with the running best BY EXACT DISTANCE
             R = mat[sel]  # (nq, kk, dim)
-            dex = _exact_fold(R, qm, qn2)
+            if metric == "l2":
+                dex = np.sqrt(fold_sq_l2(R, qm[:, None]))
+            else:
+                dex = fold_cosine(fold_dot(R, qm[:, None]), fold_dot(R, R), qn2[:, None])
             cand_ids = ids[sel]
             for qi in range(nq):
                 d = np.concatenate([best_d[qi], dex[qi]])

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import persist_tracked
-from ..functions.vector import to_vec
+from ..functions.vector import fold_sq_l2, to_vec
 from .artifact import QuantizedIndex
 from .knn import _exact_rerank, topk_per_group
 
@@ -362,14 +362,14 @@ def _ivf_pq_build(
     (``pq_codebooks`` is ``orderBy(id).limit(n_anchors)``), so training
     it never needed the corpus-wide assignment the old build persisted —
     a bounded TakeOrdered collect of those anchor rows reproduces it
-    bit-for-bit on the driver (same ``_d2_matrix`` assign fold, same
+    bit-for-bit on the driver (same ``fold_sq_l2`` assign fold, same
     float64 ``v - centroid`` residual, same sub-slicing). The corpus
     assignment + encode then FUSE into one Arrow kernel
     (``_ivf_pq_assign_encode``), so the consumer's action makes exactly
     ONE pass over the corpus with nothing cached: the one-shot contract
     (zero CacheManager entries on return) no longer trades a second
     full-corpus assign pass for cleanliness."""
-    from .ivf import _collect_cents, _d2_matrix, _kmeans_impl
+    from .ivf import _collect_cents, _kmeans_impl
 
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -384,7 +384,7 @@ def _ivf_pq_build(
     )
     if arows and len(C):
         A = np.array([r["v"] for r in arows], dtype=np.float64)
-        j = _d2_matrix(A, C).argmin(axis=1)
+        j = fold_sq_l2(A[:, None], C).argmin(axis=1)
         R = A - C[j]
         cb_np = np.stack([R[:, s * d : (s + 1) * d] for s in range(m)])  # (m, C, d)
     else:
@@ -408,14 +408,13 @@ def _ivf_pq_assign_encode(
     (vec_id, v) relation yielding (vec_id, code, cell), with centroids
     and codebooks broadcast. BIT-IDENTICAL to the old assign-join-encode
     chain it replaces: cell = first-minimum argmin over the
-    ``_d2_matrix`` sequential fold (exactly the kmeans assign kernel),
+    ``fold_sq_l2`` sequential fold (exactly the kmeans assign kernel),
     residual = elementwise float64 ``v - centroid[cell]`` (exactly the
     old ``zip_with`` subtraction), and the per-subspace code argmin is
     the ``pq_encode`` kernel verbatim. Map-only: no join, no shuffle,
     no cache — the 100 TB encode pass reads the corpus exactly once."""
     spark = pts.sparkSession
     bc = spark.sparkContext.broadcast((np.asarray(cells_np, dtype=np.int32), C, cb_np))
-    from .ivf import _d2_matrix
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cells_v, Cv, cb = bc.value
@@ -423,7 +422,7 @@ def _ivf_pq_assign_encode(
             if len(pdf) == 0:
                 continue
             X = np.array(list(pdf["v"]), dtype=np.float64)
-            j = _d2_matrix(X, Cv).argmin(axis=1)
+            j = fold_sq_l2(X[:, None], Cv).argmin(axis=1)
             R = X - Cv[j]
             codes = np.empty((len(X), m), dtype=np.int64)
             for s in range(m):
@@ -469,15 +468,11 @@ def _probe_residuals(queries: DataFrame, cents: DataFrame, n_probe: int) -> Data
 
 def _lut_adc(qr: np.ndarray, codes: np.ndarray, cb: np.ndarray, m: int, d: int) -> np.ndarray:
     """(len(qr), len(codes)) residual-ADC sums, bit-identical to the
-    HOF form: LUT[s][c] accumulates the (qr - cb)^2 sub-fold one
-    dimension at a time in ascending order (the exact ``_sub_d2``
-    fold), and each candidate's sum adds its LUT entries in
-    subspace-ascending order (the exact aggregate fold)."""
-    lut = np.zeros((len(qr), m, cb.shape[1]), dtype=np.float64)
-    for s in range(m):
-        for d0 in range(d):
-            diff = qr[:, s * d + d0][:, None] - cb[s][None, :, d0]
-            lut[:, s, :] += diff * diff
+    HOF form: LUT[q, s, c] is ``fold_sq_l2`` of query q's subspace-s
+    residual slice against codeword c (the exact ``_sub_d2`` fold), and
+    each candidate's sum adds its LUT entries in subspace-ascending
+    order (the exact aggregate fold)."""
+    lut = fold_sq_l2(qr.reshape(len(qr), m, 1, d), cb)  # (nq, m, C)
     adc = np.zeros((len(qr), len(codes)), dtype=np.float64)
     for s in range(m):
         adc += lut[:, s, :][:, codes[:, s]]

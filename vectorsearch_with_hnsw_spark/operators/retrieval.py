@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import release_checkpoint
-from ..functions.vector import dot, l2_norm, metric_expr, to_vec
+from ..functions.vector import dot, fold_cosine, fold_dot, fold_sq_l2, l2_norm, metric_expr, to_vec
 from .knn import topk_per_group
 
 RRF_C = 60  # the standard reciprocal-rank-fusion constant
@@ -219,7 +219,6 @@ def _cluster_graph_bcast(
     C,
     k: int,
     metric: str,
-    dim: int,
     assign_n: int,
     probe_n: int,
 ) -> DataFrame:
@@ -230,8 +229,8 @@ def _cluster_graph_bcast(
     then stream through ONE mapInPandas pass — each query block GEMMs
     against its probe_n cells' matrices, selects the same
     s_w = k+1+assign_n fast-distance window per cell as the shuffle
-    path, rescores the winners with the canonical per-dimension-
-    ascending fold (bit-identical distances), and merges per query in
+    path, rescores the winners with the metric fold's numpy twin
+    (bit-identical distances), and merges per query in
     the kernel. Emits each query's deduped top-(k+1 non-self) edges —
     the same rows the shuffle path's dropDuplicates + window would
     keep, with no replicated-vector exchange and no candidate
@@ -274,6 +273,7 @@ def _cluster_graph_bcast(
             cand_d: list = [[] for _ in range(nq)]
             cand_i: list = [[] for _ in range(nq)]
             Q32 = Q.astype(np.float32)
+            q2 = fold_dot(Q, Q) if metric == "cosine" else None
             for cell in np.unique(qcells):
                 ent = cmap.get(int(cell))
                 if ent is None:
@@ -292,31 +292,15 @@ def _cluster_graph_bcast(
                         Qsel[sel], Ms, m2s, mids, metric, s_w, mns
                     )
                     b = len(sel)
-                    # fold-exact rescore of the selected window — the
-                    # identical per-dimension-ascending accumulation as
-                    # the shuffle path / knn_exact_fast._exact_fold
+                    # fold-exact rescore of the selected window, as the
+                    # shuffle path and knn_exact_fast do
                     R = M[part]
                     if metric == "l2":
-                        acc = np.zeros(part.shape, dtype=np.float64)
-                        for d0 in range(dim):
-                            diff = R[:, :, d0] - Qb[:, d0][:, None]
-                            acc += diff * diff
-                        dex = np.sqrt(acc)
+                        dex = np.sqrt(fold_sq_l2(R, Qb[:, None]))
                     else:
-                        dot = np.zeros(part.shape, dtype=np.float64)
-                        x2 = np.zeros(part.shape, dtype=np.float64)
-                        q2 = np.zeros(b, dtype=np.float64)
-                        for d0 in range(dim):
-                            xd = R[:, :, d0]
-                            dot += xd * Qb[:, d0][:, None]
-                            x2 += xd * xd
-                            q2 += Qb[:, d0] * Qb[:, d0]
-                        na = np.sqrt(x2)
-                        nb = np.sqrt(q2)[:, None]
-                        den = na * nb
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            dex = 1.0 - dot / den
-                        dex = np.where(den == 0.0, 1.0, dex)
+                        dex = fold_cosine(
+                            fold_dot(R, Qb[:, None]), fold_dot(R, R), q2[sel][:, None]
+                        )
                     sel_ids = mids[part]
                     keep = sel_ids != qids[sel][:, None]
                     rank_in_row = keep.cumsum(axis=1)
@@ -448,7 +432,7 @@ def _knn_graph_cluster(
     # 8-byte estimate understated the real footprint by ~1.5x
     if 0 < n_rows * assign_n * dim * 12 <= _CLUSTER_BCAST_BYTES and len(C):
         g = _cluster_graph_bcast(
-            src, C, k=k, metric=metric, dim=dim,
+            src, C, k=k, metric=metric,
             assign_n=assign_n, probe_n=min(probe_n, num_partitions),
         )
         if stitch_rounds > 0:
@@ -520,32 +504,15 @@ def _knn_graph_cluster(
             hi = min(lo + block, len(qids))
             Qb = Q[lo:hi]
             part = _select_window(Qs[lo:hi], Ms, m2s, mids, metric, s_w, mns)
-            b = hi - lo
-            # fold-exact rescore of the selected candidates, batched:
-            # accumulate one dimension at a time ascending (the
-            # sequential fold), matching knn_exact_fast._exact_fold
+            # fold-exact rescore of the selected candidates, batched,
+            # as knn_exact_fast does
             R = M[part]  # (b, s, dim)
             if metric == "l2":
-                acc = np.zeros(part.shape, dtype=np.float64)
-                for d0 in range(dim):
-                    diff = R[:, :, d0] - Qb[:, d0][:, None]
-                    acc += diff * diff
-                dex = np.sqrt(acc)
+                dex = np.sqrt(fold_sq_l2(R, Qb[:, None]))
             else:
-                dot = np.zeros(part.shape, dtype=np.float64)
-                x2 = np.zeros(part.shape, dtype=np.float64)
-                q2 = np.zeros(b, dtype=np.float64)
-                for d0 in range(dim):
-                    xd = R[:, :, d0]
-                    dot += xd * Qb[:, d0][:, None]
-                    x2 += xd * xd
-                    q2 += Qb[:, d0] * Qb[:, d0]
-                na = np.sqrt(x2)
-                nb = np.sqrt(q2)[:, None]
-                den = na * nb
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    dex = 1.0 - dot / den
-                dex = np.where(den == 0.0, 1.0, dex)
+                dex = fold_cosine(
+                    fold_dot(R, Qb[:, None]), fold_dot(R, R), fold_dot(Qb, Qb)[:, None]
+                )
             sel_ids = mids[part]
             keep = sel_ids != qids[lo:hi][:, None]  # drop self (all copies)
             # cap at kk kept per row
@@ -680,35 +647,12 @@ def _stitch_graph(
     import numpy as np
     import pandas as pd
 
-    from ..functions.vector import to_vec
     from ..sources.tables import spread
 
     if metric not in ("l2", "cosine"):
         raise ValueError(f"Unknown metric '{metric}'")
     spark = base.sparkSession
     v = base.select(F.col(id_col).cast("long").alias("_vid"), to_vec(vec_col).alias("_v"))
-
-    def _pair_dists(S: "np.ndarray", D: "np.ndarray") -> "np.ndarray":
-        """Fold-exact metric over row-aligned pairs (n, dim) x (n, dim)."""
-        dim = S.shape[1]
-        if metric == "l2":
-            acc = np.zeros(len(S), dtype=np.float64)
-            for d0 in range(dim):
-                diff = S[:, d0] - D[:, d0]
-                acc += diff * diff
-            return np.sqrt(acc)
-        dot = np.zeros(len(S), dtype=np.float64)
-        s2 = np.zeros(len(S), dtype=np.float64)
-        d2 = np.zeros(len(S), dtype=np.float64)
-        for d0 in range(dim):
-            sd, dd = S[:, d0], D[:, d0]
-            dot += sd * dd
-            s2 += sd * sd
-            d2 += dd * dd
-        na, nb = np.sqrt(s2), np.sqrt(d2)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = 1.0 - dot / (na * nb)
-        return np.where((na == 0.0) | (nb == 0.0), 1.0, out)
 
     first = v.select("_v").first()
     dim = len(first[0]) if first is not None else 0
@@ -746,11 +690,13 @@ def _stitch_graph(
                             "stitch: candidate endpoint missing from the "
                             "vector table (graph/base id mismatch)"
                         )
+                    S, D = Xv[si], Xv[di]
                     yield pd.DataFrame(
                         {
                             "src_id": s,
                             "dst_id": d,
-                            "dist": _pair_dists(Xv[si], Xv[di]),
+                            "dist": np.sqrt(fold_sq_l2(S, D)) if metric == "l2"
+                            else fold_cosine(fold_dot(S, D), fold_dot(S, S), fold_dot(D, D)),
                         }
                     )
 
@@ -779,7 +725,8 @@ def _stitch_graph(
                         {
                             "src_id": pdf["src_id"].to_numpy(dtype=np.int64),
                             "dst_id": pdf["dst_id"].to_numpy(dtype=np.int64),
-                            "dist": _pair_dists(S, D),
+                            "dist": np.sqrt(fold_sq_l2(S, D)) if metric == "l2"
+                            else fold_cosine(fold_dot(S, D), fold_dot(S, S), fold_dot(D, D)),
                         }
                     )
 
@@ -949,7 +896,7 @@ def maxsim_search(
     query batch, BIT-IDENTICAL to the nested higher-order expression
     (transform -> array_max -> fold) it replaced in round 12: token
     dot/norm folds accumulate one dimension at a time in ascending
-    order (the exact ``dot``/``l2_norm`` sequential folds), the
+    order (``fold_dot``, the ``dot``/``l2_norm`` folds' numpy twin), the
     division happens after the ``|a|*|b|`` product exactly as
     ``_cos_sim`` writes it, the per-query-token max is a plain double
     max (``array_max`` over finite values), and the final sum folds
@@ -990,18 +937,11 @@ def maxsim_search(
     qchunk = 64
     bchunk = max(32, 4_000_000 // max(1, qchunk * n_tokens * n_tokens))
 
-    def _sq_norms(M: "np.ndarray") -> "np.ndarray":
-        # sqrt(sum x*x) accumulated per-dim ascending — the l2_norm fold
-        acc = np.zeros(M.shape[:-1], dtype=np.float64)
-        for d0 in range(M.shape[-1]):
-            acc += M[..., d0] * M[..., d0]
-        return np.sqrt(acc)
-
     def kern(batches):
         qids, Q = bq.value
         nq = len(qids)
         qarr = np.array(qids, dtype=object)
-        qn = _sq_norms(Q)  # (nq, T)
+        qn = np.sqrt(fold_dot(Q, Q))  # (nq, T)
         for pdf in batches:
             if len(pdf) == 0 or nq == 0:
                 continue
@@ -1009,7 +949,7 @@ def maxsim_search(
                 len(pdf), n_tokens, d
             )
             ids = pdf["_id"].to_numpy()  # source dtype preserved
-            xn = _sq_norms(X)  # (nb, T)
+            xn = np.sqrt(fold_dot(X, X))  # (nb, T)
             # chunk both axes so the (nb, nq, T, T) accumulator stays
             # bounded regardless of batch/query-set/token size
             for b0 in range(0, len(X), bchunk):
@@ -1018,10 +958,7 @@ def maxsim_search(
                 for q0 in range(0, nq, qchunk):
                     Qc, qnc = Q[q0 : q0 + qchunk], qn[q0 : q0 + qchunk]
                     qidc = qarr[q0 : q0 + qchunk]
-                    # dot fold, one dimension at a time ascending
-                    acc = np.zeros((len(Xc), len(Qc), n_tokens, n_tokens))
-                    for d0 in range(d):
-                        acc += Qc[None, :, :, None, d0] * Xc[:, None, None, :, d0]
+                    acc = fold_dot(Qc[None, :, :, None], Xc[:, None, None])
                     sim = acc / (qnc[None, :, :, None] * xnc[:, None, None, :])
                     best = sim.max(axis=3)  # (nb, nqc, T): max over doc tokens
                     score = np.zeros(best.shape[:2], dtype=np.float64)

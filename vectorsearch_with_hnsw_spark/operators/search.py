@@ -164,12 +164,7 @@ def similarity_search(
         mod = import_module(f".{kern.module}", __package__)
         args = {"dim": dim, "n_probe": n_probe, "metric": metric}
         if index is not None and kern.index:
-            want = getattr(mod, kern.index)
-            if not isinstance(index, want):
-                raise ValueError(
-                    f"method {method!r} needs a {want.__name__} index, "
-                    f"got {type(index).__name__}"
-                )
+            _require(index, getattr(mod, kern.index), method)
             # an artifact is already trained: its probe takes no dim
             kw = {a: args[a] for a in kern.takes if a != "dim"}
             return index.refine_search(base, queries, k=k, **kw)
@@ -177,13 +172,16 @@ def similarity_search(
             _dim(dim, method)
         kw = {a: args[a] for a in kern.takes}
         return getattr(mod, kern.fn)(base, queries, k=k, **kw)
+    from ..index.build import HnswIndex, HnswParams, hnsw_build
+
+    if index is not None:
+        _require(index, HnswIndex, method)
     if method == "hnsw_routed":
         # bounded-probe deployment layout: centroid-routed build (SPANN
         # multi-assignment), ~4.5*sqrt(P) cells probed per query — the
         # sublinear-in-P alternative to probe-all hnsw; pass a routed
         # ``index`` to probe an existing artifact (hash-placed indexes
         # are refused rather than silently misrouted)
-        from ..index.build import HnswParams
         from ..index.routed import hnsw_build_routed, knn_hnsw_routed
 
         if index is None:
@@ -195,7 +193,6 @@ def similarity_search(
         return knn_hnsw_routed(index, queries, k=k, ef=ef)
 
     # hnsw / hnsw_rescored
-    from ..index.build import HnswParams, hnsw_build
     from ..index.query import knn_hnsw, knn_hnsw_rescored
 
     if index is None:
@@ -212,6 +209,15 @@ def similarity_search(
             index, base, queries, k=k, shortlist_k=4 * k, ef=ef or 200, metric=metric
         )
     return knn_hnsw(index, queries, k=k, ef=ef)
+
+
+def _require(index, want: type, method: str) -> None:
+    """Refuse an ``index=`` of the wrong artifact type before any job
+    runs (it would fail mid-plan, or retrain silently)."""
+    if not isinstance(index, want):
+        raise ValueError(
+            f"method {method!r} needs a {want.__name__} index, got {type(index).__name__}"
+        )
 
 
 def _dim(dim: int | None, method: str) -> int:

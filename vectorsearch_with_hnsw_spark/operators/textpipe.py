@@ -927,7 +927,7 @@ def hashed_doc_vectors(docs: DataFrame, dim: int = 64) -> DataFrame:
     aggregation are Column expressions (whole-stage codegen, map-side
     partial agg); the dense-vector ASSEMBLY + normalize run as one
     Arrow batch kernel over the bounded (doc_id, <= dim entries) rows —
-    a numpy scatter + per-dim ascending norm fold, bit-identical to the
+    a numpy scatter + ``fold_dot`` norm (l2_norm's fold), bit-identical to the
     map_from_entries + dim-element_at + l2_normalize expression chain
     it replaced (same sequential fold order; same x/n per-element
     division; same zero-norm pass-through) and ~2x cheaper at sf0.1
@@ -936,6 +936,7 @@ def hashed_doc_vectors(docs: DataFrame, dim: int = 64) -> DataFrame:
     import pandas as pd
 
     from ..functions.text import poly_hash, tokens
+    from ..functions.vector import fold_dot
 
     tok = spread(docs).select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
@@ -962,12 +963,7 @@ def hashed_doc_vectors(docs: DataFrame, dim: int = 64) -> DataFrame:
                         (float(e["val"]) for e in es), dtype=np.float64, count=len(es)
                     )
                     m[r, idx] = vv
-            # per-dim ascending accumulation == the sequential
-            # sum-of-squares fold of functions.vector.l2_norm
-            n2 = np.zeros(len(pdf), dtype=np.float64)
-            for d in range(dim):
-                n2 += m[:, d] * m[:, d]
-            n = np.sqrt(n2)
+            n = np.sqrt(fold_dot(m, m))  # l2_norm's fold
             nz = n > 0.0
             m[nz] = m[nz] / n[nz, None]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "vec": list(m)})
